@@ -134,7 +134,10 @@ object FileStats {
       .collect().toSeq.sortBy(s => (s.path, s.col))
   }
 
-  private val StatsSchema =
+  /** Schema of `_filestats/<id>`: the fields of [[FileStat]], in order,
+    * with the types the old `toDF().write.parquet` output had, so
+    * [[graft.meta.Snapshots.fileStats]] reads both. */
+  private[meta] val StatsSchema =
     org.apache.parquet.schema.MessageTypeParser.parseMessageType(
       """message graft_file_stats {
         |  required binary path (UTF8);
@@ -145,40 +148,6 @@ object FileStats {
         |  required int64 nulls;
         |  required boolean hasStats;
         |}""".stripMargin)
-
-  /** Write the `_filestats/<id>` side table DIRECTLY from the driver
-    * (one plain parquet file) instead of scheduling a 1-task Spark job
-    * for O(files) rows the driver already holds. Schema matches the old
-    * `toDF().write.parquet` output, so [[graft.meta.Snapshots
-    * .fileStats]] reads both. */
-  def writeStatsDriver(dir: java.nio.file.Path, stats: Seq[FileStat]): Unit = {
-    if (java.nio.file.Files.isDirectory(dir)) {
-      val stream = java.nio.file.Files.walk(dir)
-      try stream.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally stream.close()
-    }
-    java.nio.file.Files.createDirectories(dir)
-    val file = dir.resolve("part-00000.parquet")
-    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
-      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
-        new HPath(file.toString), new Configuration()))
-      .withType(StatsSchema)
-      .build()
-    val gf = new org.apache.parquet.example.data.simple.SimpleGroupFactory(
-      StatsSchema)
-    try stats.foreach { s =>
-      val g = gf.newGroup()
-      g.add("path", s.path)
-      g.add("rows", s.rows)
-      g.add("col", s.col)
-      g.add("min", s.min)
-      g.add("max", s.max)
-      g.add("nulls", s.nulls)
-      g.add("hasStats", s.hasStats)
-      w.write(g)
-    } finally w.close()
-  }
 
   /** Prune report: how many data files the range probe actually read. */
   final case class PruneReport(totalFiles: Int, keptFiles: Int) {

@@ -158,10 +158,14 @@ object Snapshots {
     val pm = listener.tasks.sortBy(_._1)
       .map { case (p, n, ms, mem) => PartitionMetric(id, p, n, ms, mem) }
     if (pm.nonEmpty)
-      writeMetricsDriver(Paths.get(root, table, "_metrics", id.toString), pm)
+      SideParquet.replace(spark.sparkContext.hadoopConfiguration,
+        Paths.get(root, table, "_metrics", id.toString), MetricsSchema, pm)
   }
 
-  private val MetricsSchema =
+  /** Schema of `_metrics/<id>`: the fields of [[PartitionMetric]], in
+    * order, with the types the old `toDF().write.parquet` output had, so
+    * [[metrics]] reads both. */
+  private[graft] val MetricsSchema =
     org.apache.parquet.schema.MessageTypeParser.parseMessageType(
       """message graft_partition_metrics {
         |  required int64 snapshotId;
@@ -171,39 +175,10 @@ object Snapshots {
         |  required int64 peakMemoryBytes;
         |}""".stripMargin)
 
-  /** Write the per-partition metrics side table DIRECTLY from the driver
-    * (one plain parquet file via the example writer) instead of
-    * scheduling a 1-task Spark job for O(partitions) rows the driver
-    * already holds — the same driver-side metadata discipline as the
-    * manifest write itself. Schema (names and types) matches the old
-    * `toDF().write.parquet` output, so [[metrics]] reads both. */
-  private def writeMetricsDriver(dir: Path,
-                                 pm: Seq[PartitionMetric]): Unit = {
-    deleteRecursively(dir)
-    Files.createDirectories(dir)
-    val file = dir.resolve("part-00000.parquet")
-    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
-      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
-        new org.apache.hadoop.fs.Path(file.toString),
-        new org.apache.hadoop.conf.Configuration()))
-      .withType(MetricsSchema)
-      .build()
-    val gf = new org.apache.parquet.example.data.simple.SimpleGroupFactory(
-      MetricsSchema)
-    try pm.foreach { m =>
-      val g = gf.newGroup()
-      g.add("snapshotId", m.snapshotId)
-      g.add("partition", m.partition)
-      g.add("rows", m.rows)
-      g.add("latencyMs", m.latencyMs)
-      g.add("peakMemoryBytes", m.peakMemoryBytes)
-      w.write(g)
-    } finally w.close()
-  }
-
-  private def deleteRecursively(dir: Path): Unit =
-    if (Files.isDirectory(dir)) {
-      val stream = Files.walk(dir)
+  /** Delete a file, or a directory with everything below it. */
+  private[meta] def deleteRecursively(p: Path): Unit =
+    if (Files.exists(p)) {
+      val stream = Files.walk(p)
       try stream.sorted(java.util.Comparator.reverseOrder())
         .forEach(p => Files.deleteIfExists(p))
       finally stream.close()
@@ -335,15 +310,20 @@ object Snapshots {
     * COW — a key-clustered table (see [[commitClustered]]) localizes
     * matches to few files. The touched-file list itself is O(files)
     * driver memory, the same order as the manifest listing. */
-  /** `sourceKeysUnique = true` lets a caller that has JUST deduplicated
-    * the source (e.g. [[graft.streaming.StreamOps.upsertBatch]]'s
-    * row_number == 1 winners) skip the duplicate-key guard aggregate —
-    * one Spark job per merge; semantics are unchanged because the guard
-    * can only ever pass for such a source. */
   def merge(spark: SparkSession, root: String, table: String,
             source: DataFrame, keyCols: Seq[String],
-            deleteMatched: Boolean = false,
-            sourceKeysUnique: Boolean = false): Manifest = {
+            deleteMatched: Boolean = false): Manifest =
+    merge(spark, root, table, source, keyCols, deleteMatched, sourceKeysUnique = false)
+
+  /** `sourceKeysUnique = true` lets an engine caller that has JUST
+    * deduplicated the source (e.g. [[graft.streaming.StreamOps.upsertBatch]]'s
+    * row_number == 1 winners) skip the duplicate-key guard aggregate —
+    * one Spark job per merge; semantics are unchanged because the guard
+    * can only ever pass for such a source. Not public: an unchecked
+    * claim would silently insert several rows per duplicated key. */
+  private[graft] def merge(spark: SparkSession, root: String, table: String,
+            source: DataFrame, keyCols: Seq[String],
+            deleteMatched: Boolean, sourceKeysUnique: Boolean): Manifest = {
     import org.apache.spark.sql.functions.{coalesce, col, count, input_file_name, lit, sum}
     require(keyCols.nonEmpty, "merge: keyCols must be non-empty")
     val src = latest(root, table).getOrElse(throw new IllegalStateException(
@@ -448,15 +428,8 @@ object Snapshots {
       // of the retracted id are unreferenced and harmless.
       Files.deleteIfExists(
         manifestDir(root, table).resolve(s"${c.snapshotId}.json"))
-      for (side <- Seq("_metrics", "_filestats")) {
-        val d = Paths.get(root, table, side, c.snapshotId.toString)
-        if (Files.isDirectory(d)) {
-          val stream = Files.walk(d)
-          try stream.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => Files.deleteIfExists(p))
-          finally stream.close()
-        }
-      }
+      for (side <- Seq("_metrics", "_filestats"))
+        deleteRecursively(Paths.get(root, table, side, c.snapshotId.toString))
       throw new IllegalStateException(
         s"compaction changed row count: ${src.rows} -> ${c.rows}; manifest retracted")
     }
@@ -479,24 +452,9 @@ object Snapshots {
     expired.foreach { m =>
       Files.deleteIfExists(manifestDir(root, table).resolve(s"${m.snapshotId}.json"))
       // metadata side tables of the expired id (metrics, file stats)
-      for (side <- Seq("_metrics", "_filestats")) {
-        val d = Paths.get(root, table, side, m.snapshotId.toString)
-        if (Files.isDirectory(d)) {
-          val stream = Files.walk(d)
-          try stream.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => Files.deleteIfExists(p))
-          finally stream.close()
-        }
-      }
-      if (!live.contains(m.dataPath)) {
-        val d = Paths.get(m.dataPath)
-        if (Files.isDirectory(d)) {
-          val stream = Files.walk(d)
-          try stream.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => Files.deleteIfExists(p))
-          finally stream.close()
-        }
-      }
+      for (side <- Seq("_metrics", "_filestats"))
+        deleteRecursively(Paths.get(root, table, side, m.snapshotId.toString))
+      if (!live.contains(m.dataPath)) deleteRecursively(Paths.get(m.dataPath))
     }
     expired
   }
@@ -528,8 +486,8 @@ object Snapshots {
       s"indexStats: no committed snapshot $id for $table"))
     val stats = FileStats.collect(spark, m.dataPath, statCols)
     if (stats.nonEmpty)
-      FileStats.writeStatsDriver(
-        Paths.get(root, table, "_filestats", id.toString), stats)
+      SideParquet.replace(spark.sparkContext.hadoopConfiguration,
+        Paths.get(root, table, "_filestats", id.toString), FileStats.StatsSchema, stats)
     stats
   }
 

@@ -40,6 +40,23 @@ object TileStencil {
 
   final case class Cell(gx: Long, gy: Long, v: Int)
 
+  /** Halo replication: the tile keys `(tx << 32 | ty)` a cell at
+    * `(gx, gy)` serves — its own tile plus every neighboring tile whose
+    * core lies within `r` cells of it (`r < t`, so only the 3x3 tile
+    * neighborhood qualifies), never leaving the tile lattice
+    * `[0, maxTx] x [0, maxTy]`. */
+  def haloTiles(gx: Long, gy: Long, r: Int, t: Int,
+                maxTx: Long, maxTy: Long): Seq[Long] = {
+    val tx = gx / t; val ty = gy / t
+    val ox = gx % t; val oy = gy % t
+    val dxs = Seq(0) ++ (if (ox < r) Seq(-1) else Nil) ++ (if (ox >= t - r) Seq(1) else Nil)
+    val dys = Seq(0) ++ (if (oy < r) Seq(-1) else Nil) ++ (if (oy >= t - r) Seq(1) else Nil)
+    for {
+      dx <- dxs if tx + dx >= 0 && tx + dx <= maxTx
+      dy <- dys if ty + dy >= 0 && ty + dy <= maxTy
+    } yield ((tx + dx) << 32) | (ty + dy)
+  }
+
   /** Apply a kernel to a sparse cell table. Input/output columns:
     * (gx: long, gy: long, v: int-compatible). */
   def apply(cells: DataFrame, kernel: Kernel, bounds: Bounds,
@@ -53,20 +70,10 @@ object TileStencil {
     val ds = cells.select(col("gx").cast("long"), col("gy").cast("long"),
       col("v").cast("int")).as[Cell]
 
-    // Halo replication: a cell in tile (tx,ty) also serves tiles whose
-    // core is within r. dxs/dys in {-1,0,1} limited by position in tile;
-    // replication never leaves the bounded tile lattice.
     val maxTx = (bounds.w - 1) / t
     val maxTy = (bounds.h - 1) / t
     val replicated: Dataset[(Long, Cell)] = ds.flatMap { c =>
-      val tx = c.gx / t; val ty = c.gy / t
-      val ox = c.gx % t; val oy = c.gy % t
-      val dxs = Seq(0) ++ (if (ox < r) Seq(-1) else Nil) ++ (if (ox >= t - r) Seq(1) else Nil)
-      val dys = Seq(0) ++ (if (oy < r) Seq(-1) else Nil) ++ (if (oy >= t - r) Seq(1) else Nil)
-      for {
-        dx <- dxs if tx + dx >= 0 && tx + dx <= maxTx
-        dy <- dys if ty + dy >= 0 && ty + dy <= maxTy
-      } yield (((tx + dx) << 32) | (ty + dy), c)
+      haloTiles(c.gx, c.gy, r, t, maxTx, maxTy).map(k => (k, c))
     }
 
     // keys are (tx << 32 | ty) and (gx << 32 | gy): collision-free for

@@ -249,7 +249,7 @@ object StreamOps {
         // winners() keeps exactly row_number == 1 per key, so the
         // duplicate-key guard can be skipped (one job per micro-batch)
         graft.meta.Snapshots.merge(spark, root, table, win, keyCols,
-          sourceKeysUnique = true)
+          deleteMatched = false, sourceKeysUnique = true)
     }
   }
 

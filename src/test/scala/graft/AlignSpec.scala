@@ -1,6 +1,7 @@
 package graft
 
 import graft.align.{Align3d, Mt19937_64}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 class AlignSpec extends SparkSpec {
@@ -157,5 +158,116 @@ class AlignSpec extends SparkSpec {
     val (res, _) = Align3d.run(spark, pts, pts, cfg)
     assert(res.bestDx == 0 && res.bestDy == 0)
     assert(res.tz == 0.0 && res.rmsMeters < 0.1)
+  }
+
+  /** A 300 x 300 m scene at 1 pt/m^2 (so the 1 m grids span 3 x 3
+    * offset-search tiles): curved terrain, two boxes, and a void disc
+    * in the target's lower-left corner. The target is shifted by
+    * (sx, sy, sz) plus xy jitter. */
+  private def tiledScene(sx: Double, sy: Double, sz: Double): (DataFrame, DataFrame) = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val pts = for (_ <- 0 until 90000) yield {
+      val x = rnd.nextDouble() * 300.0; val y = rnd.nextDouble() * 300.0
+      val inBox1 = x > 60 && x < 95 && y > 40 && y < 70
+      val inBox2 = x > 180 && x < 240 && y > 150 && y < 200
+      val terrain = 3.0 * math.sin(x * 0.13) + 2.0 * math.cos(y * 0.09 + x * 0.02)
+      (x, y, 6.0 + terrain + (if (inBox1) 6.0 else if (inBox2) 9.0 else 0.0))
+    }
+    val tgt = pts.map { case (x, y, z) =>
+      (x + sx + (rnd.nextDouble() - 0.5) * 0.1, y + sy + (rnd.nextDouble() - 0.5) * 0.1, z + sz)
+    }.filter { case (x, y, _) => math.hypot(x - 40, y - 40) > 30 }
+    (pts.toDF("x", "y", "z"), tgt.toDF("x", "y", "z"))
+  }
+
+  /** Per offset, the differences of every valid probe in sid order: a
+    * probe is valid when both its reference and its target cell exist. */
+  private def probeDiffs(st: Align3d.Staged, cfg: Align3d.Config): Seq[((Int, Int), Array[Int])] = {
+    def cells(df: DataFrame, v: String) = df.select("gx", "gy", v).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
+    val ref = cells(st.refDsm, "rv")
+    val tgt = cells(st.tgtDsm, "tv")
+    val smp = st.samples.collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
+      .sortBy(_._1)
+    val m = math.ceil(cfg.maxT / cfg.gsd).toInt
+    for (odx <- -m to m; ody <- -m to m) yield (odx, ody) -> smp.flatMap { case (_, x, y) =>
+      for (r <- ref.get((x, y)); t <- tgt.get((x + odx, y + ody))) yield r - t
+    }
+  }
+
+  /** Brute-force reference of [[Align3d.offsetStats]] over collected rows: per
+    * offset, the first numSamples valid probes in sid order, then the
+    * median, the robust RMS and the completeness of their differences. */
+  private def bruteStats(diffs: Seq[((Int, Int), Array[Int])], n: Int)
+      : Seq[(Int, Int, Long, Long, Long, Double)] = {
+    val oneMeterRaw = math.floor(1.0 / graft.core.Quant.Scale)
+    for (((odx, ody), all) <- diffs if all.length >= n) yield {
+      val d = all.take(n).sorted
+      val med = d(n / 2)
+      val dev = d.map(x => math.abs(x - med)).sorted
+      (odx, ody, n.toLong, med.toLong, dev(math.floor(n * 0.67).toInt).toLong,
+        dev.count(_ < oneMeterRaw).toDouble / n)
+    }
+  }
+
+  private def engineStats(st: Align3d.Staged, cfg: Align3d.Config) =
+    Align3d.offsetStats(st, cfg).collect().toSeq
+      .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getLong(3), r.getLong(4),
+        r.getDouble(5)))
+      .sortBy(r => (r._1, r._2))
+
+  test("offsetStats == brute-force first-N reference across tiles (1 and 7 partitions)") {
+    val (ref, tgt) = tiledScene(3.0, -2.0, 0.5)
+    val cfg = Align3d.Config(gsd = 1.0, maxT = 4.0, numSamples = 2000)
+    val st = Align3d.stage(spark, ref, tgt, cfg)
+    assert(st.grid.w > 256 && st.grid.h > 256, "scene must span 3 x 3 tiles")
+    try {
+      val want = bruteStats(probeDiffs(st, cfg), cfg.numSamples)
+      assert(want.size == 81, "every offset passes the gate at numSamples = 2000")
+      val key = "spark.sql.shuffle.partitions"
+      val prev = spark.conf.get(key)
+      try for (parts <- Seq("1", "7")) {
+        spark.conf.set(key, parts)
+        assert(engineStats(st, cfg) == want, s"at $parts shuffle partitions")
+      } finally spark.conf.set(key, prev)
+      // the schema the stats table has always had (the DuckDB dual reads it)
+      assert(Align3d.offsetStats(st, cfg).schema.map(f => f.name -> f.dataType.simpleString) ==
+        Seq("odx" -> "int", "ody" -> "int", "n" -> "bigint", "med" -> "bigint",
+          "rms" -> "bigint", "complete" -> "double"))
+    } finally { st.refDsm.unpersist(); st.tgtDsm.unpersist() }
+  }
+
+  test("offsetStats drops offsets that miss the numSamples gate; maxT 10 (441 offsets)") {
+    val (ref, tgt) = tiledScene(3.0, -2.0, 0.5)
+    val cfg = Align3d.Config(gsd = 1.0, maxT = 10.0, numSamples = 500, sampleFactor = 4)
+    val st = Align3d.stage(spark, ref, tgt, cfg)
+    try {
+      val diffs = probeDiffs(st, cfg)
+      val want = bruteStats(diffs, cfg.numSamples)
+      assert(want.size == 441)
+      assert(engineStats(st, cfg) == want)
+      // a cap one above the smallest valid-probe count over all 2000
+      // samples makes that (border) offset fail the gate
+      val low = diffs.map(_._2.length).min
+      val failing = diffs.collect { case (o, d) if d.length == low => o }.toSet
+      assert(failing.forall { case (dx, dy) => math.abs(dx) == 10 || math.abs(dy) == 10 },
+        s"failing offsets $failing are not on the search border")
+      val gated = cfg.copy(numSamples = low + 1)
+      val got = engineStats(st, gated)
+      assert(got == bruteStats(diffs, gated.numSamples))
+      assert(got.size == 441 - failing.size)
+      assert(got.forall(r => !failing.contains((r._1, r._2))))
+    } finally { st.refDsm.unpersist(); st.tgtDsm.unpersist() }
+  }
+
+  test("align at the reference-default Config recovers an injected shift") {
+    val (sx, sy, sz) = (4.0, -3.0, 0.6)
+    val (ref, tgt) = tiledScene(sx, sy, sz)
+    val cfg = Align3d.Config()
+    val (res, _) = Align3d.run(spark, ref, tgt, cfg)
+    assert(math.abs(res.tx - (-sx)) <= cfg.gsd, s"tx=${res.tx}")
+    assert(math.abs(res.ty - (-sy)) <= cfg.gsd, s"ty=${res.ty}")
+    assert(math.abs(res.tz - (-sz)) <= 0.3, s"tz=${res.tz}")
+    assert(res.nValid == cfg.numSamples && res.completeness > 0.5)
   }
 }

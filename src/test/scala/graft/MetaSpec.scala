@@ -138,7 +138,7 @@ class MetaSpec extends SparkSpec {
       root, "mgq", "v1")
     val src = Seq((2L, -1L), (7L, -2L), (100L, 3L)).toDF("k", "v")
     val m1 = Snapshots.merge(spark, root, "mgq", src, Seq("k"),
-      sourceKeysUnique = true)
+      deleteMatched = false, sourceKeysUnique = true)
     assert(m1.rows == 21)
     val got = Snapshots.read(spark, m1).as[(Long, Long)].collect().toMap
     assert(got(2L) == -1L && got(7L) == -2L && got(100L) == 3L)
@@ -224,6 +224,31 @@ class MetaSpec extends SparkSpec {
     val all = Snapshots.metrics(spark, root, "wm")
     assert(all.select("snapshotId").distinct().count() == 2)
     assert(all.count() == 5)
+  }
+
+  test("side-table writes are atomic: a row source failing mid-write keeps the old file") {
+    val root = tmpRoot
+    val m = Snapshots.commit(spark.range(400).repartition(4).toDF("id"), root, "wa", "l")
+    def read() = Snapshots.metrics(spark, root, "wa").collect().map(_.toString).sorted.toSeq
+    val before = read()
+    assert(before.size == 4)
+    val dir = java.nio.file.Paths.get(root, "wa", "_metrics", m.snapshotId.toString)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val row = Snapshots.PartitionMetric(m.snapshotId, 0, 1L, 2L, 3L)
+    val failing = LazyList.tabulate(1000) { i =>
+      if (i == 600) throw new IllegalStateException("row source failed") else row
+    }
+    val e = intercept[IllegalStateException](
+      graft.meta.SideParquet.replace(conf, dir, Snapshots.MetricsSchema, failing))
+    assert(e.getMessage == "row source failed")
+    assert(read() == before)
+    def names() = new java.io.File(dir.toString).list().toSeq.sorted
+    assert(names().forall(n => n == "part-00000.parquet" || n == ".part-00000.parquet.crc"),
+      s"temp files left behind: ${names()}")
+    // a complete write replaces the file in place
+    graft.meta.SideParquet.replace(conf, dir, Snapshots.MetricsSchema, Seq(row, row))
+    assert(read() == Seq(row, row).map(r => org.apache.spark.sql.Row.fromTuple(r).toString))
+    assert(names().contains("part-00000.parquet"))
   }
 
   test("snapshot metrics cover exactly the files the write produced") {
