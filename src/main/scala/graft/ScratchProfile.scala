@@ -32,6 +32,8 @@ object ScratchProfile {
       val t0 = System.nanoTime()
       val (j0, s0) = (jobs.get(), stages.get())
       val n = f
+      // job/stage counts come from the async listener: drain it first
+      org.apache.spark.sql.graftx.Bridge.drainListenerBus(spark.sparkContext)
       println(f"$name%-28s ${(System.nanoTime() - t0) / 1e9}%8.3f s  (n=$n, " +
         s"jobs=${jobs.get() - j0}, stages=${stages.get() - s0})")
     }

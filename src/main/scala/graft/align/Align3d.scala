@@ -2,7 +2,7 @@ package graft.align
 
 import graft.core.Quant
 import graft.pyramid.FillVoids
-import graft.stencil.{Kernels, TileStencil}
+import graft.stencil.{DenseGrid, Kernels, TileStencil}
 import graft.stencil.TileStencil.Bounds
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -91,16 +91,27 @@ object Align3d {
       completeness: Double, nValid: Long, bestDx: Int, bestDy: Int)
 
   /** Quantized DSM over a local grid derived from the point bounds. */
-  def prepGrid(pts: DataFrame, ref: GridRef, cfg: Config): DataFrame = {
+  def prepGrid(pts: DataFrame, ref: GridRef, cfg: Config): DataFrame =
+    prepGrid(pts, ref, cfg, DenseGrid.Threshold)
+
+  /** [[prepGrid]] with the strategy gate `denseCells` (0 forces the tiled
+    * path): below it, fill and edge filter run as one task over the
+    * gridding aggregate. */
+  private[graft] def prepGrid(pts: DataFrame, ref: GridRef, cfg: Config,
+                              denseCells: Long): DataFrame = {
     val cells = pts
       .withColumn("gx", floor((col("x") - lit(ref.x0)) / lit(ref.gsd)).cast("long"))
       .withColumn("gy", floor((col("y") - lit(ref.y0)) / lit(ref.gsd)).cast("long"))
       .filter(col("gx") >= 0 && col("gx") < ref.w && col("gy") >= 0 && col("gy") < ref.h)
       .withColumn("qz", Quant.q(col("z")))
       .groupBy("gx", "gy").agg(max("qz").as("v"))
-    val filled = FillVoids(cells, Bounds(ref.w, ref.h), noSmoothing = true, maxLevel = 2)
-    val dzRaw = math.max(1, math.floor(cfg.maxDzMeters / Quant.Scale).toInt)
-    TileStencil(filled, Kernels.EdgeFilter(dzRaw), Bounds(ref.w, ref.h))
+    val bounds = Bounds(ref.w, ref.h)
+    val edgeK = Kernels.EdgeFilter(math.max(1, math.floor(cfg.maxDzMeters / Quant.Scale).toInt))
+    if (DenseGrid.fits(bounds, denseCells))
+      DenseGrid.grid(Seq(cells), bounds)(_(0).fill(noSmoothing = true, maxLevel = 2).stencil(edgeK))
+    else
+      TileStencil(FillVoids(cells, bounds, noSmoothing = true, maxLevel = 2,
+        denseThreshold = denseCells), edgeK, bounds)
   }
 
   def gridFor(pts: DataFrame, cfg: Config): GridRef = {

@@ -2,9 +2,9 @@ package graft.api
 
 import graft.cc.{ConnectedComponents, FillObjectBounds}
 import graft.pyramid.FillVoids
-import graft.stencil.{Kernels, TileStencil}
+import graft.stencil.{DenseGrid, Kernels, TileStencil}
 import graft.stencil.TileStencil.Bounds
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
 /**
@@ -50,14 +50,14 @@ object ClassifyGround {
       // tiny Spark stages per iteration cost more than the raster;
       // larger rasters take the tiled distributed path. Both paths are
       // asserted equal in DtmSpec.
-      denseThreshold: Long = 1L << 20)
+      denseThreshold: Long = DenseGrid.Threshold)
 
   final case class Result(dtm: DataFrame, voidMask: DataFrame)
 
   def run(minGrid: DataFrame /* gx, gy, v */,
           solidDsm: DataFrame /* gx, gy, v — DSM with tree cells voided */,
           bounds: Bounds, cfg: Config): Result =
-    if (bounds.w.toLong * bounds.h <= cfg.denseThreshold)
+    if (DenseGrid.fits(bounds, cfg.denseThreshold))
       runDense(minGrid, solidDsm, bounds, cfg)
     else runTiled(minGrid, solidDsm, bounds, cfg)
 
@@ -142,191 +142,93 @@ object ClassifyGround {
 
   // ---- dense single-task strategy --------------------------------------
 
-  private type LMap = java.util.HashMap[java.lang.Long, java.lang.Integer]
-  @inline private def key(x: Long, y: Long): Long = (x << 32) | y
-
-  /** The full loop over local maps, reusing the SAME kernel objects and
-    * the same per-object fill as the tiled path. */
-  private[api] def denseLoop(min: LMap, solid: LMap, w: Int, h: Int,
-                             cfg: Config): (LMap, java.util.HashSet[java.lang.Long]) = {
+  /** The full loop over one in-memory raster, with the SAME kernel
+    * objects and the same per-object fill as the tiled path. Returns the
+    * final DTM and the void mask (lattice indices). */
+  private def denseLoop(min: DenseGrid, solid: DenseGrid,
+                      cfg: Config): (DenseGrid, java.util.BitSet) = {
     val dz = cfg.dzRaw
-    var dtm = FillVoids.dense(min, w, h, noSmoothing = true)
-    val voidMask = new java.util.HashSet[java.lang.Long]()
-    def get(m: LMap)(x: Int, y: Int): Int = {
-      val v = m.get(key(x, y)); if (v == null) 0 else v.intValue()
-    }
-    def applyKernel(m: LMap, k: graft.stencil.TileStencil.Kernel): LMap = {
-      val out = new LMap()
-      val it = m.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        val x = (e.getKey >>> 32).toInt; val y = (e.getKey & 0xFFFFFFFFL).toInt
-        val nv = k(get(m), x, y, w, h)
-        if (nv != 0) out.put(e.getKey, nv)
-      }
-      out
-    }
+    val w = min.w; val h = min.h
+    var dtm = min.fill(noSmoothing = true)
+    val voidMask = new java.util.BitSet(w * h)
     var converged = false
     var prevMask = 0
     for (k <- 0 until cfg.iterations if !converged) {
-      val seeds = applyKernel(dtm, Kernels.RefBoundaryGradient(dz, cfg.dhBins))
-      var packed = new LMap()
-      val dIt = dtm.entrySet().iterator()
-      while (dIt.hasNext) {
-        val e = dIt.next()
-        val lbl = if (seeds.containsKey(e.getKey)) 1 else 0
-        packed.put(e.getKey, lbl * 131072 + e.getValue.intValue())
-      }
+      val seeds = dtm.stencil(Kernels.RefBoundaryGradient(dz, cfg.dhBins))
+      var packed = dtm.mapCells((i, v) => (if (seeds.has(i)) 131072 else 0) + v)
       for (_ <- 0 until cfg.dhBins) {
-        packed = applyKernel(packed, Kernels.RefExtendMark(dz))
-        packed = applyKernel(packed, Kernels.RefExtendResolve(dz))
+        packed = packed.stencil(Kernels.RefExtendMark(dz))
+          .stencil(Kernels.RefExtendResolve(dz))
       }
-      // local CCL with dz + canonical chunk crop
-      val objCells = new java.util.HashMap[java.lang.Long, java.lang.Integer]()
-      val pIt = packed.entrySet().iterator()
-      while (pIt.hasNext) {
-        val e = pIt.next()
-        if ((e.getValue.intValue() >>> 17) == 1)
-          objCells.put(e.getKey, e.getValue.intValue() & 0x1FFFF)
-      }
-      val cellIds = new java.util.ArrayList[java.lang.Long](objCells.keySet())
-      java.util.Collections.sort(cellIds,
-        java.util.Comparator.comparingLong((kk: java.lang.Long) =>
-          (kk & 0xFFFFFFFFL) * w + (kk >>> 32)))
-      val seen = new java.util.HashSet[java.lang.Long]()
-      val objects = scala.collection.mutable.ArrayBuffer[Array[Long]]()
-      val cIt = cellIds.iterator()
-      while (cIt.hasNext) {
-        val start = cIt.next()
-        if (!seen.contains(start)) {
-          val comp = scala.collection.mutable.ArrayBuffer[Long]()
-          val q = new java.util.ArrayDeque[java.lang.Long]()
-          q.add(start); seen.add(start)
-          while (!q.isEmpty) {
-            val cur = q.poll()
-            comp += cur.longValue()
-            val cx = cur >>> 32; val cy = cur & 0xFFFFFFFFL
-            val cv = objCells.get(cur).intValue()
-            var dx = -1
-            while (dx <= 1) {
-              var dy = -1
-              while (dy <= 1) {
-                if (dx != 0 || dy != 0) {
-                  val nk: java.lang.Long = key(cx + dx, cy + dy)
-                  val nv = objCells.get(nk)
-                  if (nv != null && !seen.contains(nk) &&
-                    math.abs(nv.intValue() - cv) <= dz) {
-                    seen.add(nk); q.add(nk)
-                  }
-                }
-                dy += 1
-              }
-              dx += 1
-            }
-          }
-          comp.sortInPlaceBy(kk => (kk & 0xFFFFFFFFL) * w + (kk >>> 32))
-          objects ++= comp.grouped(math.min(cfg.maxCount, Int.MaxValue).toInt).map(_.toArray)
+      // dz-connected objects, chunk-capped in cell-id order
+      val objCells = new DenseGrid(w, h)
+      packed.foreach((i, v) => if ((v >>> 17) == 1) objCells.set(i, v & 0x1FFFF))
+      val label = objCells.labels(Some(dz), Some(cfg.maxCount))
+      // per-object bounding boxes, keyed by label (a lattice index)
+      val bbox = new java.util.HashMap[Integer, Array[Int]]()
+      objCells.foreach { (i, _) =>
+        val x = i % w; val y = i / w
+        val b = bbox.get(label(i))
+        if (b == null) bbox.put(label(i), Array(x, x, y, y))
+        else {
+          b(0) = math.min(b(0), x); b(1) = math.max(b(1), x)
+          b(2) = math.min(b(2), y); b(3) = math.max(b(3), y)
         }
       }
       // per-object fill via the shared fillOne
       val m = cfg.dhBins + 1
-      for (obj <- objects) {
-        var xmin = Long.MaxValue; var xmax = Long.MinValue
-        var ymin = Long.MaxValue; var ymax = Long.MinValue
-        val objSet = new java.util.HashSet[java.lang.Long]()
-        obj.foreach { kk =>
-          objSet.add(kk)
-          val x = kk >>> 32; val y = kk & 0xFFFFFFFFL
-          if (x < xmin) xmin = x
-          if (x > xmax) xmax = x
-          if (y < ymin) ymin = y
-          if (y > ymax) ymax = y
-        }
+      val bIt = bbox.entrySet().iterator()
+      while (bIt.hasNext) {
+        val e = bIt.next()
+        val lbl = e.getKey.intValue(); val b = e.getValue
         val cells = scala.collection.mutable.ArrayBuffer[FillObjectBounds.CellIn]()
-        var y = math.max(0L, ymin - m)
-        val yMax = math.min(ymax + m, h - 1L)
-        val xMin = math.max(0L, xmin - m)
-        val xMax = math.min(xmax + m, w - 1L)
-        while (y <= yMax) {
-          var x = xMin
-          while (x <= xMax) {
-            val v = dtm.get(key(x, y))
-            if (v != null)
-              cells += FillObjectBounds.CellIn(0L, x, y, v.intValue(),
-                objSet.contains(key(x, y)))
-            x += 1
-          }
-          y += 1
+        for (y <- math.max(0, b(2) - m) to math.min(b(3) + m, h - 1);
+             x <- math.max(0, b(0) - m) to math.min(b(1) + m, w - 1)) {
+          val i = dtm.index(x, y)
+          if (dtm.has(i))
+            cells += FillObjectBounds.CellIn(0L, x, y, dtm(i), label(i) == lbl)
         }
         FillObjectBounds.fillOne(cells.toArray, w, h, cfg.dhBins)
-          .foreach { case (x, yy) => voidMask.add(key(x, yy)) }
+          .foreach { case (x, y) => voidMask.set(dtm.index(x.toInt, y.toInt)) }
       }
-      converged = voidMask.size == prevMask && k < cfg.iterations - 1
-      prevMask = voidMask.size
-      val ground = new LMap(dtm)
-      val vIt = voidMask.iterator()
-      while (vIt.hasNext) ground.remove(vIt.next())
-      dtm = FillVoids.dense(ground, w, h,
-        noSmoothing = !converged && k < cfg.iterations - 1)
+      converged = voidMask.cardinality() == prevMask && k < cfg.iterations - 1
+      prevMask = voidMask.cardinality()
+      dtm = dtm.without(voidMask)
+        .fill(noSmoothing = !converged && k < cfg.iterations - 1)
     }
     // restore, spikes, final fill — identical order to the tiled path
-    val rIt = dtm.entrySet().iterator()
-    val restored = scala.collection.mutable.ArrayBuffer[(java.lang.Long, Int)]()
-    while (rIt.hasNext) {
-      val e = rIt.next()
-      val sv = solid.get(e.getKey)
-      if (sv != null && e.getValue.intValue() >= sv.intValue())
-        restored += ((e.getKey, sv.intValue()))
+    dtm.foreach { (i, v) =>
+      if (solid.has(i) && v >= solid(i)) { dtm.set(i, solid(i)); voidMask.clear(i) }
     }
-    restored.foreach { case (kk, sv) => dtm.put(kk, sv); voidMask.remove(kk) }
-    val despiked = applyKernel(dtm, Kernels.SpikeFilter(dz))
-    val sIt = dtm.keySet().iterator()
-    val spikes = scala.collection.mutable.ArrayBuffer[java.lang.Long]()
-    while (sIt.hasNext) {
-      val kk = sIt.next()
-      if (!despiked.containsKey(kk)) spikes += kk
+    val despiked = dtm.stencil(Kernels.SpikeFilter(dz))
+    dtm.foreach((i, _) => if (!despiked.has(i)) voidMask.set(i))
+    (dtm.without(voidMask).fill(noSmoothing = false), voidMask)
+  }
+
+  /** [[denseLoop]] as `(t, gx, gy, v)` rows: the DTM (`t = 0`) and the
+    * void mask (`t = 1`, `v = 0`); nothing for an empty MIN. */
+  private[graft] def denseRows(min: DenseGrid, solid: DenseGrid,
+                               cfg: Config): Iterator[DenseGrid.Tagged] =
+    if (min.isEmpty) Iterator.empty
+    else {
+      val (dtm, mask) = denseLoop(min, solid, cfg)
+      val maskRows = Iterator.iterate(mask.nextSetBit(0))(i => mask.nextSetBit(i + 1))
+        .takeWhile(_ >= 0)
+        .map(i => DenseGrid.Tagged(1, (i % min.w).toLong, (i / min.w).toLong, 0))
+      dtm.cells.map(c => DenseGrid.Tagged(0, c.gx, c.gy, c.v)) ++ maskRows
     }
-    spikes.foreach(voidMask.add)
-    val finalGround = new LMap(dtm)
-    val fIt = voidMask.iterator()
-    while (fIt.hasNext) finalGround.remove(fIt.next())
-    (FillVoids.dense(finalGround, w, h, noSmoothing = false), voidMask)
+
+  /** Splits pinned [[denseRows]] output into the [[Result]]. */
+  private[graft] def denseResult(rows: DataFrame): Result = {
+    val pinned = rows.localCheckpoint()
+    Result(
+      pinned.filter(col("t") === 0).select(col("gx"), col("gy"), col("v")),
+      pinned.filter(col("t") === 1).select(col("gx"), col("gy")))
   }
 
   private def runDense(minGrid: DataFrame, solidDsm: DataFrame,
-                       bounds: Bounds, cfg: Config): Result = {
-    val spark = minGrid.sparkSession
-    import spark.implicits._
-    val tagged = minGrid.select(lit(0).as("t"), col("gx").cast("long"),
-        col("gy").cast("long"), col("v").cast("int"))
-      .unionByName(solidDsm.select(lit(1).as("t"), col("gx").cast("long"),
-        col("gy").cast("long"), col("v").cast("int")))
-      .as[(Int, Long, Long, Int)]
-    val w = bounds.w; val h = bounds.h
-    val out = tagged.repartition(1).mapPartitions { it =>
-      val min = new LMap(); val solid = new LMap()
-      it.foreach { case (t, x, y, v) =>
-        (if (t == 0) min else solid).put(key(x, y), v)
-      }
-      if (min.isEmpty) Iterator.empty
-      else {
-        val (dtm, mask) = denseLoop(min, solid, w, h, cfg)
-        val o = Array.newBuilder[(Int, Long, Long, Int)]
-        val dIt = dtm.entrySet().iterator()
-        while (dIt.hasNext) {
-          val e = dIt.next()
-          o += ((0, e.getKey >>> 32, e.getKey & 0xFFFFFFFFL, e.getValue.intValue()))
-        }
-        val mIt = mask.iterator()
-        while (mIt.hasNext) {
-          val kk = mIt.next()
-          o += ((1, kk >>> 32, kk & 0xFFFFFFFFL, 0))
-        }
-        o.result().iterator
-      }
-    }.toDF("t", "gx", "gy", "v").localCheckpoint()
-    Result(
-      out.filter(col("t") === 0).select(col("gx"), col("gy"), col("v")),
-      out.filter(col("t") === 1).select(col("gx"), col("gy")))
-  }
+                       bounds: Bounds, cfg: Config): Result =
+    denseResult(DenseGrid.task(Seq(minGrid, solidDsm), bounds) { g =>
+      denseRows(g(0), g(1), cfg)
+    }(Encoders.product[DenseGrid.Tagged]).toDF())
 }

@@ -1,7 +1,7 @@
 package graft.api
 
 import graft.cc.{ConnectedComponents, ScanlineFill}
-import graft.stencil.{Kernels, TileStencil}
+import graft.stencil.{DenseGrid, Kernels, TileStencil}
 import graft.stencil.TileStencil.Bounds
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -27,7 +27,7 @@ object GroundObjects {
       // seed + relaxation chain in ONE task (the CCL-family dense
       // discipline); larger grids take the tiled stencil passes. Both
       // paths asserted equal in GroundObjectsSpec.
-      denseThreshold: Long = 1L << 20)
+      denseThreshold: Long = DenseGrid.Threshold)
 
   /** Returns (gx, gy, label) for detected object cells. */
   def detect(dsm: DataFrame, bounds: Bounds, cfg: Config = Config()): DataFrame = {
@@ -37,7 +37,7 @@ object GroundObjects {
     val dsmP = dsm.select(col("gx").cast("long"), col("gy").cast("long"),
       col("v").cast("int")).localCheckpoint(eager = true)
     val objCells =
-      if (bounds.w.toLong * bounds.h <= cfg.denseThreshold)
+      if (DenseGrid.fits(bounds, cfg.denseThreshold))
         relaxDense(dsmP, bounds, cfg)
       else relaxTiled(dsmP, bounds, cfg)
     // G2 components constrained by dz, chunk-capped at maxCount cells
@@ -78,62 +78,24 @@ object GroundObjects {
   }
 
   /** Dense single-task strategy: the SAME kernel objects evaluated over
-    * the whole gate-bounded grid in one executor task — the seed pass,
-    * the packing, and every mark/resolve round, with TileStencil's exact
-    * per-pass contract (non-void cells evaluated, nv == 0 dropped), so
-    * the output equals the tiled chain for any tiling (kernel output
-    * depends only on cell values). ~1 job instead of 7 stencil shuffles
-    * + 3 checkpoints + the packing join. */
+    * the whole gate-bounded grid in one executor task (`DenseGrid`, with
+    * TileStencil's exact per-pass contract) — the seed pass, the packing,
+    * and every mark/resolve round — so the output equals the tiled chain
+    * for any tiling. One job instead of 7 stencil shuffles + 3
+    * checkpoints + the packing join. */
   private def relaxDense(dsm: DataFrame, bounds: Bounds, cfg: Config): DataFrame = {
-    val spark = dsm.sparkSession
-    import spark.implicits._
-    val w = bounds.w
-    val h = bounds.h
     val seedK = Kernels.BoundaryGradient(cfg.dzRaw, cfg.dh)
     val markK = Kernels.ExtendMark(cfg.dzRaw)
     val resolveK = Kernels.ExtendResolve()
     val rounds = cfg.extensionRounds
-    dsm.as[(Long, Long, Int)]
-      .repartition(1).mapPartitions { it =>
-        type M = java.util.HashMap[java.lang.Long, java.lang.Integer]
-        val zero: java.lang.Integer = 0
-        def pass(m: M, k: TileStencil.Kernel): M = {
-          def get(x: Int, y: Int): Int =
-            m.getOrDefault((x.toLong << 32) | y.toLong, zero).intValue()
-          val out = new M(m.size() * 2)
-          val keys = m.keySet().iterator()
-          while (keys.hasNext) {
-            val key = keys.next().longValue()
-            val nv = k(get, (key >>> 32).toInt, (key & 0xFFFFFFFFL).toInt, w, h)
-            if (nv != 0) out.put(key, nv)
-          }
-          out
-        }
-        val dsmM = new M()
-        it.foreach { case (gx, gy, v) => dsmM.put((gx << 32) | gy, v) }
-        val seeds = pass(dsmM, seedK)
-        var cur = new M(dsmM.size() * 2)
-        val dIt = dsmM.entrySet().iterator()
-        while (dIt.hasNext) {
-          val e = dIt.next()
-          val lbl = if (seeds.containsKey(e.getKey)) 1 else 0
-          cur.put(e.getKey,
-            Int.box(lbl * 131072 + e.getValue.intValue()))
-        }
-        var r = 0
-        while (r < rounds) { cur = pass(pass(cur, markK), resolveK); r += 1 }
-        val out = Array.newBuilder[(Long, Long, Int)]
-        val oIt = cur.entrySet().iterator()
-        while (oIt.hasNext) {
-          val e = oIt.next()
-          val v = e.getValue.intValue()
-          if ((v >>> 17) == 1) {
-            val key = e.getKey.longValue()
-            out += ((key >>> 32, key & 0xFFFFFFFFL, v & 0x1FFFF))
-          }
-        }
-        out.result().iterator
-      }.toDF("gx", "gy", "v")
+    DenseGrid.grid(Seq(dsm), bounds) { g =>
+      val seeds = g(0).stencil(seedK)
+      var cur = g(0).mapCells((i, v) => (if (seeds.has(i)) 131072 else 0) + v)
+      for (_ <- 0 until rounds) cur = cur.stencil(markK).stencil(resolveK)
+      val out = new DenseGrid(cur.w, cur.h)
+      cur.foreach((i, v) => if ((v >>> 17) == 1) out.set(i, v & 0x1FFFF))
+      out
+    }
   }
 
   /** G4 object accept/reject (pubgeo `shr3d.cpp:1037-1087`): per object,

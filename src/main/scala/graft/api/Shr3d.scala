@@ -4,10 +4,10 @@ import graft.cc.ConnectedComponents
 import graft.core.Quant
 import graft.grid.Gridding
 import graft.pyramid.FillVoids
-import graft.stencil.{Kernels, TileStencil}
+import graft.stencil.{DenseGrid, Kernels, TileStencil}
 import graft.stencil.TileStencil.Bounds
 import graft.vector.Vectorize
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -22,6 +22,14 @@ import org.apache.spark.sql.functions._
  * `shr3d.cpp:899-1013`) wrapped in createDTM0's MIN-void mirror +
  * median (`shr3d.cpp:239-294`) and createDTM's final small-void fill
  * (`shr3d.cpp:296-317`).
+ *
+ * Execution: one task per product below 2^20 cells (the dense gate,
+ * `DenseGrid.Threshold`). A product's whole operator chain runs over
+ * one in-memory raster (`DenseGrid.task`, entered with `coalesce(1)`
+ * over pinned products or aggregate outputs), then the result is
+ * pinned. Larger rasters take the tiled distributed path (TileStencil
+ * passes, the distributed pyramid and CCL); both are asserted equal in
+ * Shr3dSpec.
  */
 object Shr3d {
 
@@ -54,9 +62,17 @@ object Shr3d {
     * with. */
   final case class Dtm0(grid: DataFrame /* gx, gy, v */, fit: Quant.Fit)
 
-  final class Products(spark: SparkSession, pts: DataFrame, cfg: Config) {
+  /** `denseCells` is the strategy gate (lattice cells); 0 forces the
+    * tiled path (a test seam — callers use the public constructor). */
+  final class Products private[graft] (spark: SparkSession, pts: DataFrame, cfg: Config,
+                                       denseCells: Long) {
+    def this(spark: SparkSession, pts: DataFrame, cfg: Config) =
+      this(spark, pts, cfg, DenseGrid.Threshold)
+
     private val (w, h) = cfg.boundsOpt.getOrElse(Gridding.boundsFor(cfg.spec))
     private val bounds = Bounds(w, h)
+    /** One task per product (see the object doc) vs the tiled path. */
+    private val dense = DenseGrid.fits(bounds, denseCells)
     private val stdFit = Quant.Fit(Quant.Offset, Quant.Scale)
     /** The working quantization: the reconciled common fit when a prior
       * DTM is mixed in (shr3d.cpp:213-222), else the standard one. */
@@ -84,21 +100,40 @@ object Shr3d {
     /** DSM at build scale: max-grid -> despike (quantile + well) -> fill. */
     private lazy val dsmStd: DataFrame = {
       val a1 = Gridding.dsm(gridded)
-      val q = TileStencil(a1, Kernels.QuantileFilter(1, 0.4, buildAglRaw), bounds, cfg.tileSize)
-      val wl = TileStencil(q, Kernels.WellFilter(buildAglRaw), bounds, cfg.tileSize)
-      FillVoids(wl, bounds, noSmoothing = false).localCheckpoint()
+      val (quantK, wellK) =
+        (Kernels.QuantileFilter(1, 0.4, buildAglRaw), Kernels.WellFilter(buildAglRaw))
+      if (dense)
+        DenseGrid.grid(Seq(a1), bounds)(_(0).stencil(quantK).stencil(wellK)
+          .fill(noSmoothing = false)).localCheckpoint()
+      else {
+        val q = TileStencil(a1, quantK, bounds, cfg.tileSize)
+        val wl = TileStencil(q, wellK, bounds, cfg.tileSize)
+        FillVoids(wl, bounds, noSmoothing = false, denseThreshold = denseCells)
+          .localCheckpoint()
+      }
     }
 
     /** DSM in the active quantization. */
     lazy val dsm: DataFrame = toActive(dsmStd)
 
+    private val minQuantK = Kernels.QuantileFilter(2, 0.33, buildAglRaw)
+
     /** MIN after the reference's quantile filter, voids NOT yet filled
       * (shared by [[minGrid]] and the DTM path, which needs the
       * reference's small-void-only fill). */
-    private lazy val minFiltered: DataFrame = {
-      val a1 = Gridding.minGrid(gridded)
-      TileStencil(a1, Kernels.QuantileFilter(2, 0.33, buildAglRaw), bounds, cfg.tileSize)
+    private lazy val minFiltered: DataFrame =
+      if (dense) minStages.filter(col("t") === 0).select(col("gx"), col("gy"), col("v"))
+      else TileStencil(Gridding.minGrid(gridded), minQuantK, bounds, cfg.tileSize)
         .localCheckpoint()
+
+    /** Dense path: [[minFiltered]] (`t = 0`) and its smoothed fill
+      * (`t = 1`, the MIN product before any prior) from one task. */
+    private lazy val minStages: DataFrame = {
+      val quantK = minQuantK
+      DenseGrid.grids(Seq(Gridding.minGrid(gridded)), bounds) { g =>
+        val filtered = g(0).stencil(quantK)
+        Seq(filtered, filtered.fill(noSmoothing = false))
+      }.localCheckpoint()
     }
 
     /** The adjusted prior DTM (active fit), when configured. */
@@ -113,7 +148,9 @@ object Shr3d {
       * (shr3d.cpp:224-231). */
     lazy val minGrid: DataFrame = {
       val base = toActive(
-        FillVoids(minFiltered, bounds, noSmoothing = false).localCheckpoint())
+        if (dense) minStages.filter(col("t") === 1).select(col("gx"), col("gy"), col("v"))
+        else FillVoids(minFiltered, bounds, noSmoothing = false, denseThreshold = denseCells)
+          .localCheckpoint())
       dtm0Adj match {
         case None => base
         case Some(prior) =>
@@ -131,10 +168,16 @@ object Shr3d {
       * the void sentinel; thresholds shift accordingly. Cells surviving
       * the filter are "solid or adjacent to solid" (non-canopy). */
     lazy val dsm2: DataFrame = {
-      val varGrid = Gridding.zipSubClamp(dsm, minGrid)
-        .select(col("gx"), col("gy"), (col("v") + 1).cast("int").as("v"))
-      TileStencil(varGrid, Kernels.TreeFilter(maxTreeRaw + 1, dzRaw + 1), bounds, cfg.tileSize)
-        .localCheckpoint()
+      val treeK = Kernels.TreeFilter(maxTreeRaw + 1, dzRaw + 1)
+      if (dense)
+        DenseGrid.grid(Seq(dsm, minGrid), bounds) { g =>
+          g(0).zip(g(1))((a, b) => math.max(0, a - b) + 1).stencil(treeK)
+        }.localCheckpoint()
+      else {
+        val varGrid = Gridding.zipSubClamp(dsm, minGrid)
+          .select(col("gx"), col("gy"), (col("v") + 1).cast("int").as("v"))
+        TileStencil(varGrid, treeK, bounds, cfg.tileSize).localCheckpoint()
+      }
     }
 
     /** The reference region cap, maxCount = 10000/gsd² (shr3d.cpp:913). */
@@ -152,16 +195,22 @@ object Shr3d {
       * starting surface AND the void mirror the DTM step reapplies;
       * shared (and staged by q_shr3d_dtm's partial-chain oracle). */
     lazy val min2: DataFrame =
-      FillVoids(minFiltered, bounds, noSmoothing = true, maxLevel = 2)
-        .localCheckpoint()
+      FillVoids(minFiltered, bounds, noSmoothing = true, maxLevel = 2,
+        denseThreshold = denseCells).localCheckpoint()
 
     /** Raw classifyGround output (dtm, voidMask) — createDTM0's core
       * (shr3d.cpp:276-280): the loop starts from the small-void-filled
       * MIN and removes objects against the tree-voided DSM. */
-    lazy val classifyGroundResult: ClassifyGround.Result =
-      ClassifyGround.run(min2, solidDsm, bounds,
-        ClassifyGround.Config(dzRaw = dzRaw, dhBins = 1, iterations = 5,
-          maxCount = maxCount, tileSize = cfg.tileSize))
+    lazy val classifyGroundResult: ClassifyGround.Result = {
+      val cgCfg = ClassifyGround.Config(dzRaw = dzRaw, dhBins = 1, iterations = 5,
+        maxCount = maxCount, tileSize = cfg.tileSize, denseThreshold = denseCells)
+      if (dense)
+        // the tree-voided DSM is masked inside the task, not joined
+        ClassifyGround.denseResult(DenseGrid.task(Seq(min2, dsm, dsm2), bounds) { g =>
+          ClassifyGround.denseRows(g(0), g(1).keepWhere(g(2)), cgCfg)
+        }(Encoders.product[DenseGrid.Tagged]).toDF())
+      else ClassifyGround.run(min2, solidDsm, bounds, cgCfg)
+    }
 
     /** DTM: the reference product — classifyGround loop, then
       * createDTM0's MIN-void mirror + dz-median (shr3d.cpp:282-293) and
@@ -170,14 +219,21 @@ object Shr3d {
       * small-void-filled prior (getDTM0 memoization short-circuit). */
     lazy val dtm: DataFrame = dtm0Adj match {
       case Some(prior) =>
-        FillVoids(prior, bounds, noSmoothing = true, maxLevel = 2)
-          .localCheckpoint()
+        FillVoids(prior, bounds, noSmoothing = true, maxLevel = 2,
+          denseThreshold = denseCells).localCheckpoint()
       case None =>
-        val mirrored = classifyGroundResult.dtm
-          .join(min2.select("gx", "gy"), Seq("gx", "gy"), "left_semi")
-        val med = TileStencil(mirrored, Kernels.medianFilter(1, dzRaw),
-          bounds, cfg.tileSize)
-        FillVoids(med, bounds, noSmoothing = true, maxLevel = 2).localCheckpoint()
+        val medK = Kernels.medianFilter(1, dzRaw)
+        if (dense)
+          DenseGrid.grid(Seq(classifyGroundResult.dtm, min2), bounds) { g =>
+            g(0).keepWhere(g(1)).stencil(medK).fill(noSmoothing = true, maxLevel = 2)
+          }.localCheckpoint()
+        else {
+          val mirrored = classifyGroundResult.dtm
+            .join(min2.select("gx", "gy"), Seq("gx", "gy"), "left_semi")
+          val med = TileStencil(mirrored, medK, bounds, cfg.tileSize)
+          FillVoids(med, bounds, noSmoothing = true, maxLevel = 2,
+            denseThreshold = denseCells).localCheckpoint()
+        }
     }
 
     /** Above-ground object cells via the single-pass classifyGround-style
@@ -188,7 +244,8 @@ object Shr3d {
       GroundObjects.acceptByGradient(
         GroundObjects.detect(dsm, bounds,
           GroundObjects.Config(dzRaw = dzRaw, tileSize = cfg.tileSize,
-            minRegionCells = cfg.minRegionCells, maxCount = maxCount)),
+            minRegionCells = cfg.minRegionCells, maxCount = maxCount,
+            denseThreshold = denseCells)),
         dsm, dzRaw).localCheckpoint()
 
     final val ClsGround = 2
@@ -196,18 +253,28 @@ object Shr3d {
     final val ClsBuilding = 6
 
     /** W16 per-cell classification over the joined grids. */
-    lazy val classification: DataFrame = {
-      dsm.withColumnRenamed("v", "vDsm")
-        .join(dtm.select(col("gx"), col("gy"), col("v").as("vDtm")), Seq("gx", "gy"), "left")
-        .join(dsm2.select(col("gx"), col("gy"), col("v").as("vVar")), Seq("gx", "gy"), "left")
-        .withColumn("agl", col("vDsm") - coalesce(col("vDtm"), col("vDsm")))
-        .withColumn("cls",
-          when(col("agl") > aglRaw && col("vVar").isNotNull, lit(ClsBuilding))
-            .when(col("agl") > aglRaw, lit(ClsTree))
-            .otherwise(lit(ClsGround)))
-        .select(col("gx"), col("gy"), col("cls"))
-        .localCheckpoint()
-    }
+    lazy val classification: DataFrame =
+      if (dense) {
+        val (agl, bldg, tree, ground) = (aglRaw, ClsBuilding, ClsTree, ClsGround)
+        DenseGrid.grid(Seq(dsm, dtm, dsm2), bounds) { g =>
+          val (d, t, v2) = (g(0), g(1), g(2))
+          d.mapCells { (i, vd) =>
+            val above = vd - (if (t.has(i)) t(i) else vd) > agl
+            if (above && v2.has(i)) bldg else if (above) tree else ground
+          }
+        }.withColumnRenamed("v", "cls").localCheckpoint()
+      } else {
+        dsm.withColumnRenamed("v", "vDsm")
+          .join(dtm.select(col("gx"), col("gy"), col("v").as("vDtm")), Seq("gx", "gy"), "left")
+          .join(dsm2.select(col("gx"), col("gy"), col("v").as("vVar")), Seq("gx", "gy"), "left")
+          .withColumn("agl", col("vDsm") - coalesce(col("vDtm"), col("vDsm")))
+          .withColumn("cls",
+            when(col("agl") > aglRaw && col("vVar").isNotNull, lit(ClsBuilding))
+              .when(col("agl") > aglRaw, lit(ClsTree))
+              .otherwise(lit(ClsGround)))
+          .select(col("gx"), col("gy"), col("cls"))
+          .localCheckpoint()
+      }
 
     /** Building labels via the full classifyNonGround order
       * (shr3d.cpp:1015-1174): building mask -> dz/2-constrained grouping
@@ -219,26 +286,54 @@ object Shr3d {
     lazy val buildingLabels: DataFrame = {
       val mask = classification.filter(col("cls") === ClsBuilding)
         .select("gx", "gy")
-      val cleaned =
-        if (cfg.openLabels) {
-          // group on height similarity (dz/2, groupObjects at :1039)
-          val withV = mask.join(dsm, Seq("gx", "gy"))
-          val grouped = ConnectedComponents.label(withV, bounds, cfg.tileSize,
-            maxDz = Some(dzRaw / 2))
-          // G4: reject low-ridge objects by mean boundary gradient
-          val accepted = GroundObjects
-            .acceptByGradient(grouped.select("gx", "gy", "label"), dsm, dzRaw)
-            .select(col("gx"), col("gy"), lit(1).as("v"))
-          // W15: erode+dilate the surviving label mask
-          val packed = TileStencil(accepted, Kernels.MaskErodePack(), bounds, cfg.tileSize)
-          TileStencil(packed, Kernels.MaskOpenResolve(), bounds, cfg.tileSize)
-        } else mask.withColumn("v", lit(1))
-      // final plain regrouping + min-area reject (:1148-1173)
-      val labeled = ConnectedComponents.label(cleaned, bounds, cfg.tileSize)
-      val sizes = labeled.groupBy("label").agg(count(lit(1)).as("n"))
-        .filter(col("n") >= cfg.minRegionCells)
-      labeled.join(sizes.select("label"), Seq("label"), "left_semi")
-        .localCheckpoint()
+      if (dense) buildingLabelsDense(mask)
+      else {
+        val cleaned =
+          if (cfg.openLabels) {
+            // group on height similarity (dz/2, groupObjects at :1039)
+            val withV = mask.join(dsm, Seq("gx", "gy"))
+            val grouped = ConnectedComponents.label(withV, bounds, cfg.tileSize,
+              maxDz = Some(dzRaw / 2), denseThreshold = denseCells)
+            // G4: reject low-ridge objects by mean boundary gradient
+            val accepted = GroundObjects
+              .acceptByGradient(grouped.select("gx", "gy", "label"), dsm, dzRaw)
+              .select(col("gx"), col("gy"), lit(1).as("v"))
+            // W15: erode+dilate the surviving label mask
+            val packed = TileStencil(accepted, Kernels.MaskErodePack(), bounds, cfg.tileSize)
+            TileStencil(packed, Kernels.MaskOpenResolve(), bounds, cfg.tileSize)
+          } else mask.withColumn("v", lit(1))
+        // final plain regrouping + min-area reject (:1148-1173)
+        val labeled = ConnectedComponents.label(cleaned, bounds, cfg.tileSize,
+          denseThreshold = denseCells)
+        val sizes = labeled.groupBy("label").agg(count(lit(1)).as("n"))
+          .filter(col("n") >= cfg.minRegionCells)
+        labeled.join(sizes.select("label"), Seq("label"), "left_semi")
+          .localCheckpoint()
+      }
+    }
+
+    /** [[buildingLabels]] as one task over the building mask and the DSM:
+      * the same chain on `DenseGrid` (labels, G4, the W15 kernels). */
+    private def buildingLabelsDense(mask: DataFrame): DataFrame = {
+      import spark.implicits._
+      val (open, dz, minCells) = (cfg.openLabels, dzRaw, cfg.minRegionCells)
+      val (erodeK, openK) = (Kernels.MaskErodePack(), Kernels.MaskOpenResolve())
+      DenseGrid.task(Seq(mask.withColumn("v", lit(1)), dsm), bounds) { g =>
+        val (m, d) = (g(0), g(1))
+        val cleaned =
+          if (open) {
+            val kept = DenseGrid.acceptByGradient(
+              d.keepWhere(m).labels(maxDz = Some(dz / 2)), d, dz)
+            val accepted = new DenseGrid(m.w, m.h)
+            kept.indices.foreach(i => if (kept(i) >= 0) accepted.set(i, 1))
+            accepted.stencil(erodeK).stencil(openK)
+          } else m
+        val lbl = cleaned.labels()
+        val n = new Array[Int](lbl.length)
+        lbl.foreach(l => if (l >= 0) n(l) += 1)
+        cleaned.cells.filter(c => n(lbl((c.gy * m.w + c.gx).toInt)) >= minCells)
+          .map(c => (lbl((c.gy * m.w + c.gx).toInt).toLong, c.gx, c.gy, c.v))
+      }.toDF("label", "gx", "gy", "v").localCheckpoint()
     }
 
     /** Outline polygons (V1-V3) of the building components. */

@@ -1,5 +1,6 @@
 package graft.cc
 
+import graft.stencil.DenseGrid
 import graft.stencil.TileStencil.Bounds
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -46,10 +47,11 @@ object ConnectedComponents {
   final case class Labeled(gx: Long, gy: Long, v: Int, lbl: Long)
 
   /** Default strategy-gate size (lattice cells): grids below it label
-    * in ONE task (single union-find sweep — a 722-cell raster should
-    * not pay tile shuffles + pointer-jump rounds); larger grids take
-    * the tiled distributed path. Both asserted equal in CcSpec. */
-  final val DefaultDenseThreshold: Long = 1L << 20
+    * in ONE task (`DenseGrid.labels`, a single union-find sweep — a
+    * 722-cell raster should not pay tile shuffles + pointer-jump
+    * rounds); larger grids take the tiled distributed path. Both
+    * asserted equal in CcSpec. */
+  final val DefaultDenseThreshold: Long = DenseGrid.Threshold
 
   /** `diag = false` restricts adjacency to 4-connectivity (the
     * reference's BACKGROUND labeling in `Image.h:288-297` — holes are
@@ -62,6 +64,12 @@ object ConnectedComponents {
     import spark.implicits._
     val t = tileSize
     val w = bounds.w
+    if (DenseGrid.fits(bounds, denseThreshold))
+      return DenseGrid.task(Seq(cells), bounds) { g =>
+        val lbl = g(0).labels(maxDz, maxCount, diag)
+        g(0).cells.map(c => (c.gx, c.gy, c.v, lbl((c.gy * w + c.gx).toInt).toLong))
+      }.toDF("gx", "gy", "v", "label")
+
     val dzOk: (Int, Int) => Boolean = maxDz match {
       case Some(dz) => (a, b) => math.abs(a - b) <= dz
       case None => (_, _) => true
@@ -69,9 +77,6 @@ object ConnectedComponents {
 
     val ds = cells.select(col("gx").cast("long"), col("gy").cast("long"),
       col("v").cast("int")).as[Cell]
-
-    if (bounds.w.toLong * bounds.h <= denseThreshold)
-      return labelDense(ds, bounds, dzOk, maxCount, diag)
 
     // ---- 1. per-tile local CCL ----
     val local = ds.groupByKey(c => ((c.gx / t) << 32) | (c.gy / t))
@@ -205,74 +210,5 @@ object ConnectedComponents {
           .withColumn("newLabel", min(col("cid")).over(wChunk))
           .select(col("gx"), col("gy"), col("v"), col("newLabel").as("label"))
     }
-  }
-
-  /** Dense single-task strategy: one union-find sweep over the whole
-    * (small) grid, same canonical labels and chunk semantics. */
-  private def labelDense(ds: org.apache.spark.sql.Dataset[Cell], bounds: Bounds,
-                         dzOk: (Int, Int) => Boolean,
-                         maxCount: Option[Long],
-                         diag: Boolean = true): DataFrame = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    val w = bounds.w.toLong
-    ds.repartition(1).mapPartitions { it =>
-      val arr = it.toArray
-      if (arr.isEmpty) Iterator.empty
-      else {
-        val idx = new java.util.HashMap[java.lang.Long, java.lang.Integer](arr.length * 2)
-        arr.zipWithIndex.foreach { case (c, i) => idx.put(c.gy * w + c.gx, i) }
-        val parent = Array.tabulate(arr.length)(identity)
-        def find(i: Int): Int = {
-          var r = i
-          while (parent(r) != r) r = parent(r)
-          var c = i
-          while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-          r
-        }
-        def union(a: Int, b: Int): Unit = {
-          val ra = find(a); val rb = find(b)
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
-        val offs = if (diag) Seq((1, -1), (1, 0), (1, 1), (0, 1))
-                   else Seq((1, 0), (0, 1))
-        arr.zipWithIndex.foreach { case (c, i) =>
-          offs.foreach { case (dx, dy) =>
-            val nx = c.gx + dx; val ny = c.gy + dy
-            if (nx >= 0 && nx < w && ny >= 0) {
-              val j = idx.get(ny * w + nx)
-              if (j != null && dzOk(c.v, arr(j.intValue()).v))
-                union(i, j.intValue())
-            }
-          }
-        }
-        // canonical labels + optional chunk crop in cell-id order
-        val byRoot = new java.util.HashMap[Integer, java.util.ArrayList[Int]]()
-        arr.indices.foreach { i =>
-          val r = find(i)
-          var l = byRoot.get(r)
-          if (l == null) { l = new java.util.ArrayList[Int](); byRoot.put(r, l) }
-          l.add(i)
-        }
-        val out = Array.newBuilder[Labeled]
-        val rIt = byRoot.values().iterator()
-        while (rIt.hasNext) {
-          val members = rIt.next()
-          val sorted = (0 until members.size()).map(members.get)
-            .sortBy(i => arr(i).gy * w + arr(i).gx)
-          val groups = maxCount match {
-            case Some(cap) => sorted.grouped(math.min(cap, Int.MaxValue).toInt)
-            case None => Iterator(sorted)
-          }
-          groups.foreach { g =>
-            val lbl = arr(g.head).gy * w + arr(g.head).gx
-            g.foreach { i =>
-              out += Labeled(arr(i).gx, arr(i).gy, arr(i).v, lbl)
-            }
-          }
-        }
-        out.result().iterator
-      }
-    }.toDF("gx", "gy", "v", "label")
   }
 }

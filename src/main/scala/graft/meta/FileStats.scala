@@ -112,11 +112,17 @@ object FileStats {
     * over the executors. The driver only ships the file list and the
     * conf snapshot; each task opens its files' footers locally. */
   def collect(spark: SparkSession, dataPath: String,
-              statCols: Seq[String]): Seq[FileStat] = {
+              statCols: Seq[String]): Seq[FileStat] =
+    collect(spark, dataPath, statCols, DriverFooterGate)
+
+  /** [[collect]] with the driver-side gate `driverGate` (files); 0 forces
+    * the distributed pass. */
+  private[graft] def collect(spark: SparkSession, dataPath: String,
+                             statCols: Seq[String], driverGate: Int): Seq[FileStat] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val files = dataFiles(conf, dataPath)
     if (files.isEmpty) return Nil
-    if (files.size <= DriverFooterGate)
+    if (files.size <= driverGate)
       return files.flatMap(f => ofFile(conf, f, statCols))
         .sortBy(s => (s.path, s.col))
     import scala.jdk.CollectionConverters._

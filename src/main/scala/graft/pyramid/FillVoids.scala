@@ -1,5 +1,6 @@
 package graft.pyramid
 
+import graft.stencil.DenseGrid
 import graft.stencil.TileStencil.Bounds
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
@@ -29,10 +30,10 @@ import org.apache.spark.sql.functions._
  * plan copies (SURVEY.md §7.4 risk 6).
  *
  * Strategy gate (like Spark's broadcast threshold): lattices up to
- * `denseThreshold` cells run the whole pyramid as ONE executor task —
- * ~2 jobs instead of ~3·log2(maxdim) — via the same dense algorithm
- * the oracle uses; bigger lattices take the distributed path. The two
- * are asserted equal in PyramidSpec.
+ * `denseThreshold` cells run the whole pyramid as ONE executor task
+ * (`DenseGrid.fill`, the same spec over one in-memory raster) — one job
+ * over a pinned input instead of ~3·log2(maxdim); bigger lattices take
+ * the distributed path. The two are asserted equal in PyramidSpec.
  */
 object FillVoids {
 
@@ -43,80 +44,6 @@ object FillVoids {
     import spark.implicits._
     df.select(col("gx").cast("long"), col("gy").cast("long"),
       col("v").cast("int")).as[Cell]
-  }
-
-  private type LMap = java.util.HashMap[java.lang.Long, java.lang.Integer]
-  @inline private def key(x: Long, y: Long): Long = (x << 32) | y
-
-  /** The dense single-task pyramid — the exact same spec over a local
-    * map (also reused by ClassifyGround's dense strategy). */
-  def dense(g0: LMap, w: Int, h: Int, noSmoothing: Boolean,
-            maxLevel: Int = 32): LMap = {
-    var levels = List((g0, w, h))
-    var k = 0
-    while (k < maxLevel && levels.head._2 / 2 >= 1 && levels.head._3 / 2 >= 1 &&
-      levels.head._1.size < levels.head._2.toLong * levels.head._3) {
-      val (g, lw, lh) = levels.head
-      val cw = lw / 2; val ch = lh / 2
-      val coarse = new LMap()
-      var j = 0L
-      while (j < cw) {
-        var i = 0L
-        while (i < ch) {
-          var sum = 0L; var cnt = 0
-          var dx = -1
-          while (dx <= 1) {
-            var dy = -1
-            while (dy <= 1) {
-              val x = 2 * j + 1 + dx; val y = 2 * i + 1 + dy
-              if (x >= 0 && x < lw && y >= 0 && y < lh) {
-                val v = g.get(key(x, y))
-                if (v != null) { sum += v.intValue(); cnt += 1 }
-              }
-              dy += 1
-            }
-            dx += 1
-          }
-          if (cnt > 0) coarse.put(key(j, i), Math.floorDiv(sum, cnt).toInt)
-          i += 1
-        }
-        j += 1
-      }
-      levels ::= ((coarse, cw, ch))
-      k += 1
-    }
-    var filled = levels.head._1
-    for ((g, lw, lh) <- levels.tail) {
-      val out = new LMap(g)
-      var y = 0L
-      while (y < lh) {
-        var x = 0L
-        while (x < lw) {
-          if (!g.containsKey(key(x, y))) {
-            if (noSmoothing) {
-              val p = filled.get(key(x / 2, y / 2))
-              if (p != null) out.put(key(x, y), p)
-            } else {
-              var sw = 0L; var swv = 0L
-              val offs = Array((-1, -1, 1), (0, -1, 2), (1, -1, 1), (-1, 0, 2),
-                (0, 0, 4), (1, 0, 2), (-1, 1, 1), (0, 1, 2), (1, 1, 1))
-              var oi = 0
-              while (oi < offs.length) {
-                val (dx, dy, wt) = offs(oi)
-                val p = filled.get(key(x / 2 + dx, y / 2 + dy))
-                if (p != null) { sw += wt; swv += wt.toLong * p.intValue() }
-                oi += 1
-              }
-              if (sw > 0) out.put(key(x, y), Math.floorDiv(swv, sw).toInt)
-            }
-          }
-          x += 1
-        }
-        y += 1
-      }
-      filled = out
-    }
-    filled
   }
 
   /** One coarsening step: fine cells -> coarse means. */
@@ -137,7 +64,7 @@ object FillVoids {
   }
 
   /** Default strategy-gate size (lattice cells). */
-  final val DefaultDenseThreshold: Long = 1L << 20
+  final val DefaultDenseThreshold: Long = DenseGrid.Threshold
 
   /** Full pyramid fill. Returns the level-0 grid with voids filled
     * (columns gx, gy, v). */
@@ -147,20 +74,8 @@ object FillVoids {
     val spark = cells.sparkSession
     import spark.implicits._
 
-    if (bounds.w.toLong * bounds.h <= denseThreshold) {
-      return asCells(cells).repartition(1).mapPartitions { it =>
-        val g = new java.util.HashMap[java.lang.Long, java.lang.Integer]()
-        it.foreach(c => g.put((c.gx << 32) | c.gy, c.v))
-        val filled = dense(g, bounds.w, bounds.h, noSmoothing, maxLevel)
-        val out = Array.newBuilder[Cell]
-        val fIt = filled.entrySet().iterator()
-        while (fIt.hasNext) {
-          val e = fIt.next()
-          out += Cell(e.getKey >>> 32, e.getKey & 0xFFFFFFFFL, e.getValue.intValue())
-        }
-        out.result().iterator
-      }.toDF("gx", "gy", "v")
-    }
+    if (DenseGrid.fits(bounds, denseThreshold))
+      return DenseGrid.grid(Seq(cells), bounds)(_(0).fill(noSmoothing, maxLevel))
 
     // ---- up phase ----
     var levels = List((asCells(cells).toDF("gx", "gy", "v").localCheckpoint(), bounds))

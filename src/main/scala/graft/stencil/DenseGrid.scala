@@ -1,0 +1,320 @@
+package graft.stencil
+
+import graft.stencil.TileStencil.{Bounds, Kernel}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
+import org.apache.spark.sql.functions._
+
+/**
+ * One in-memory raster of a single executor task: the dense strategy of
+ * every sub-gate raster operator (stencils, the void-fill pyramid, CC
+ * labels, the G4 accept test), evaluated the way the reference evaluates
+ * its memoized `getX()` products — one pass over one image
+ * (`shr3d.h:153-172`) instead of one Spark job per operator.
+ *
+ * The grid is the `w x h` lattice of a sparse `(gx, gy, v)` cell table.
+ * Occupancy is kept apart from the value, so a present `v = 0` cell is
+ * still present (it fills and labels like any other cell), exactly as
+ * the sparse table has it; an absent cell reads as 0 (void).
+ *
+ * [[DenseGrid.task]] runs a function of several such grids as ONE task:
+ * the input tables are tag-unioned and entered with `coalesce(1)`, so a
+ * chain over pinned products or aggregate outputs adds no exchange of
+ * its own. Rasters above [[DenseGrid.Threshold]] cells keep their tiled
+ * distributed paths.
+ */
+final class DenseGrid(val w: Int, val h: Int) {
+  require(w >= 0 && h >= 0 && w.toLong * h <= Int.MaxValue, s"raster ${w}x$h too large")
+  private val vals = new Array[Int](w * h)
+  private val occ = new java.util.BitSet(w * h)
+
+  @inline def index(x: Int, y: Int): Int = y * w + x
+  @inline def has(i: Int): Boolean = occ.get(i)
+  /** The value at lattice index `i` (0 when absent). */
+  @inline def apply(i: Int): Int = vals(i)
+
+  def set(i: Int, v: Int): Unit = { vals(i) = v; occ.set(i) }
+  def remove(i: Int): Unit = { vals(i) = 0; occ.clear(i) }
+
+  def size: Int = occ.cardinality()
+  def isEmpty: Boolean = occ.isEmpty
+
+  /** Visits the present cells in lattice (cell id) order. */
+  def foreach(f: (Int, Int) => Unit): Unit = {
+    var i = occ.nextSetBit(0)
+    while (i >= 0) { f(i, vals(i)); i = occ.nextSetBit(i + 1) }
+  }
+
+  def copy(): DenseGrid = {
+    val out = new DenseGrid(w, h)
+    foreach(out.set)
+    out
+  }
+
+  /** Every present cell with a new value (cells stay present, even at 0). */
+  def mapCells(f: (Int, Int) => Int): DenseGrid = {
+    val out = new DenseGrid(w, h)
+    foreach((i, v) => out.set(i, f(i, v)))
+    out
+  }
+
+  /** The cells also present in `other` (a semi-join). */
+  def keepWhere(other: DenseGrid): DenseGrid = {
+    val out = new DenseGrid(w, h)
+    foreach((i, v) => if (other.has(i)) out.set(i, v))
+    out
+  }
+
+  /** The cells not in `mask` (an anti-join). */
+  def without(mask: java.util.BitSet): DenseGrid = {
+    val out = copy()
+    var i = mask.nextSetBit(0)
+    while (i >= 0) { if (i < vals.length) out.remove(i); i = mask.nextSetBit(i + 1) }
+    out
+  }
+
+  /** `f(a, b)` on the cells present in both grids (the J1 zip). */
+  def zip(other: DenseGrid)(f: (Int, Int) => Int): DenseGrid = {
+    val out = new DenseGrid(w, h)
+    foreach((i, v) => if (other.has(i)) out.set(i, f(v, other(i))))
+    out
+  }
+
+  /** One [[TileStencil]] pass with its exact contract: present cells are
+    * evaluated, `nv == 0` drops the cell, absent neighbors read as 0. */
+  def stencil(k: Kernel): DenseGrid = {
+    require(!k.writesVoids, "DenseGrid evaluates present cells only")
+    val out = new DenseGrid(w, h)
+    val get = (x: Int, y: Int) => vals(y * w + x)
+    foreach { (i, _) =>
+      val nv = k(get, i % w, i / w, w, h)
+      if (nv != 0) out.set(i, nv)
+    }
+    out
+  }
+
+  /** The fillVoidsPyramid spec of [[graft.pyramid.FillVoids]] (the
+    * distributed path's exact dense twin): coarsen while voids remain and
+    * `maxLevel` allows, then fill every void top-down from the parent
+    * level. Returns a new grid. */
+  def fill(noSmoothing: Boolean, maxLevel: Int = 32): DenseGrid = {
+    var levels = List(this)
+    var k = 0
+    while (k < maxLevel && levels.head.w / 2 >= 1 && levels.head.h / 2 >= 1 &&
+      levels.head.size < levels.head.vals.length) {
+      levels ::= levels.head.coarsen()
+      k += 1
+    }
+    var filled = levels.head
+    for (g <- levels.tail) {
+      val out = g.copy()
+      val p = filled
+      var i = g.occ.nextClearBit(0)
+      while (i < g.vals.length) {
+        val px = (i % g.w) / 2; val py = (i / g.w) / 2
+        if (noSmoothing) {
+          if (px < p.w && py < p.h && p.has(p.index(px, py))) out.set(i, p(p.index(px, py)))
+        } else {
+          var sw = 0L; var swv = 0L
+          var oi = 0
+          while (oi < 9) {
+            val qx = px + DenseGrid.SmoothDx(oi); val qy = py + DenseGrid.SmoothDy(oi)
+            if (qx >= 0 && qx < p.w && qy >= 0 && qy < p.h && p.has(p.index(qx, qy))) {
+              val wt = DenseGrid.SmoothW(oi)
+              sw += wt; swv += wt.toLong * p(p.index(qx, qy))
+            }
+            oi += 1
+          }
+          if (sw > 0) out.set(i, Math.floorDiv(swv, sw).toInt)
+        }
+        i = g.occ.nextClearBit(i + 1)
+      }
+      filled = out
+    }
+    if (filled eq this) copy() else filled
+  }
+
+  /** One pyramid level up: coarse cell (j, i) is the floored mean of the
+    * present cells in the in-bounds 3x3 block centered at (2j+1, 2i+1). */
+  private def coarsen(): DenseGrid = {
+    val out = new DenseGrid(w / 2, h / 2)
+    var i = 0
+    while (i < out.h) {
+      var j = 0
+      while (j < out.w) {
+        var sum = 0L; var cnt = 0
+        var y = 2 * i
+        while (y <= 2 * i + 2) {
+          var x = 2 * j
+          while (x <= 2 * j + 2) {
+            if (x < w && y < h && has(index(x, y))) { sum += vals(index(x, y)); cnt += 1 }
+            x += 1
+          }
+          y += 1
+        }
+        if (cnt > 0) out.set(out.index(j, i), Math.floorDiv(sum, cnt).toInt)
+        j += 1
+      }
+      i += 1
+    }
+    out
+  }
+
+  /** Canonical connected-component labels, per lattice index (-1 where
+    * absent): 8-connected (4 without `diag`), neighbors joined only when
+    * their values differ by at most `maxDz`; a component is labeled by its
+    * minimum cell id `gy * w + gx`, and with `maxCount` it is cut, in cell
+    * id order, into chunks of at most `maxCount` cells, each labeled by
+    * its own minimum id — [[graft.cc.ConnectedComponents]]'s contract. */
+  def labels(maxDz: Option[Int] = None, maxCount: Option[Long] = None,
+             diag: Boolean = true): Array[Int] = {
+    val parent = Array.fill(vals.length)(-1)
+    foreach((i, _) => parent(i) = i)
+    def find(i: Int): Int = {
+      var r = i
+      while (parent(r) != r) r = parent(r)
+      var c = i
+      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    val dzOn = maxDz.isDefined; val dz = maxDz.getOrElse(0)
+    val (dxs, dys) =
+      if (diag) (Array(1, 1, 1, 0), Array(-1, 0, 1, 1)) else (Array(1, 0), Array(0, 1))
+    foreach { (i, v) =>
+      val x = i % w; val y = i / w
+      var o = 0
+      while (o < dxs.length) {
+        val nx = x + dxs(o); val ny = y + dys(o)
+        if (nx < w && ny >= 0 && ny < h) {
+          val j = index(nx, ny)
+          if (has(j) && (!dzOn || math.abs(v - vals(j)) <= dz)) {
+            // union by minimum index: a root is its component's minimum id
+            val ra = find(i); val rb = find(j)
+            if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+          }
+        }
+        o += 1
+      }
+    }
+    val out = Array.fill(vals.length)(-1)
+    maxCount match {
+      case None => foreach((i, _) => out(i) = find(i))
+      case Some(c) =>
+        val cap = math.min(c, Int.MaxValue).toInt
+        val seen = new Array[Int](vals.length)
+        val chunk = new Array[Int](vals.length)
+        foreach { (i, _) =>
+          val r = find(i)
+          if (seen(r) % cap == 0) chunk(r) = i
+          seen(r) += 1
+          out(i) = chunk(r)
+        }
+    }
+    out
+  }
+
+  /** The present cells as `(gx, gy, v)` rows, in lattice order. */
+  def cells: Iterator[DenseGrid.Cell] = {
+    val b = Array.newBuilder[DenseGrid.Cell]
+    foreach((i, v) => b += DenseGrid.Cell((i % w).toLong, (i / w).toLong, v))
+    b.result().iterator
+  }
+}
+
+object DenseGrid {
+
+  /** The strategy gate: rasters up to this many lattice cells run as one
+    * task; larger ones take the tiled distributed paths. */
+  final val Threshold: Long = 1L << 20
+
+  def fits(bounds: Bounds, threshold: Long = Threshold): Boolean =
+    bounds.w.toLong * bounds.h <= threshold
+
+  final case class Cell(gx: Long, gy: Long, v: Int)
+  final case class Tagged(t: Int, gx: Long, gy: Long, v: Int)
+
+  // smoothing fill-down weights: center 4, cross 2, diagonal 1
+  private val SmoothDx = Array(-1, 0, 1, -1, 0, 1, -1, 0, 1)
+  private val SmoothDy = Array(-1, -1, -1, 0, 0, 0, 1, 1, 1)
+  private val SmoothW = Array(1, 2, 1, 2, 4, 2, 1, 2, 1)
+
+  /** Runs `f` over the `(gx, gy, v)` tables `inputs` — grid `k` holds
+    * input `k` — as ONE executor task: a tag-union entered with
+    * `coalesce(1)`, so only the inputs' own lineage is planned. A cell
+    * outside the `bounds` lattice is an error. */
+  def task[T](inputs: Seq[DataFrame], bounds: Bounds)
+             (f: IndexedSeq[DenseGrid] => Iterator[T])(implicit enc: Encoder[T]): Dataset[T] = {
+    val w = bounds.w; val h = bounds.h; val n = inputs.size
+    inputs.zipWithIndex
+      .map { case (df, t) =>
+        df.select(lit(t).as("t"), col("gx").cast("long"), col("gy").cast("long"),
+          col("v").cast("int"))
+      }
+      .reduce(_ unionByName _)
+      .as(Encoders.product[Tagged])
+      .coalesce(1)
+      .mapPartitions { it =>
+        val grids = IndexedSeq.fill(n)(new DenseGrid(w, h))
+        it.foreach { c =>
+          require(c.gx >= 0 && c.gx < w && c.gy >= 0 && c.gy < h,
+            s"cell (${c.gx}, ${c.gy}) outside the ${w}x$h raster")
+          grids(c.t).set(c.gy.toInt * w + c.gx.toInt, c.v)
+        }
+        f(grids)
+      }
+  }
+
+  /** [[task]] producing one grid: a `(gx, gy, v)` table. */
+  def grid(inputs: Seq[DataFrame], bounds: Bounds)
+          (f: IndexedSeq[DenseGrid] => DenseGrid): DataFrame =
+    task(inputs, bounds)(g => f(g).cells)(Encoders.product[Cell]).toDF()
+
+  /** [[task]] producing several grids: a `(t, gx, gy, v)` table, `t` the
+    * position of the grid in `f`'s result. */
+  def grids(inputs: Seq[DataFrame], bounds: Bounds)
+           (f: IndexedSeq[DenseGrid] => Seq[DenseGrid]): DataFrame =
+    task(inputs, bounds) { g =>
+      f(g).iterator.zipWithIndex.flatMap { case (out, t) =>
+        out.cells.map(c => Tagged(t, c.gx, c.gy, c.v))
+      }
+    }(Encoders.product[Tagged]).toDF()
+
+  /** G4 object accept/reject, the dense twin of
+    * [[graft.api.GroundObjects.acceptByGradient]]: per label, the mean of
+    * `dsm(object cell) - dsm(neighbor)` over the 8-neighbors that carry a
+    * DSM value and no label; a label with no such neighbor, or with
+    * 0 < mean < dz/2, is rejected. Returns `labels` with the rejected
+    * labels set to -1. */
+  def acceptByGradient(labels: Array[Int], dsm: DenseGrid, dzRaw: Int): Array[Int] = {
+    val w = dsm.w; val h = dsm.h
+    val sum = new Array[Long](labels.length)
+    val cnt = new Array[Int](labels.length)
+    var i = 0
+    while (i < labels.length) {
+      val l = labels(i)
+      if (l >= 0 && dsm.has(i)) {
+        val x = i % w; val y = i / w
+        var dy = -1
+        while (dy <= 1) {
+          var dx = -1
+          while (dx <= 1) {
+            val nx = x + dx; val ny = y + dy
+            if ((dx != 0 || dy != 0) && nx >= 0 && nx < w && ny >= 0 && ny < h) {
+              val j = ny * w + nx
+              if (dsm.has(j) && labels(j) < 0) { sum(l) += dsm(i) - dsm(j); cnt(l) += 1 }
+            }
+            dx += 1
+          }
+          dy += 1
+        }
+      }
+      i += 1
+    }
+    labels.map { l =>
+      if (l < 0 || cnt(l) == 0) -1
+      else {
+        val mean = sum(l).toDouble / cnt(l)
+        if (mean > 0.0 && mean < dzRaw / 2.0) -1 else l
+      }
+    }
+  }
+}

@@ -20,6 +20,12 @@ import org.apache.spark.sql.functions._
  * Determinism: output depends only on the cell values, never on
  * partitioning or arrival order — verified by the oracle spec at
  * multiple parallelisms.
+ *
+ * This is the path above the 2^20-cell dense gate. Below it, callers
+ * that chain stencils (the SHR3D products, ALIGN3D's grids, the
+ * classifyGround loop) run one task per product instead: the same
+ * kernels through `DenseGrid.stencil`, which keeps this operator's
+ * contract (present cells evaluated, `nv == 0` drops the cell).
  */
 object TileStencil {
 

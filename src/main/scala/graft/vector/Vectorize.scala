@@ -36,25 +36,26 @@ object Vectorize {
     * a [[DefaultMaxCells]]-sized component costs ~32 MB transient heap,
     * not several hundred. Membership is a binary search — O(log n) but
     * branch-free over a contiguous array, which beats boxed hashing at
-    * trace sizes. Coordinates must be non-negative (grid indices). */
+    * trace sizes. Coordinates are signed 32-bit values (`y` is packed as
+    * its low 32 bits, so non-negative cells pack to `(x << 32) | y`). */
   final class PackedCells private (private val arr: Array[Long]) {
     def size: Int = arr.length
     def contains(x: Long, y: Long): Boolean =
-      x >= 0 && y >= 0 &&
-        java.util.Arrays.binarySearch(arr, (x << 32) | y) >= 0
+      java.util.Arrays.binarySearch(arr, PackedCells.pack(x, y)) >= 0
     def foreach(f: (Long, Long) => Unit): Unit = {
       var i = 0
-      while (i < arr.length) { f(arr(i) >>> 32, arr(i) & 0xFFFFFFFFL); i += 1 }
+      while (i < arr.length) { f(arr(i) >> 32, arr(i).toInt.toLong); i += 1 }
     }
   }
 
   object PackedCells {
+    @inline def pack(x: Long, y: Long): Long = (x << 32) | (y & 0xFFFFFFFFL)
     def fromIterator(it: Iterator[Pt]): PackedCells = {
       val b = Array.newBuilder[Long]
-      it.foreach { case (x, y) => b += ((x << 32) | y) }
+      it.foreach { case (x, y) => b += pack(x, y) }
       fromPacked(b.result())
     }
-    /** Takes ownership of `a` (packed (x << 32) | y coords).
+    /** Takes ownership of `a` (coords packed by [[pack]]).
       * Deduplicates after sorting — duplicate input cells would
       * double-insert boundary edges and over-count n_cells (the Set
       * gather this replaced deduped implicitly). */

@@ -216,6 +216,16 @@ class AlignSpec extends SparkSpec {
         r.getDouble(5)))
       .sortBy(r => (r._1, r._2))
 
+  test("prepGrid: one-task dense path == tiled path (fill + edge filter), void disc included") {
+    val (_, tgt) = tiledScene(3.0, -2.0, 0.5)
+    val cfg = Align3d.Config(gsd = 1.0)
+    val grid = Align3d.gridFor(tgt, cfg)
+    def rows(denseCells: Long) = Align3d.prepGrid(tgt, grid, cfg, denseCells).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
+    val dense = rows(graft.stencil.DenseGrid.Threshold)
+    assert(dense.nonEmpty && dense == rows(0L))
+  }
+
   test("offsetStats == brute-force first-N reference across tiles (1 and 7 partitions)") {
     val (ref, tgt) = tiledScene(3.0, -2.0, 0.5)
     val cfg = Align3d.Config(gsd = 1.0, maxT = 4.0, numSamples = 2000)

@@ -56,6 +56,19 @@ class CcSpec extends SparkSpec {
     }
   }
 
+  test("present v = 0 cells label like any other cell (dense and tiled)") {
+    import spark.implicits._
+    val (w, h) = (23, 19)
+    val cells = randomCells(9, w, h, 0.6).map { case (x, y, v) => (x, y, if (v <= 30) 0 else v) }
+    assert(cells.exists(_._3 == 0))
+    for (dz <- Seq(None, Some(20)); thresh <- Seq(0L, Long.MaxValue)) {
+      val got = ConnectedComponents.label(cells.toDF("gx", "gy", "v").repartition(3),
+          Bounds(w, h), 8, dz, denseThreshold = thresh)
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(3)).toMap
+      assert(got == oracle(cells, w, dz), s"dz=$dz threshold=$thresh")
+    }
+  }
+
   test("maxCount chunks a giant component deterministically and boundedly") {
     import spark.implicits._
     // one solid 120x50 block = 6000 cells, plus a small separate blob

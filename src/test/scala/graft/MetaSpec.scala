@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.Skew
-import graft.meta.{Lineage, Snapshots}
+import graft.meta.{FileStats, Lineage, Snapshots}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -316,6 +316,17 @@ class MetaSpec extends SparkSpec {
       case _ =>
     }
     assert(iv.forall(s => s.min <= s.max))
+  }
+
+  test("footer stats: the driver-side and distributed passes give equal rows") {
+    val root = tmpRoot
+    val m = Snapshots.commitClustered(skipData, root, "fg", "v1",
+      orderCols = Seq("k"), statCols = Seq("k"), numFiles = 8)
+    val cols = Seq("k", "p")
+    val onDriver = FileStats.collect(spark, m.dataPath, cols, driverGate = FileStats.DriverFooterGate)
+    val distributed = FileStats.collect(spark, m.dataPath, cols, driverGate = 0)
+    assert(onDriver.map(_.path).distinct.size > 1, "needs a multi-file table")
+    assert(onDriver.nonEmpty && onDriver == distributed)
   }
 
   test("pruned range read is bit-identical to filtering a full scan") {

@@ -85,6 +85,13 @@ class PyramidSpec extends SparkSpec {
     runBoth(randomCells(3, 40, 24, 0.15), 40, 24, noSmoothing = false, 1)
   }
 
+  test("present v = 0 cells are known cells, not voids") {
+    val cells = randomCells(6, 24, 17, 0.3).zipWithIndex
+      .map { case ((x, y, v), i) => (x, y, if (i % 5 == 0) 0 else v) }
+    runBoth(cells, 24, 17, noSmoothing = false, 32)
+    runBoth(cells, 24, 17, noSmoothing = true, 2)
+  }
+
   test("odd sizes") {
     runBoth(randomCells(4, 7, 5, 0.5), 7, 5, noSmoothing = false, 32)
     runBoth(randomCells(5, 9, 13, 0.35), 9, 13, noSmoothing = true, 32)

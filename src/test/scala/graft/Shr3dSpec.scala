@@ -2,7 +2,10 @@ package graft
 
 import graft.api.Shr3d
 import graft.grid.Gridding
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.Bridge
 import org.locationtech.jts.geom.GeometryFactory
 import org.locationtech.jts.io.WKTReader
 
@@ -183,5 +186,106 @@ class Shr3dSpec extends SparkSpec {
       .outlinesRef(scale = 6).collect()
     assert(rows.map(_.toSeq).sortBy(_.head.toString).toSeq ===
       again.map(_.toSeq).sortBy(_.head.toString).toSeq)
+  }
+
+  // ---- dense (one task per product) vs tiled ---------------------------
+
+  private val specCfg = Shr3d.Config(spec = spec, tileSize = 16, minRegionCells = 4,
+    boundsOpt = Some((36, 36)))
+
+  /** Every product accessor, in forcing order. */
+  private def accessors(p: Shr3d.Products): Seq[(String, () => DataFrame)] = Seq(
+    "dsm" -> (() => p.dsm), "minGrid" -> (() => p.minGrid), "dsm2" -> (() => p.dsm2),
+    "min2" -> (() => p.min2),
+    "classifyGround.dtm" -> (() => p.classifyGroundResult.dtm),
+    "classifyGround.voidMask" -> (() => p.classifyGroundResult.voidMask),
+    "dtm" -> (() => p.dtm), "classification" -> (() => p.classification),
+    "buildingLabels" -> (() => p.buildingLabels), "outlines" -> (() => p.outlines))
+
+  /** Schema and sorted rows of every product. */
+  private def productRows(p: Shr3d.Products): Seq[(String, Seq[String])] =
+    accessors(p).map { case (name, get) =>
+      val df = get()
+      name -> (df.schema.map(f => s"${f.name}:${f.dataType}") ++
+        df.collect().map(_.mkString(",")).sorted.toSeq)
+    }
+
+  private def assertTiledEqualsDense(pts: DataFrame): Shr3d.Products = {
+    val dense = Shr3d.run(spark, pts, specCfg)
+    val tiled = new Shr3d.Products(spark, pts, specCfg, 0L)
+    productRows(dense).zip(productRows(tiled)).foreach { case ((name, d), (_, t)) =>
+      val same = d == t
+      assert(same, s"$name: dense ${d.size} lines vs tiled ${t.size}, first difference " +
+        d.zipAll(t, "-", "-").find(p => p._1 != p._2))
+    }
+    dense
+  }
+
+  test("one task per product == the tiled path, every product") {
+    val p = assertTiledEqualsDense(scene)
+    assert(p.buildingLabels.count() > 0 && p.classifyGroundResult.voidMask.count() > 0)
+  }
+
+  test("dense == tiled with a present v = 0 cell and a G4 object without ground neighbours") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val pts = scala.collection.mutable.ArrayBuffer[(Double, Double, Double)]()
+    // a 24 m roof at 8 m with a 10 m tower at 12 m in its middle
+    def in(x: Double, y: Double, lo: Double, hi: Double) = x >= lo && x < hi && y >= lo && y < hi
+    for (_ <- 0 until 5000) {
+      val x = rnd.nextDouble() * 32; val y = rnd.nextDouble() * 32
+      val z = if (in(x, y, 11, 21)) 12.0 else if (in(x, y, 4, 28)) 8.0 else 0.2
+      pts += ((x, y, z + 0.04 * rnd.nextDouble()))
+    }
+    // one return at the bottom of the quantization range: the MIN grid
+    // holds present cells whose value is 0
+    pts += ((28.5, 3.5, graft.core.Quant.Offset))
+    val df = pts.toSeq.toDF("lon", "lat", "z")
+    val zeros = Gridding.minGrid(Gridding.points(df, spec)).filter(col("v") === 0).count()
+    assert(zeros > 0, "no present v = 0 cell in the MIN grid")
+
+    val p = assertTiledEqualsDense(df)
+    // the tower is a building, but its dz/2 group touches only roof cells
+    // (no ground neighbour), so G4 rejects it
+    val towerCells = (for (x <- 13L to 18L; y <- 13L to 18L) yield (x, y)).toSet
+    val cls = p.classification.collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
+    assert(towerCells.forall(c => cls(c) == p.ClsBuilding))
+    val labeled = p.buildingLabels.select("gx", "gy").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(labeled.nonEmpty, "the roof itself was dropped")
+    assert((towerCells & labeled).isEmpty, "the tower survived G4")
+  }
+
+  test("job budget per product accessor (one pinned task per product)") {
+    val sc = spark.sparkContext
+    val key = "graft.test.shr3dAccessor"
+    val jobs = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.synchronized {
+        Option(j.properties).flatMap(ps => Option(ps.getProperty(key)))
+          .foreach(a => jobs(a) += 1)
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val p = Shr3d.run(spark, scene, specCfg)
+      accessors(p).foreach { case (name, get) =>
+        sc.setLocalProperty(key, name)
+        try { val df = get(); if (name == "outlines") df.count() }
+        finally sc.setLocalProperty(key, null)
+      }
+      Bridge.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    // upper bounds: the two gridding aggregates each add a map stage to
+    // dsm and minGrid; every other product is its one task (the voidMask
+    // shares classifyGround's); outlines is the vectorizer's own plan
+    val budget = Map("dsm" -> 3, "minGrid" -> 3, "dsm2" -> 1, "min2" -> 1,
+      "classifyGround.dtm" -> 1, "classifyGround.voidMask" -> 0, "dtm" -> 1,
+      "classification" -> 1, "buildingLabels" -> 1, "outlines" -> 2)
+    val got = jobs.synchronized(budget.keys.map(k => k -> jobs(k)).toMap)
+    budget.foreach { case (name, max) =>
+      assert(got(name) <= max, s"$name ran ${got(name)} jobs, budget $max (all: $got)")
+    }
   }
 }

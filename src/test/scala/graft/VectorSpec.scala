@@ -32,6 +32,11 @@ class VectorSpec extends AnyFunSuite {
     assert(g.isValid && g.getArea == cells.size.toDouble)
   }
 
+  test("cells at negative coordinates trace like any other") {
+    val g = geom(Set((0L, 0L), (0L, -1L), (-2L, 3L)))
+    assert(g.isValid && g.getArea == 3.0 && g.getNumGeometries == 2)
+  }
+
   test("donut -> polygon with one hole") {
     val cells = (for (x <- 0L to 4L; y <- 0L to 4L
                       if !(x >= 1 && x <= 3 && y >= 1 && y <= 3) || (x, y) == ((2L, 2L))
