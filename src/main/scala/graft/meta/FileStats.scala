@@ -7,6 +7,7 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 
 /**
  * File-level min/max statistics for snapshot data files, read from
@@ -27,6 +28,10 @@ import org.apache.spark.sql.functions.col
  * is one embarrassingly parallel pass; the stats table itself is ~100
  * bytes per (file, column) and lives next to the manifest as
  * `_filestats/<id>` parquet.
+ *
+ * Reads plan on the driver too: [[readRange]] and [[emptyLike]] take
+ * the snapshot's schema from ONE data file's footer ([[schema]]) instead
+ * of letting Spark's parquet inference schedule a job to learn it.
  *
  * Only INT32/INT64 columns carry usable stats here (the engine's
  * cluster keys — cell ids, doc ids, quantized values — are all
@@ -60,6 +65,25 @@ object FileStats {
       import scala.jdk.CollectionConverters._
       reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
     } finally reader.close()
+  }
+
+  /** The Spark schema of snapshot directory `dataPath`, read on the
+    * driver from the footer of its first data file in path order — the
+    * one file Spark's parquet inference touches when it does not merge
+    * schemas (all files of a snapshot share one schema). So
+    * `spark.read.schema(schema(..))` plans what `spark.read.parquet`
+    * does, minus inference's Spark job. Read afresh on every call: a
+    * `snap-<id>` directory may be rewritten after a retracted or crashed
+    * commit, so the schema is never cached. A directory with no footer
+    * to read (missing, or no data file) goes to Spark's inference, which
+    * raises the error it always raised. */
+  def schema(spark: SparkSession, dataPath: String): StructType = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val first =
+      try dataFiles(conf, dataPath).headOption
+      catch { case _: java.io.FileNotFoundException => None }
+    first.map(org.apache.spark.sql.graftx.Bridge.parquetSchema(spark, conf, _))
+      .getOrElse(spark.read.parquet(dataPath).schema)
   }
 
   /** Footer stats of one file for the requested columns. Row count comes
@@ -179,7 +203,8 @@ object FileStats {
   /** Empty DataFrame with the parquet schema of `dataPath` (for a probe
     * whose range excludes every file). */
   def emptyLike(spark: SparkSession, dataPath: String): DataFrame =
-    spark.read.parquet(dataPath).where(org.apache.spark.sql.functions.lit(false))
+    spark.read.schema(schema(spark, dataPath)).parquet(dataPath)
+      .where(org.apache.spark.sql.functions.lit(false))
 
   /** Range-probe a snapshot directory through its file stats: read only
     * intersecting files, then apply the exact predicate (file pruning is
@@ -192,7 +217,7 @@ object FileStats {
     val kept = prunedFiles(stats, colName, lo, hi)
     val df =
       if (kept.isEmpty) emptyLike(spark, dataPath)
-      else spark.read.parquet(kept: _*)
+      else spark.read.schema(schema(spark, dataPath)).parquet(kept: _*)
     (df.where(col(colName) >= lo && col(colName) <= hi),
       PruneReport(total, kept.size))
   }

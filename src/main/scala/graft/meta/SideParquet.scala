@@ -4,14 +4,16 @@ import java.nio.file.{Files, Path}
 import java.nio.file.StandardCopyOption.{ATOMIC_MOVE, REPLACE_EXISTING}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.MessageType
 
 /** Small metadata side tables (`_metrics/<id>`, `_filestats/<id>`)
-  * written in-process as one plain parquet file, instead of scheduling a
-  * 1-task Spark job for O(partitions) or O(files) rows already in hand. */
+  * written and read in-process as plain parquet, instead of scheduling a
+  * Spark job for O(partitions) or O(files) rows the driver wrote itself. */
 private[graft] object SideParquet {
 
   /** Replace `dir/part-00000.parquet` with `rows`, one row per case-class
@@ -58,5 +60,24 @@ private[graft] object SideParquet {
     try stream.filter(p => p != target && p != crc(target))
       .forEach(p => Snapshots.deleteRecursively(p))
     finally stream.close()
+  }
+
+  /** Every row of every data file in `dir` (names not starting with `_`
+    * or `.`, in name order), mapped by `f` — the mirror of [[replace]].
+    * Reading all part files, not just `part-00000.parquet`, keeps the
+    * older multi-file `toDF().write.parquet` layout readable. */
+  def read[T](conf: Configuration, dir: Path)(f: Group => T): Seq[T] = {
+    import scala.jdk.CollectionConverters._
+    val stream = Files.list(dir)
+    val entries = try stream.iterator().asScala.toVector finally stream.close()
+    entries.filter { p =>
+      val n = p.getFileName.toString
+      Files.isRegularFile(p) && !n.startsWith("_") && !n.startsWith(".")
+    }.sortBy(_.getFileName.toString).flatMap { p =>
+      val r = ParquetReader.builder(new GroupReadSupport(), new HPath(p.toUri))
+        .withConf(conf).build()
+      try Iterator.continually(r.read()).takeWhile(_ != null).map(f).toVector
+      finally r.close()
+    }
   }
 }

@@ -12,14 +12,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *
  * Layout per table:
  *   root/<table>/snap-<id>/          parquet data
- *   root/<table>/_manifests/<id>.json  commit record (written via temp +
- *                                      atomic rename — a crash mid-write
- *                                      never yields a committed manifest)
+ *   root/<table>/_manifests/<id>.json  commit record (published by a
+ *                                      hard link from a complete temp
+ *                                      file — a crash mid-write never
+ *                                      yields a committed manifest)
  *
  * A stage is resumable when a committed manifest exists whose lineage
  * signature (the caller-supplied description of inputs + transform
  * version) matches; otherwise the stage recomputes and commits the next
  * snapshot id. Readers always see the highest committed id.
+ *
+ * Reads plan on the driver: a snapshot's schema comes from one data
+ * file's footer ([[FileStats.schema]]) and its side tables are read
+ * in-process ([[SideParquet.read]]), so building a reader's DataFrame
+ * schedules no Spark job — only the caller's action does.
  */
 object Snapshots {
 
@@ -184,7 +190,6 @@ object Snapshots {
       finally stream.close()
     }
 
-  /** Commit a manifest record atomically (temp file + atomic rename). */
   /** Publish a manifest with CREATE_NEW semantics: two committers that
     * both derived the same next snapshot id (latest+1) must not silently
     * last-write-win — on Linux ATOMIC_MOVE replaces an existing target,
@@ -227,11 +232,21 @@ object Snapshots {
     if (dirs.isEmpty) {
       import spark.implicits._
       Seq.empty[PartitionMetric].toDF()
-    } else spark.read.parquet(dirs: _*)
+    } else spark.read.schema(MetricsReadSchema).parquet(dirs: _*)
   }
 
+  /** [[MetricsSchema]] as Spark's parquet inference reads it back: the
+    * [[PartitionMetric]] fields with every field nullable. */
+  private lazy val MetricsReadSchema = {
+    import org.apache.spark.sql.types.StructType
+    StructType(org.apache.spark.sql.Encoders.product[PartitionMetric].schema
+      .map(_.copy(nullable = true)))
+  }
+
+  /** The committed snapshot `m`, with the schema of its first data
+    * file's footer ([[FileStats.schema]]). */
   def read(spark: SparkSession, m: Manifest): DataFrame =
-    spark.read.parquet(m.dataPath)
+    spark.read.schema(FileStats.schema(spark, m.dataPath)).parquet(m.dataPath)
 
   /** Time travel: the table state as of wall-clock `tsMs` — the highest
     * snapshot committed at or before that instant (None when the table
@@ -369,7 +384,8 @@ object Snapshots {
     val dataPath = Paths.get(root, table, s"snap-$id")
     val survivors =
       if (touched.isEmpty) None
-      else Some(spark.read.parquet(touched: _*).join(keys, keyCols, "left_anti"))
+      else Some(spark.read.schema(target.schema).parquet(touched: _*)
+        .join(keys, keyCols, "left_anti"))
     val written = (survivors, deleteMatched) match {
       case (None, true) => None // nothing matched, nothing to write
       case (Some(s), true) => Some(s)
@@ -492,16 +508,16 @@ object Snapshots {
   }
 
   /** The committed footer stats of snapshot `id` (empty if never
-    * indexed). */
+    * indexed), read on the driver. */
   def fileStats(spark: SparkSession, root: String, table: String,
                 id: Long): Seq[FileStats.FileStat] = {
     val dir = Paths.get(root, table, "_filestats", id.toString)
     if (!Files.isDirectory(dir)) Nil
-    else {
-      import spark.implicits._
-      spark.read.parquet(dir.toString).as[FileStats.FileStat]
-        .collect().toSeq.sortBy(s => (s.path, s.col))
-    }
+    else SideParquet.read(spark.sparkContext.hadoopConfiguration, dir) { g =>
+      FileStats.FileStat(g.getString("path", 0), g.getLong("rows", 0),
+        g.getString("col", 0), g.getLong("min", 0), g.getLong("max", 0),
+        g.getLong("nulls", 0), g.getBoolean("hasStats", 0))
+    }.sortBy(s => (s.path, s.col))
   }
 
   /** Key-range probe of the LATEST snapshot through its file-level

@@ -2,8 +2,9 @@ package graft
 
 import graft.core.Skew
 import graft.meta.{FileStats, Lineage, Snapshots}
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 class MetaSpec extends SparkSpec {
 
@@ -393,6 +394,129 @@ class MetaSpec extends SparkSpec {
     assert(expired.map(_.snapshotId) == Seq(0))
     assert(!Files.isDirectory(java.nio.file.Paths.get(root, "vf", "_filestats", "0")))
     assert(Snapshots.fileStats(spark, root, "vf", 1).nonEmpty)
+  }
+
+  // --- driver-side read planning (schema from one footer, side tables
+  // read in-process) ---
+
+  test("job budget of snapshot reads: planning launches no Spark job") {
+    import spark.implicits._
+    val root = tmpRoot
+    Snapshots.commitClustered(skipData, root, "jb", "v1",
+      orderCols = Seq("k"), statCols = Seq("k"), numFiles = 8)
+    val hit = skipData.select("k").as[Long].take(3)
+    val src = (hit.map(k => (k, -1)) :+ ((100001L, 7))).toSeq.toDF("k", "p")
+    val got = jobsPer(
+      "read" -> (() => Snapshots.read(spark, Snapshots.latest(root, "jb").get)),
+      "readPruned" -> (() => Snapshots.readPruned(spark, root, "jb", "k", 40000L, 52000L)),
+      "fileStats" -> (() => Snapshots.fileStats(spark, root, "jb", 0)),
+      "at.read" -> (() => Snapshots.read(spark, Snapshots.at(root, "jb", 0).get)),
+      "metrics" -> (() => Snapshots.metrics(spark, root, "jb")),
+      "readPruned.count" ->
+        (() => Snapshots.readPruned(spark, root, "jb", "k", 40000L, 52000L)._1.count()),
+      "merge" -> (() => Snapshots.merge(spark, root, "jb", src, Seq("k"))))
+    Seq("read", "readPruned", "fileStats", "at.read", "metrics").foreach { b =>
+      assert(got(b) == 0, s"$b ran ${got(b)} jobs (all: $got)")
+    }
+    // the scan and the final aggregate of count()
+    assert(got("readPruned.count") <= 2, s"all: $got")
+    // this upsert ran 13 jobs while the target and touched-file reads
+    // still inferred their schema (one job each)
+    assert(got("merge") <= 11, s"all: $got")
+  }
+
+  /** One row per `id` over every column type a snapshot carries, with
+    * nulls; `k` is the unique key, `tag` marks the generation. */
+  private def richRows(ids: DataFrame, tag: String): DataFrame = {
+    val id = col("id")
+    def nullEvery(n: Int, c: org.apache.spark.sql.Column) =
+      when(id % n === 0, lit(null)).otherwise(c)
+    ids.select(
+      id.as("k"),
+      nullEvery(7, concat(lit(s"$tag-"), id.cast("string"))).as("s"),
+      nullEvery(5, concat(lit(tag), id.cast("string")).cast("binary")).as("bin"),
+      nullEvery(3, (id % 13).cast("int")).as("i"),
+      nullEvery(4, id / 3.0).as("d"),
+      nullEvery(6, (id * 1.25).cast("decimal(12,3)")).as("dec"),
+      nullEvery(8, timestamp_seconds(id * 3600)).as("ts"),
+      nullEvery(9, id % 2 === 0).as("b"),
+      nullEvery(10, array(lit(tag), id.cast("string"))).as("arr"),
+      nullEvery(11, map(lit("n"), (id % 17).cast("int"))).as("m"),
+      nullEvery(12, struct((id % 5).cast("int").as("x"), lit(tag).as("y"))).as("st"))
+  }
+
+  test("snapshot reads equal schema inference: every commit kind, every column type") {
+    val root = tmpRoot
+    val t = "eq"
+    def byKey(df: DataFrame) = df.collect().sortBy(_.getAs[Long]("k")).toSeq
+    def checkSame(m: Snapshots.Manifest): Unit = {
+      val inferred = spark.read.parquet(m.dataPath)
+      val got = Snapshots.read(spark, m)
+      assert(got.schema == inferred.schema, s"${m.lineage}: schema")
+      assert(byKey(got) == byKey(inferred), s"${m.lineage}: rows")
+    }
+    def checkEmptyProbe(m: Snapshots.Manifest): Unit = {
+      val (df, rep) = Snapshots.readPruned(spark, root, t, "k", 1000000L, 2000000L)
+      assert(rep.keptFiles == 0 && rep.totalFiles > 1)
+      assert(df.schema == spark.read.parquet(m.dataPath).schema)
+      assert(df.count() == 0)
+    }
+    val m0 = Snapshots.commit(richRows(spark.range(120).toDF(), "a"), root, t, "v1")
+    val m1 = Snapshots.commitClustered(richRows(spark.range(120).toDF(), "b"), root, t,
+      "v2", orderCols = Seq("k"), statCols = Seq("k"), numFiles = 4)
+    checkEmptyProbe(m1)
+    // upsert touches the first file's keys (rewritten) and links the rest
+    val m2 = Snapshots.merge(spark, root, t,
+      richRows(spark.range(0, 6).union(spark.range(500, 503)).toDF(), "c"), Seq("k"))
+    val m3 = Snapshots.merge(spark, root, t,
+      spark.range(100, 104).toDF("k"), Seq("k"), deleteMatched = true)
+    def names(p: String) = new java.io.File(p).list().filter(_.endsWith(".parquet")).toSet
+    assert((names(m2.dataPath) & names(m1.dataPath)).nonEmpty)
+    assert((names(m2.dataPath) -- names(m1.dataPath)).nonEmpty)
+    assert((names(m3.dataPath) & names(m2.dataPath)).nonEmpty)
+    Snapshots.indexStats(spark, root, t, m3.snapshotId, Seq("k"))
+    checkEmptyProbe(m3)
+    val m4 = Snapshots.rollback(root, t, m2.snapshotId)
+    val m5 = Snapshots.compact(spark, root, t, targetFiles = 2)
+    Seq(m0, m1, m2, m3, m4, m5).foreach(checkSame)
+    assert(Snapshots.read(spark, m3).count() == 123 - 4)
+  }
+
+  test("old multi-file _filestats layout still reads; empty snapshot dir fails as before") {
+    import spark.implicits._
+    val root = tmpRoot
+    val m = Snapshots.commitClustered(skipData, root, "ol", "v1",
+      orderCols = Seq("k"), statCols = Seq("k", "p"), numFiles = 8)
+    val stats = Snapshots.fileStats(spark, root, "ol", m.snapshotId)
+    assert(stats.size == 16)
+    // the layout `toDF().write.parquet` left: several part files + _SUCCESS
+    val dir = Paths.get(root, "ol", "_filestats", m.snapshotId.toString)
+    stats.toDF().repartition(3).write.mode("overwrite").parquet(dir.toString)
+    val parts = new java.io.File(dir.toString).list()
+    assert(parts.count(_.startsWith("part-")) > 1 && parts.contains("_SUCCESS"))
+    assert(Snapshots.fileStats(spark, root, "ol", m.snapshotId) == stats)
+    // a snapshot directory with no data file: Spark's own inference error
+    val empty = Paths.get(root, "ol", "snap-99")
+    Files.createDirectories(empty)
+    val bare = m.copy(snapshotId = 99, dataPath = empty.toString)
+    intercept[AnalysisException](Snapshots.read(spark, bare))
+    intercept[AnalysisException](spark.read.parquet(empty.toString))
+  }
+
+  test("metrics reads with an explicit schema equal to inference") {
+    import spark.implicits._
+    val root = tmpRoot
+    Snapshots.commit(spark.range(400).repartition(4).toDF("id"), root, "mx", "l0")
+    Snapshots.commit(spark.range(10).repartition(2).toDF("id"), root, "mx", "l1")
+    // an old-layout id written by Spark itself
+    Seq(Snapshots.PartitionMetric(2, 0, 5L, 6L, 7L), Snapshots.PartitionMetric(2, 1, 8L, 9L, 10L))
+      .toDF().repartition(2).write.parquet(Paths.get(root, "mx", "_metrics", "2").toString)
+    val dirs = (0 to 2).map(i => Paths.get(root, "mx", "_metrics", i.toString).toString)
+    val inferred = spark.read.parquet(dirs: _*)
+    val got = Snapshots.metrics(spark, root, "mx")
+    assert(got.schema == inferred.schema)
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(got) == rows(inferred) && rows(got).size == 8)
   }
 
   test("DataQuality.audit: planted violations are counted exactly") {

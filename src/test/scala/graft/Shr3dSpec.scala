@@ -2,10 +2,8 @@ package graft
 
 import graft.api.Shr3d
 import graft.grid.Gridding
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftx.Bridge
 import org.locationtech.jts.geom.GeometryFactory
 import org.locationtech.jts.io.WKTReader
 
@@ -258,32 +256,16 @@ class Shr3dSpec extends SparkSpec {
   }
 
   test("job budget per product accessor (one pinned task per product)") {
-    val sc = spark.sparkContext
-    val key = "graft.test.shr3dAccessor"
-    val jobs = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.synchronized {
-        Option(j.properties).flatMap(ps => Option(ps.getProperty(key)))
-          .foreach(a => jobs(a) += 1)
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      val p = Shr3d.run(spark, scene, specCfg)
-      accessors(p).foreach { case (name, get) =>
-        sc.setLocalProperty(key, name)
-        try { val df = get(); if (name == "outlines") df.count() }
-        finally sc.setLocalProperty(key, null)
-      }
-      Bridge.drainListenerBus(sc)
-    } finally sc.removeSparkListener(listener)
+    val p = Shr3d.run(spark, scene, specCfg)
+    val got = jobsPer(accessors(p).map { case (name, get) =>
+      name -> (() => { val df = get(); if (name == "outlines") df.count() })
+    }: _*)
     // upper bounds: the two gridding aggregates each add a map stage to
     // dsm and minGrid; every other product is its one task (the voidMask
     // shares classifyGround's); outlines is the vectorizer's own plan
     val budget = Map("dsm" -> 3, "minGrid" -> 3, "dsm2" -> 1, "min2" -> 1,
       "classifyGround.dtm" -> 1, "classifyGround.voidMask" -> 0, "dtm" -> 1,
       "classification" -> 1, "buildingLabels" -> 1, "outlines" -> 2)
-    val got = jobs.synchronized(budget.keys.map(k => k -> jobs(k)).toMap)
     budget.foreach { case (name, max) =>
       assert(got(name) <= max, s"$name ran ${got(name)} jobs, budget $max (all: $got)")
     }

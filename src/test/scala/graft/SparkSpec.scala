@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftx.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for test suites. */
@@ -24,4 +26,28 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sfSmoke = "/root/testdata/sf0.001"
+
+  /** Spark jobs launched inside each labelled block, run in order: a
+    * listener keyed by a job-local property, read after draining the
+    * listener bus (the listener is asynchronous). */
+  def jobsPer(blocks: (String, () => Any)*): Map[String, Int] = {
+    val sc = spark.sparkContext
+    val key = "graft.test.jobBlock"
+    val jobs = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.synchronized {
+        Option(j.properties).flatMap(ps => Option(ps.getProperty(key)))
+          .foreach(b => jobs(b) += 1)
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      blocks.foreach { case (name, run) =>
+        sc.setLocalProperty(key, name)
+        try run() finally sc.setLocalProperty(key, null)
+      }
+      Bridge.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.synchronized(blocks.map { case (name, _) => name -> jobs(name) }.toMap)
+  }
 }
