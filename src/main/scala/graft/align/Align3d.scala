@@ -45,13 +45,7 @@ object Align3d {
 
   final case class Config(
       gsd: Double = 1.0, maxT: Double = 10.0, maxDzMeters: Double = 2.0,
-      numSamples: Int = 10000, sampleFactor: Int = 10, seed: Long = 0L,
-      /** true (default) = the reference's full 2D Newton peak step with
-        * the dxy cross term and no clamping (`align3d.cpp:168-184`);
-        * false = the legacy separable per-axis step that bails on
-        * non-convex curvature and clamps to ±0.5 (robust to degenerate
-        * fits, not reference-parity on tilted RMS surfaces). */
-      newtonInterp: Boolean = true)
+      numSamples: Int = 10000, sampleFactor: Int = 10, seed: Long = 0L)
 
   /** Reference-exact 3x3 Newton peak localization
     * (`align3d.cpp:168-184`): gradient + full Hessian including the dxy
@@ -70,18 +64,6 @@ object Align3d {
     val det = dxx * dyy - dxy * dxy
     if (det == 0.0) (0.0, 0.0)
     else (-(dyy * gx - dxy * gy) / det, -(dxx * gy - dxy * gx) / det)
-  }
-
-  /** Legacy separable peak step (config `newtonInterp = false`): per-axis
-    * quadratic, bails on non-convex curvature, clamps to ±0.5. */
-  def clampedPeak(f: (Int, Int) => Double): (Double, Double) = {
-    def clamp(v: Double): Double = math.max(-0.5, math.min(0.5, v))
-    val dxx = f(1, 0) - 2 * f(0, 0) + f(-1, 0)
-    val dyy = f(0, 1) - 2 * f(0, 0) + f(0, -1)
-    val dx1 = (f(1, 0) - f(-1, 0)) / 2.0
-    val dy1 = (f(0, 1) - f(0, -1)) / 2.0
-    if (dxx <= 0.0 || dyy <= 0.0) (0.0, 0.0)
-    else (clamp(-dx1 / dxx), clamp(-dy1 / dyy))
   }
 
   final case class GridRef(x0: Double, y0: Double, gsd: Double, w: Int, h: Int)
@@ -314,21 +296,12 @@ object Align3d {
 
     // 3x3 peak interpolation, only when the argmin is interior to the
     // offset lattice (the reference's `besti/bestj in (0, bins-1)`
-    // guard). Default: the reference-exact Newton step (newtonPeak) —
-    // offsets whose computeRMS gate failed contribute 0.0 exactly as
-    // the reference's zero-initialized rmsArray does. The legacy
-    // clamped separable step additionally requires all 9 neighbors to
-    // have passed the gate.
-    val (sx, sy) = {
+    // guard): the reference-exact Newton step (newtonPeak) — offsets
+    // whose computeRMS gate failed contribute 0.0 exactly as the
+    // reference's zero-initialized rmsArray does.
+    val (sx, sy) =
       if (math.abs(bdx) == maxSteps || math.abs(bdy) == maxSteps) (0.0, 0.0)
-      else if (cfg.newtonInterp)
-        newtonPeak((dx, dy) => rmsAt.getOrElse((bdx + dx, bdy + dy), 0L).toDouble)
-      else {
-        val need = for (dy <- -1 to 1; dx <- -1 to 1) yield (bdx + dx, bdy + dy)
-        if (!need.forall(rmsAt.contains)) (0.0, 0.0)
-        else clampedPeak((dx, dy) => rmsAt((bdx + dx, bdy + dy)).toDouble)
-      }
-    }
+      else newtonPeak((dx, dy) => rmsAt.getOrElse((bdx + dx, bdy + dy), 0L).toDouble)
 
     val tx = -(bdx + sx) * cfg.gsd
     val ty = -(bdy + sy) * cfg.gsd

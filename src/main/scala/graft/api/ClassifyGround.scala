@@ -4,7 +4,7 @@ import graft.cc.{ConnectedComponents, FillObjectBounds}
 import graft.pyramid.FillVoids
 import graft.stencil.{DenseGrid, Kernels, TileStencil}
 import graft.stencil.TileStencil.Bounds
-import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -43,26 +43,19 @@ object ClassifyGround {
 
   final case class Config(
       dzRaw: Int, dhBins: Int = 1, iterations: Int = 5,
-      maxCount: Long = 40000L, tileSize: Int = 64,
-      // strategy gate (like Spark's broadcast threshold): rasters up to
-      // this many lattice cells run the whole loop as ONE dense executor
-      // task — the reference's own working set fits one node, and ~40
-      // tiny Spark stages per iteration cost more than the raster;
-      // larger rasters take the tiled distributed path. Both paths are
-      // asserted equal in DtmSpec.
-      denseThreshold: Long = DenseGrid.Threshold)
+      maxCount: Long = 40000L, tileSize: Int = 64)
 
   final case class Result(dtm: DataFrame, voidMask: DataFrame)
 
+  /** The tiled distributed loop. Rasters up to [[DenseGrid.Threshold]]
+    * cells take the one-task strategy instead ([[denseRows]] inside a
+    * `DenseGrid.task`, then [[denseResult]]): the reference's own working
+    * set fits one node, and ~40 tiny Spark stages per iteration cost more
+    * than the raster. The caller picks (`Shr3d.Products`); both strategies
+    * are asserted equal in DtmSpec. */
   def run(minGrid: DataFrame /* gx, gy, v */,
           solidDsm: DataFrame /* gx, gy, v — DSM with tree cells voided */,
-          bounds: Bounds, cfg: Config): Result =
-    if (DenseGrid.fits(bounds, cfg.denseThreshold))
-      runDense(minGrid, solidDsm, bounds, cfg)
-    else runTiled(minGrid, solidDsm, bounds, cfg)
-
-  private def runTiled(minGrid: DataFrame, solidDsm: DataFrame,
-                       bounds: Bounds, cfg: Config): Result = {
+          bounds: Bounds, cfg: Config): Result = {
     val spark = minGrid.sparkSession
     import spark.implicits._
     val dz = cfg.dzRaw
@@ -93,7 +86,7 @@ object ClassifyGround {
         .select(col("gx"), col("gy"),
           col("v").bitwiseAND(lit(0x1FFFF)).cast("int").as("v"))
       // G2: dz-connected labels with the region cap (distributed — the
-      // dense/tiled choice is runTiled-vs-runDense's, made once above)
+      // dense/tiled choice is the caller's, made once for the whole loop)
       val labeled = ConnectedComponents.label(objCells, bounds, tile,
         maxDz = Some(dz), maxCount = Some(cfg.maxCount), denseThreshold = 0L)
       // G5: per-object interior fill -> this iteration's void cells
@@ -225,10 +218,4 @@ object ClassifyGround {
       pinned.filter(col("t") === 0).select(col("gx"), col("gy"), col("v")),
       pinned.filter(col("t") === 1).select(col("gx"), col("gy")))
   }
-
-  private def runDense(minGrid: DataFrame, solidDsm: DataFrame,
-                       bounds: Bounds, cfg: Config): Result =
-    denseResult(DenseGrid.task(Seq(minGrid, solidDsm), bounds) { g =>
-      denseRows(g(0), g(1), cfg)
-    }(Encoders.product[DenseGrid.Tagged]).toDF())
 }

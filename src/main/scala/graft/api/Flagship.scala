@@ -25,9 +25,7 @@ object Flagship {
 
   final case class FlagshipResult(
       docs: Long, dedupedDocs: Long, pipHits: Long, gridCells: Long,
-      gridChecksum: Long, keptContentChecksum: Long, seconds: Double) {
-    def docsPerSec: Double = docs / seconds
-  }
+      gridChecksum: Long, keptContentChecksum: Long, seconds: Double)
 
   /** Stage the generated table as parquet once (the stand-in for the
     * Iceberg Common-Crawl table); timed runs only read it. */

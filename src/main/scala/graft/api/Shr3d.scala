@@ -203,7 +203,7 @@ object Shr3d {
       * MIN and removes objects against the tree-voided DSM. */
     lazy val classifyGroundResult: ClassifyGround.Result = {
       val cgCfg = ClassifyGround.Config(dzRaw = dzRaw, dhBins = 1, iterations = 5,
-        maxCount = maxCount, tileSize = cfg.tileSize, denseThreshold = denseCells)
+        maxCount = maxCount, tileSize = cfg.tileSize)
       if (dense)
         // the tree-voided DSM is masked inside the task, not joined
         ClassifyGround.denseResult(DenseGrid.task(Seq(min2, dsm, dsm2), bounds) { g =>
@@ -235,18 +235,6 @@ object Shr3d {
             denseThreshold = denseCells).localCheckpoint()
         }
     }
-
-    /** Above-ground object cells via the single-pass classifyGround-style
-      * path (W13 -> W14 -> G2 -> G5 -> G4), see GroundObjects — kept as
-      * the cheap one-shot detector; the DTM itself uses the full
-      * 5-iteration loop. */
-    lazy val objectCells: DataFrame =
-      GroundObjects.acceptByGradient(
-        GroundObjects.detect(dsm, bounds,
-          GroundObjects.Config(dzRaw = dzRaw, tileSize = cfg.tileSize,
-            minRegionCells = cfg.minRegionCells, maxCount = maxCount,
-            denseThreshold = denseCells)),
-        dsm, dzRaw).localCheckpoint()
 
     final val ClsGround = 2
     final val ClsTree = 5

@@ -46,19 +46,17 @@ object ConnectedComponents {
   final case class Cell(gx: Long, gy: Long, v: Int)
   final case class Labeled(gx: Long, gy: Long, v: Int, lbl: Long)
 
-  /** Default strategy-gate size (lattice cells): grids below it label
-    * in ONE task (`DenseGrid.labels`, a single union-find sweep — a
-    * 722-cell raster should not pay tile shuffles + pointer-jump
-    * rounds); larger grids take the tiled distributed path. Both
-    * asserted equal in CcSpec. */
-  final val DefaultDenseThreshold: Long = DenseGrid.Threshold
-
   /** `diag = false` restricts adjacency to 4-connectivity (the
     * reference's BACKGROUND labeling in `Image.h:288-297` — holes are
-    * 4-connected while foreground objects are 8-connected). */
+    * 4-connected while foreground objects are 8-connected).
+    * `denseThreshold` is the strategy gate, in lattice cells: grids
+    * within it label in ONE task (`DenseGrid.labels`, a single
+    * union-find sweep — a 722-cell raster should not pay tile shuffles
+    * + pointer-jump rounds); larger grids take the tiled distributed
+    * path. Both asserted equal in CcSpec. */
   def label(cells: DataFrame, bounds: Bounds, tileSize: Int = 128,
             maxDz: Option[Int] = None, maxCount: Option[Long] = None,
-            denseThreshold: Long = DefaultDenseThreshold,
+            denseThreshold: Long = DenseGrid.Threshold,
             diag: Boolean = true): DataFrame = {
     val spark = cells.sparkSession
     import spark.implicits._

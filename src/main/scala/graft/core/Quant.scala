@@ -78,9 +78,6 @@ object Quant {
 
   /** DuckDB duals, with the fit parameters inlined as SQL expressions so
     * both engines execute the same IEEE double ops. */
-  def qSqlWith(z: String, offset: String, scale: String): String =
-    s"CAST(floor((($z) - ($offset)) / ($scale)) AS BIGINT)"
-
   def adjustScaleSql(v: String, fromOff: String, fromScale: String,
                      toOff: String, toScale: String): String =
     s"CASE WHEN ($v) = 0 THEN 0 ELSE CAST(floor(((($v) * ($fromScale) + ($fromOff)) - ($toOff)) / ($toScale)) AS BIGINT) END"

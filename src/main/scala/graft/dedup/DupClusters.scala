@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.stencil.DenseGrid
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -39,14 +40,6 @@ import org.apache.spark.sql.functions._
  */
 object DupClusters {
 
-  /** Strategy-gate size (edge rows): edge lists at or below it are
-    * labeled in ONE executor task (a single union-find sweep — 2 jobs
-    * instead of ~2 per propagation round), the same dense-strategy gate
-    * [[graft.cc.ConnectedComponents]] and [[graft.pyramid.FillVoids]]
-    * use; larger edge lists take the pointer-jumping loop. Both paths
-    * are asserted equal in DupClustersSpec. */
-  final val DefaultDenseThreshold: Long = 1L << 20
-
   /** Undirected connected components.
     *
     * @param edges     two-column DataFrame of node-id pairs (Long); self
@@ -55,10 +48,16 @@ object DupClusters {
     *                  throws rather than returning a half-merged
     *                  clustering (adversarial chains should use a bigger
     *                  bound, not silently wrong output)
+    * @param denseThreshold strategy gate, in edge rows: edge lists at or
+    *                  below it are labeled in ONE executor task (a single
+    *                  union-find sweep — 2 jobs instead of ~2 per
+    *                  propagation round); larger edge lists take the
+    *                  pointer-jumping loop. Both paths are asserted equal
+    *                  in DupClustersSpec
     * @return (id, cluster) with cluster = min node id reachable
     */
   def components(edges: DataFrame, maxRounds: Int = 50,
-                 denseThreshold: Long = DefaultDenseThreshold): DataFrame = {
+                 denseThreshold: Long = DenseGrid.Threshold): DataFrame = {
     val spark = edges.sparkSession
     val Seq(a, b) = edges.columns.toSeq
     // Pin the edge list ONCE: its lineage is often an expensive pair

@@ -1,5 +1,6 @@
 package graft.grid
 
+import graft.stencil.DenseGrid
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -36,19 +37,18 @@ object DistanceTransform {
     (-1L, -1L, 14L), (-1L, 0L, 10L), (-1L, 1L, 14L), (0L, -1L, 10L),
     (0L, 1L, 10L), (1L, -1L, 14L), (1L, 0L, 10L), (1L, 1L, 14L))
 
-  /** Strategy-gate size (occupied cells): grids at or below it run the
-    * transform as ONE executor task (a multi-source Dijkstra sweep — 2
-    * jobs instead of ~3 per Bellman-Ford round), the dense-strategy
-    * gate the CCL/pyramid/CC/resolve family uses; larger grids take the
-    * frontier loop. Both paths asserted equal in DistanceTransformSpec. */
-  final val DefaultDenseThreshold: Long = 1L << 20
-
   /** (gx, gy, d) for every occupied cell whose chamfer distance to the
     * nearest source is <= radius. `sources` rows not present in
-    * `cells` are ignored (a source must be an occupied cell). */
+    * `cells` are ignored (a source must be an occupied cell).
+    *
+    * `denseThreshold` is the strategy gate, in occupied cells: grids at
+    * or below it run the transform as ONE executor task (a multi-source
+    * Dijkstra sweep — 2 jobs instead of ~3 per Bellman-Ford round);
+    * larger grids take the frontier loop. Both paths asserted equal in
+    * DistanceTransformSpec. */
   def chamferWithin(cells: DataFrame, sources: DataFrame, radius: Long,
                     maxRounds: Int = 64,
-                    denseThreshold: Long = DefaultDenseThreshold): DataFrame = {
+                    denseThreshold: Long = DenseGrid.Threshold): DataFrame = {
     require(radius >= 0, "radius must be non-negative")
     val occ = cells.select("gx", "gy").localCheckpoint(eager = true)
     var dist = sources.select(col("gx"), col("gy"), lit(0L).as("d"))

@@ -1,6 +1,6 @@
 package graft.grid
 
-import graft.stencil.{Kernels, TileStencil}
+import graft.stencil.{DenseGrid, Kernels, TileStencil}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -55,16 +55,14 @@ object FlowBasins {
     * @param maxRounds doubling-round bound; 64 covers any path that fits
     *                  in a 2^63-row list, so hitting it means a bug, and
     *                  the loop throws instead of returning partial labels
+    * @param denseThreshold strategy gate, in pointer rows: lists at or
+    *                  below it resolve in ONE executor task (a memoized
+    *                  sequential walk — 2 jobs instead of ~2 per doubling
+    *                  round); larger lists take the doubling loop. Both
+    *                  paths are asserted equal in FlowSpec
     */
-  /** Strategy-gate size (pointer rows): lists at or below it resolve in
-    * ONE executor task (a memoized sequential walk — 2 jobs instead of
-    * ~2 per doubling round), the dense-strategy gate the CCL/pyramid
-    * family uses; larger lists take the doubling loop. Both paths are
-    * asserted equal in FlowSpec. */
-  final val DefaultDenseThreshold: Long = 1L << 20
-
   def resolve(next: DataFrame, maxRounds: Int = 64,
-              denseThreshold: Long = DefaultDenseThreshold): DataFrame = {
+              denseThreshold: Long = DenseGrid.Threshold): DataFrame = {
     var frontier = next.select(col("id").cast("long"), col("nid").cast("long"),
       col("w").cast("long")).localCheckpoint(eager = true)
     // the count reads the just-materialized blocks — no recompute

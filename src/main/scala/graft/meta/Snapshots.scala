@@ -1,7 +1,7 @@
 package graft.meta
 
 import java.nio.file.{Files, Path, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /**
  * Minimal Iceberg-style snapshot layer over Parquet (SURVEY.md §4.7):
@@ -215,7 +215,8 @@ object Snapshots {
   }
 
   /** The per-partition metrics metadata table across all committed
-    * snapshots of `table` (empty df if none recorded). */
+    * snapshots of `table` (an empty frame of the same schema if none
+    * recorded). */
   def metrics(spark: SparkSession, root: String, table: String): DataFrame = {
     val base = Paths.get(root, table, "_metrics")
     val dirs =
@@ -229,10 +230,9 @@ object Snapshots {
         } finally stream.close()
         out.toSeq
       }
-    if (dirs.isEmpty) {
-      import spark.implicits._
-      Seq.empty[PartitionMetric].toDF()
-    } else spark.read.schema(MetricsReadSchema).parquet(dirs: _*)
+    if (dirs.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), MetricsReadSchema)
+    else spark.read.schema(MetricsReadSchema).parquet(dirs: _*)
   }
 
   /** [[MetricsSchema]] as Spark's parquet inference reads it back: the

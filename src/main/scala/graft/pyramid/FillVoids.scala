@@ -63,14 +63,12 @@ object FillVoids {
       .agg(floor(sum("v") / count(lit(1))).cast("int").as("v"))
   }
 
-  /** Default strategy-gate size (lattice cells). */
-  final val DefaultDenseThreshold: Long = DenseGrid.Threshold
-
   /** Full pyramid fill. Returns the level-0 grid with voids filled
-    * (columns gx, gy, v). */
+    * (columns gx, gy, v). `denseThreshold` is the strategy gate in
+    * lattice cells (see the object doc). */
   def apply(cells: DataFrame, bounds: Bounds, noSmoothing: Boolean = false,
             maxLevel: Int = 32,
-            denseThreshold: Long = DefaultDenseThreshold): DataFrame = {
+            denseThreshold: Long = DenseGrid.Threshold): DataFrame = {
     val spark = cells.sparkSession
     import spark.implicits._
 

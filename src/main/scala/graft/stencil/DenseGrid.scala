@@ -82,7 +82,6 @@ final class DenseGrid(val w: Int, val h: Int) {
   /** One [[TileStencil]] pass with its exact contract: present cells are
     * evaluated, `nv == 0` drops the cell, absent neighbors read as 0. */
   def stencil(k: Kernel): DenseGrid = {
-    require(!k.writesVoids, "DenseGrid evaluates present cells only")
     val out = new DenseGrid(w, h)
     val get = (x: Int, y: Int) => vals(y * w + x)
     foreach { (i, _) =>
@@ -222,8 +221,11 @@ final class DenseGrid(val w: Int, val h: Int) {
 
 object DenseGrid {
 
-  /** The strategy gate: rasters up to this many lattice cells run as one
-    * task; larger ones take the tiled distributed paths. */
+  /** The one strategy gate: rasters up to this many lattice cells run as
+    * one task; larger ones take the tiled distributed paths. The
+    * row-counted gates (DistanceTransform's occupied cells, FlowBasins'
+    * pointer rows, DupClusters' edge rows) and RefTrace's default read
+    * the same size. */
   final val Threshold: Long = 1L << 20
 
   def fits(bounds: Bounds, threshold: Long = Threshold): Boolean =

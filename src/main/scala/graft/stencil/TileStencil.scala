@@ -29,16 +29,14 @@ import org.apache.spark.sql.functions._
  */
 object TileStencil {
 
-  /** A stencil kernel: computes the new value of a core cell.
+  /** A stencil kernel: computes the new value of a present core cell
+    * (void cells are never evaluated, so they stay void).
     * `get(x, y)` returns the value at global coords (0 = void/absent;
     * out-of-bounds coordinates must not be queried — the kernel sees the
     * grid bounds and must clamp its neighborhood like the reference
     * does, `Image.h:144-153`). Return 0 to void the cell. */
   trait Kernel extends Serializable {
     def radius: Int
-    /** Whether cells that are currently void can become non-void (if
-      * false, the engine only evaluates occupied cells — cheaper). */
-    def writesVoids: Boolean = false
     def apply(get: (Int, Int) => Int, x: Int, y: Int, w: Int, h: Int): Int
   }
 
@@ -96,29 +94,12 @@ object TileStencil {
         val zero: java.lang.Integer = 0
         def get(x: Int, y: Int): Int =
           local.getOrDefault((x.toLong << 32) | y.toLong, zero).intValue()
-        val x0 = (tx * t).toInt; val y0 = (ty * t).toInt
         val out = Array.newBuilder[Cell]
-        if (kernel.writesVoids) {
-          // evaluate every lattice position in the core tile
-          var y = math.max(y0, 0)
-          val yMax = math.min(y0 + t - 1, bounds.h - 1)
-          val xMax = math.min(x0 + t - 1, bounds.w - 1)
-          while (y <= yMax) {
-            var x = math.max(x0, 0)
-            while (x <= xMax) {
-              val nv = kernel(get, x, y, bounds.w, bounds.h)
-              if (nv != 0) out += Cell(x.toLong, y.toLong, nv)
-              x += 1
-            }
-            y += 1
-          }
-        } else {
-          cellsIn.foreach { c =>
-            // only core cells (not halo copies) are evaluated
-            if (c.gx / t == tx && c.gy / t == ty) {
-              val nv = kernel(get, c.gx.toInt, c.gy.toInt, bounds.w, bounds.h)
-              if (nv != 0) out += Cell(c.gx, c.gy, nv)
-            }
+        cellsIn.foreach { c =>
+          // only core cells (not halo copies) are evaluated
+          if (c.gx / t == tx && c.gy / t == ty) {
+            val nv = kernel(get, c.gx.toInt, c.gy.toInt, bounds.w, bounds.h)
+            if (nv != 0) out += Cell(c.gx, c.gy, nv)
           }
         }
         out.result().iterator

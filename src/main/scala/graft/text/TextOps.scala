@@ -45,9 +45,6 @@ object TextOps {
   val LangMarkers: Seq[(String, String)] = Seq(
     "en" -> "the", "de" -> "data", "fr" -> "query", "es" -> "table", "zh" -> "spark")
 
-  def markerScore(text: Column, marker: String): Column =
-    length(text) - length(regexp_replace(text, marker, ""))
-
   def langGuess(text: Column): Column = {
     val scores = LangMarkers.map { case (l, m) =>
       l -> (length(text) - length(replaceLit(text, m)))

@@ -1,6 +1,7 @@
 package graft.vector
 
 import graft.cc.ConnectedComponents
+import graft.stencil.DenseGrid
 import graft.stencil.TileStencil.Bounds
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -141,7 +142,7 @@ object RefTrace {
     * null wkt, as in [[Vectorize.outlines]]. */
   def refOutlines(mask: DataFrame, bounds: Bounds, tileSize: Int = 128,
                   maxCells: Long = Vectorize.DefaultMaxCells,
-                  denseThreshold: Long = ConnectedComponents.DefaultDenseThreshold): DataFrame =
+                  denseThreshold: Long = DenseGrid.Threshold): DataFrame =
     outlinesWith(mask, bounds, tileSize, maxCells, denseThreshold,
       (outer, inners) => Some(toWkt(outer, inners)))
 
@@ -165,7 +166,7 @@ object RefTrace {
   def refOutlinesSimplified(mask: DataFrame, bounds: Bounds, scale: Int = 36,
                             factor: Int = 3, tileSize: Int = 128,
                             maxCells: Long = Vectorize.DefaultMaxCells,
-                            denseThreshold: Long = ConnectedComponents.DefaultDenseThreshold): DataFrame = {
+                            denseThreshold: Long = DenseGrid.Threshold): DataFrame = {
     val spark = mask.sparkSession
     import spark.implicits._
     val deltas = (for { dy <- 0 until factor; dx <- 0 until factor }

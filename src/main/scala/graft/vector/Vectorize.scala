@@ -144,17 +144,6 @@ object Vectorize {
     Seq(ring)
   }
 
-  def signedArea2(ring: Vector[Pt]): Long = {
-    var s = 0L
-    var i = 0
-    while (i < ring.length) {
-      val a = ring(i); val b = ring((i + 1) % ring.length)
-      s += a._1 * b._2 - b._1 * a._2
-      i += 1
-    }
-    s
-  }
-
   /** Merge collinear runs (axis-aligned rings: drop middle points). */
   def mergeCollinear(ring: Vector[Double2]): Vector[Double2] = {
     if (ring.length < 3) return ring

@@ -1,7 +1,9 @@
 package graft
 
 import graft.api.ClassifyGround
+import graft.stencil.DenseGrid
 import graft.stencil.TileStencil.Bounds
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
 
 /** The reference DTM loop, pinned three ways: (1) exact equality with
@@ -32,10 +34,12 @@ class DtmSpec extends SparkSpec {
     (minG, solid)
   }
 
+  /** The tiled loop (`ClassifyGround.run`), or with `dense` the one-task
+    * strategy through the entry `Shr3d` uses below the gate. */
   private def runEngine(minG: Map[(Long, Long), Int],
                         solid: Map[(Long, Long), Int], w: Int, h: Int,
                         dz: Int, dh: Int, maxCount: Long, tile: Int,
-                        parts: Int, denseThreshold: Long = 0L)
+                        parts: Int, dense: Boolean = false)
   : (Map[(Long, Long), Int], Set[(Long, Long)]) = {
     import spark.implicits._
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -45,10 +49,15 @@ class DtmSpec extends SparkSpec {
         .toDF("gx", "gy", "v").repartition(parts)
       val solidDf = solid.toSeq.map { case ((x, y), v) => (x, y, v) }
         .toDF("gx", "gy", "v").repartition(parts)
-      val res = ClassifyGround.run(minDf, solidDf, Bounds(w, h),
-        ClassifyGround.Config(dzRaw = dz, dhBins = dh, iterations = 5,
-          maxCount = maxCount, tileSize = tile,
-          denseThreshold = denseThreshold))
+      val bounds = Bounds(w, h)
+      val cfg = ClassifyGround.Config(dzRaw = dz, dhBins = dh, iterations = 5,
+        maxCount = maxCount, tileSize = tile)
+      val res =
+        if (dense)
+          ClassifyGround.denseResult(DenseGrid.task(Seq(minDf, solidDf), bounds) { g =>
+            ClassifyGround.denseRows(g(0), g(1), cfg)
+          }(Encoders.product[DenseGrid.Tagged]).toDF())
+        else ClassifyGround.run(minDf, solidDf, bounds, cfg)
       val dtm = res.dtm.collect()
         .map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
       val mask = res.voidMask.collect()
@@ -87,15 +96,15 @@ class DtmSpec extends SparkSpec {
     val (w, h) = (44, 36)
     val (minG, solid) = scene(w, h, seed = 51)
     val tiled = runEngine(minG, solid, w, h, 900, 1, 100000L, tile = 16,
-      parts = 4, denseThreshold = 0L)
+      parts = 4)
     val dense = runEngine(minG, solid, w, h, 900, 1, 100000L, tile = 16,
-      parts = 4, denseThreshold = Long.MaxValue)
+      parts = 4, dense = true)
     assert(dense == tiled, "strategy gate changes the product")
     // and with chunking engaged
     val tiled2 = runEngine(minG, solid, w, h, 900, 2, 60L, tile = 8,
-      parts = 4, denseThreshold = 0L)
+      parts = 4)
     val dense2 = runEngine(minG, solid, w, h, 900, 2, 60L, tile = 8,
-      parts = 4, denseThreshold = Long.MaxValue)
+      parts = 4, dense = true)
     assert(dense2 == tiled2)
   }
 

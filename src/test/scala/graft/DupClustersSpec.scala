@@ -1,6 +1,7 @@
 package graft
 
 import graft.dedup.DupClusters
+import graft.stencil.DenseGrid
 import org.apache.spark.sql.functions._
 
 class DupClustersSpec extends SparkSpec {
@@ -24,7 +25,7 @@ class DupClustersSpec extends SparkSpec {
   }
 
   private def run(edges: Seq[(Long, Long)], maxRounds: Int = 50,
-                  denseThreshold: Long = DupClusters.DefaultDenseThreshold)
+                  denseThreshold: Long = DenseGrid.Threshold)
       : Map[Long, Long] = {
     import spark.implicits._
     DupClusters.components(edges.toDF("a", "b").repartition(9), maxRounds,

@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.Skew
-import graft.meta.{FileStats, Lineage, Snapshots}
+import graft.meta.{FileStats, Snapshots}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
@@ -196,20 +196,6 @@ class MetaSpec extends SparkSpec {
     assert(r3 && df.collect().map(_.toSeq).toSeq == Seq(Seq(1, 10)))
   }
 
-  test("partition lineage metrics reach the metrics table") {
-    import spark.implicits._
-    val root = tmpRoot
-    val df = Lineage.instrument(
-      spark.range(1000).repartition(8).toDF("id"), "stage-x")
-    assert(df.count() == 1000)
-    val m = Lineage.flush(spark, root)
-    assert(m.isDefined)
-    val metrics = Snapshots.read(spark, m.get)
-    assert(metrics.filter(col("stage") === "stage-x").count() == 8)
-    val rowsSum = metrics.agg(sum("rows")).head().getLong(0)
-    assert(rowsSum == 1000)
-  }
-
   test("snapshot commit records per-partition write metrics with latency") {
     import spark.implicits._
     val root = tmpRoot
@@ -225,6 +211,16 @@ class MetaSpec extends SparkSpec {
     val all = Snapshots.metrics(spark, root, "wm")
     assert(all.select("snapshotId").distinct().count() == 2)
     assert(all.count() == 5)
+  }
+
+  test("metrics of a table with no _metrics has the schema of one with metrics") {
+    val root = tmpRoot
+    Snapshots.commit(spark.range(40).repartition(2).toDF("id"), root, "wm", "l")
+    val recorded = Snapshots.metrics(spark, root, "wm")
+    val none = Snapshots.metrics(spark, root, "never-committed")
+    assert(none.isEmpty)
+    assert(none.schema == recorded.schema,
+      s"${none.schema.treeString} vs ${recorded.schema.treeString}")
   }
 
   test("side-table writes are atomic: a row source failing mid-write keeps the old file") {

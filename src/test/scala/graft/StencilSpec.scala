@@ -17,14 +17,11 @@ class StencilSpec extends SparkSpec {
   }
 
   /** Direct dense evaluation: kernel applied cell-by-cell, no tiling. */
-  private def dense(cells: Seq[(Long, Long, Int)], k: Kernel, b: Bounds,
-                    all: Boolean): Seq[(Long, Long, Int)] = {
+  private def dense(cells: Seq[(Long, Long, Int)], k: Kernel,
+                    b: Bounds): Seq[(Long, Long, Int)] = {
     val m = cells.map(c => (c._1, c._2) -> c._3).toMap
     def get(x: Int, y: Int): Int = m.getOrElse((x.toLong, y.toLong), 0)
-    val coords =
-      if (all) for (y <- 0 until b.h; x <- 0 until b.w) yield (x.toLong, y.toLong)
-      else cells.map(c => (c._1, c._2))
-    coords.flatMap { case (x, y) =>
+    cells.flatMap { case (x, y, _) =>
       val v = k(get, x.toInt, y.toInt, b.w, b.h)
       if (v != 0) Some((x, y, v)) else None
     }
@@ -52,7 +49,7 @@ class StencilSpec extends SparkSpec {
       val df = cells.toDF("gx", "gy", "v").repartition(5)
       val got = TileStencil(df, k, b, tileSize = tile)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
-      val want = dense(cells, k, b, all = k.writesVoids).sorted
+      val want = dense(cells, k, b).sorted
       assert(got == want, s"${got.size} vs ${want.size} cells")
     }
   }
@@ -69,7 +66,7 @@ class StencilSpec extends SparkSpec {
       val df = cells.toDF("gx", "gy", "v").repartition(5)
       val got = TileStencil(df, k, b, tileSize = tile)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
-      assert(got == dense(cells, k, b, all = false).sorted)
+      assert(got == dense(cells, k, b).sorted)
     }
   }
 
