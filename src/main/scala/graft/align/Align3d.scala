@@ -16,6 +16,8 @@ import org.apache.spark.sql.functions._
  * Pipeline (L1-L6), Spark-first:
  *  1. grid both point sets to DSMs on a shared local grid (A1 max),
  *     fill voids (pyramid, noSmoothing, 2 levels), trim edges (W6);
+ *     below the dense gate each DSM is one task that folds its points
+ *     straight into the lattice (`DenseGrid.accumulate`), no shuffle;
  *  2. overlap rectangle of the two grids (metadata only);
  *  3. seeded MT19937-64 samples over the overlap, generated ON THE
  *     DRIVER (determinism) and broadcast;
@@ -77,23 +79,26 @@ object Align3d {
     prepGrid(pts, ref, cfg, DenseGrid.Threshold)
 
   /** [[prepGrid]] with the strategy gate `denseCells` (0 forces the tiled
-    * path): below it, fill and edge filter run as one task over the
-    * gridding aggregate. */
+    * path): below it, the max fold, fill and edge filter run as one
+    * task over the points; above it, a per-cell max aggregate feeds the
+    * tiled fill and stencil. */
   private[graft] def prepGrid(pts: DataFrame, ref: GridRef, cfg: Config,
                               denseCells: Long): DataFrame = {
-    val cells = pts
-      .withColumn("gx", floor((col("x") - lit(ref.x0)) / lit(ref.gsd)).cast("long"))
-      .withColumn("gy", floor((col("y") - lit(ref.y0)) / lit(ref.gsd)).cast("long"))
-      .filter(col("gx") >= 0 && col("gx") < ref.w && col("gy") >= 0 && col("gy") < ref.h)
-      .withColumn("qz", Quant.q(col("z")))
-      .groupBy("gx", "gy").agg(max("qz").as("v"))
+    val base = pts
+      .select(floor((col("x") - lit(ref.x0)) / lit(ref.gsd)).cast("long").as("bx"),
+        floor((col("y") - lit(ref.y0)) / lit(ref.gsd)).cast("long").as("by"),
+        Quant.q(col("z")).as("qz"))
+      .filter(col("bx") >= 0 && col("bx") < ref.w && col("by") >= 0 && col("by") < ref.h)
     val bounds = Bounds(ref.w, ref.h)
     val edgeK = Kernels.EdgeFilter(math.max(1, math.floor(cfg.maxDzMeters / Quant.Scale).toInt))
     if (DenseGrid.fits(bounds, denseCells))
-      DenseGrid.grid(Seq(cells), bounds)(_(0).fill(noSmoothing = true, maxLevel = 2).stencil(edgeK))
-    else
+      DenseGrid.grid(Seq(DenseGrid.accumulate(base, bounds, math.max, splat = false)), bounds)(
+        _(0).fill(noSmoothing = true, maxLevel = 2).stencil(edgeK))
+    else {
+      val cells = base.groupBy(col("bx").as("gx"), col("by").as("gy")).agg(max("qz").as("v"))
       TileStencil(FillVoids(cells, bounds, noSmoothing = true, maxLevel = 2,
         denseThreshold = denseCells), edgeK, bounds)
+    }
   }
 
   def gridFor(pts: DataFrame, cfg: Config): GridRef = {

@@ -4,6 +4,7 @@ import graft.grid.Gridding
 import graft.index.CellFunctions
 import graft.ingest.WebPages
 import graft.join.{Aoi, SpatialJoins}
+import graft.meta.FileStats
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -41,13 +42,15 @@ object Flagship {
     path
   }
 
+  /** The geocoded pages of a staged parquet directory. The schema comes
+    * from one footer on the driver, so planning runs no Spark job. */
   def geocodedFromParquet(spark: SparkSession, path: String): DataFrame =
-    geocodedFrom(spark.read.parquet(path))
+    geocodedFrom(spark.read.schema(FileStats.schema(spark, path)).parquet(path))
 
   def geocoded(spark: SparkSession, nDocs: Long): DataFrame =
     geocodedFrom(WebPages.generate(spark, nDocs).toDF())
 
-  private def geocodedFrom(pagesIn: DataFrame): DataFrame = {
+  private[graft] def geocodedFrom(pagesIn: DataFrame): DataFrame = {
     // content hash = xxhash64, not md5: both are engine-internal dedup
     // tie-breaks, but xxhash64 is whole-stage-codegen'd and ~10x faster
     // over the ~3 KB text payloads that dominate this scan (the hash is

@@ -26,10 +26,12 @@ import org.apache.spark.sql.functions._
  * Execution: one task per product below 2^20 cells (the dense gate,
  * `DenseGrid.Threshold`). A product's whole operator chain runs over
  * one in-memory raster (`DenseGrid.task`, entered with `coalesce(1)`
- * over pinned products or aggregate outputs), then the result is
- * pinned. Larger rasters take the tiled distributed path (TileStencil
- * passes, the distributed pyramid and CCL); both are asserted equal in
- * Shr3dSpec.
+ * over pinned products), then the result is pinned. The DSM and MIN
+ * chains start from the points: `DenseGrid.accumulate` folds them into
+ * the lattice in the same task, so no product below the gate runs a
+ * gridding shuffle. Larger rasters take the tiled distributed path
+ * (the `Gridding` aggregates, TileStencil passes, the distributed
+ * pyramid and CCL); both are asserted equal in Shr3dSpec.
  */
 object Shr3d {
 
@@ -99,14 +101,14 @@ object Shr3d {
 
     /** DSM at build scale: max-grid -> despike (quantile + well) -> fill. */
     private lazy val dsmStd: DataFrame = {
-      val a1 = Gridding.dsm(gridded)
       val (quantK, wellK) =
         (Kernels.QuantileFilter(1, 0.4, buildAglRaw), Kernels.WellFilter(buildAglRaw))
       if (dense)
-        DenseGrid.grid(Seq(a1), bounds)(_(0).stencil(quantK).stencil(wellK)
-          .fill(noSmoothing = false)).localCheckpoint()
+        DenseGrid.grid(Seq(DenseGrid.accumulate(gridded, bounds, math.max, splat = true)),
+          bounds)(_(0).stencil(quantK).stencil(wellK).fill(noSmoothing = false))
+          .localCheckpoint()
       else {
-        val q = TileStencil(a1, quantK, bounds, cfg.tileSize)
+        val q = TileStencil(Gridding.dsm(gridded), quantK, bounds, cfg.tileSize)
         val wl = TileStencil(q, wellK, bounds, cfg.tileSize)
         FillVoids(wl, bounds, noSmoothing = false, denseThreshold = denseCells)
           .localCheckpoint()
@@ -130,7 +132,8 @@ object Shr3d {
       * (`t = 1`, the MIN product before any prior) from one task. */
     private lazy val minStages: DataFrame = {
       val quantK = minQuantK
-      DenseGrid.grids(Seq(Gridding.minGrid(gridded)), bounds) { g =>
+      DenseGrid.grids(Seq(DenseGrid.accumulate(gridded, bounds, math.min, splat = true)),
+          bounds) { g =>
         val filtered = g(0).stencil(quantK)
         Seq(filtered, filtered.fill(noSmoothing = false))
       }.localCheckpoint()

@@ -18,6 +18,12 @@ import org.apache.spark.sql.functions._
  * shuffle), the accumulation a hash aggregate with map-side partial
  * combine — at 100 TB this is one shuffle keyed by (gx, gy), and AQE
  * coalesces/splits post-shuffle partitions. No driver-side state.
+ *
+ * That is the path for grids above the dense gate and for callers with
+ * no lattice bounds (the queries, the flagship). SHR3D and ALIGN3D
+ * grids below the gate fold their points straight into the lattice
+ * instead (`DenseGrid.accumulate`, the same rows), in the task of the
+ * product chain that consumes them.
  */
 object Gridding {
 

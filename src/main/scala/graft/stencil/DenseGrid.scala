@@ -6,10 +6,11 @@ import org.apache.spark.sql.functions._
 
 /**
  * One in-memory raster of a single executor task: the dense strategy of
- * every sub-gate raster operator (stencils, the void-fill pyramid, CC
- * labels, the G4 accept test), evaluated the way the reference evaluates
- * its memoized `getX()` products — one pass over one image
- * (`shr3d.h:153-172`) instead of one Spark job per operator.
+ * every sub-gate raster operator (point accumulation, stencils, the
+ * void-fill pyramid, CC labels, the G4 accept test), evaluated the way
+ * the reference evaluates its memoized `getX()` products — one pass
+ * over one image (`shr3d.h:153-172`) instead of one Spark job per
+ * operator.
  *
  * The grid is the `w x h` lattice of a sparse `(gx, gy, v)` cell table.
  * Occupancy is kept apart from the value, so a present `v = 0` cell is
@@ -19,7 +20,10 @@ import org.apache.spark.sql.functions._
  * [[DenseGrid.task]] runs a function of several such grids as ONE task:
  * the input tables are tag-unioned and entered with `coalesce(1)`, so a
  * chain over pinned products or aggregate outputs adds no exchange of
- * its own. Rasters above [[DenseGrid.Threshold]] cells keep their tiled
+ * its own. [[DenseGrid.accumulate]] folds raw points into such a table
+ * in one task of the same kind, so a chain that starts from points
+ * (the SHR3D DSM and MIN grids, the ALIGN3D DSMs) is one task too.
+ * Rasters above [[DenseGrid.Threshold]] cells keep their tiled
  * distributed paths.
  */
 final class DenseGrid(val w: Int, val h: Int) {
@@ -233,6 +237,8 @@ object DenseGrid {
 
   final case class Cell(gx: Long, gy: Long, v: Int)
   final case class Tagged(t: Int, gx: Long, gy: Long, v: Int)
+  /** A quantized point on its base cell, the input of [[accumulate]]. */
+  final case class Point(bx: Long, by: Long, qz: Long)
 
   // smoothing fill-down weights: center 4, cross 2, diagonal 1
   private val SmoothDx = Array(-1, 0, 1, -1, 0, 1, -1, 0, 1)
@@ -263,6 +269,53 @@ object DenseGrid {
         }
         f(grids)
       }
+  }
+
+  /** Folds quantized points `(bx, by, qz)` into a `(gx, gy, v)` table on
+    * the `bounds` lattice, the reference's fold of points into a dense
+    * image (`orthoimage.h:372-420`, A1): per cell, `pick` (`math.max`
+    * for a DSM, `math.min` for a MIN grid) over the `qz` of every point
+    * that lands on it. With `splat` a point lands on the 2x2 block
+    * `[bx..bx+1] x [by..by+1]`, else on its base cell. The rows equal
+    * [[graft.grid.Gridding.dsm]]'s (`minGrid`'s), or the per-cell
+    * aggregate without the splat: null `qz` rows are skipped as
+    * `max`/`min` skip them, `v` stays the long the consumer casts, and a
+    * landed cell outside the lattice is the error [[task]] raises.
+    *
+    * One task entered with `coalesce(1)`: it streams its input and holds
+    * only the lattice (`w * h` longs plus the occupancy), and its output
+    * is a narrow input of [[task]], so a product chain over the fold is
+    * one task and one job with no exchange. */
+  def accumulate(points: DataFrame, bounds: Bounds, pick: (Long, Long) => Long,
+                 splat: Boolean): DataFrame = {
+    val spark = points.sparkSession
+    import spark.implicits._
+    val w = bounds.w; val h = bounds.h
+    val reach = if (splat) 2 else 1
+    points.filter(col("qz").isNotNull)
+      .select(col("bx").cast("long"), col("by").cast("long"), col("qz").cast("long"))
+      .as(Encoders.product[Point])
+      .coalesce(1)
+      .mapPartitions { it =>
+        val acc = new Array[Long](w * h)
+        val occ = new java.util.BitSet(w * h)
+        it.foreach { p =>
+          var gy = p.by
+          while (gy < p.by + reach) {
+            var gx = p.bx
+            while (gx < p.bx + reach) {
+              require(gx >= 0 && gx < w && gy >= 0 && gy < h,
+                s"cell ($gx, $gy) outside the ${w}x$h raster")
+              val i = gy.toInt * w + gx.toInt
+              if (occ.get(i)) acc(i) = pick(acc(i), p.qz) else { acc(i) = p.qz; occ.set(i) }
+              gx += 1
+            }
+            gy += 1
+          }
+        }
+        Iterator.iterate(occ.nextSetBit(0))(i => occ.nextSetBit(i + 1)).takeWhile(_ >= 0)
+          .map(i => ((i % w).toLong, (i / w).toLong, acc(i)))
+      }.toDF("gx", "gy", "v")
   }
 
   /** [[task]] producing one grid: a `(gx, gy, v)` table. */

@@ -218,6 +218,19 @@ class AlignSpec extends SparkSpec {
     assert(dense.nonEmpty && dense == rows(0L))
   }
 
+  test("job budget: Align3d.stage below the dense gate") {
+    val (ref, tgt) = tiledScene(3.0, -2.0, 0.5)
+    val cfg = Align3d.Config(gsd = 1.0, maxT = 4.0, numSamples = 2000)
+    var st: Align3d.Staged = null
+    val jobs = jobsPer("stage" -> (() => st = Align3d.stage(spark, ref, tgt, cfg)))
+    try {
+      // the grid-bounds and overlap aggregates only: each DSM's fold, fill
+      // and edge filter is one task inside the overlap query (the two
+      // per-cell max aggregates it replaced made it 7)
+      assert(jobs("stage") <= 5, s"Align3d.stage ran ${jobs("stage")} jobs, budget 5")
+    } finally { st.refDsm.unpersist(); st.tgtDsm.unpersist() }
+  }
+
   test("offsetStats == brute-force first-N reference across tiles (1 and 7 partitions)") {
     val (ref, tgt) = tiledScene(3.0, -2.0, 0.5)
     val cfg = Align3d.Config(gsd = 1.0, maxT = 4.0, numSamples = 2000)

@@ -25,4 +25,24 @@ class FlagshipSpec extends SparkSpec {
     assert(plan.contains("text"), s"text pruned from scan:\n$plan")
     assert(plan.contains("warc_ts"), "warc_ts pruned from scan")
   }
+
+  test("geocodedFromParquet reads the footer schema: same schema and rows, one job fewer") {
+    import org.apache.spark.sql.DataFrame
+    val path = Flagship.stageInput(spark, 20000)
+    var inferred, footer: DataFrame = null
+    var inferredRows, footerRows: Seq[String] = Nil
+    def rows(df: DataFrame) = df.collect().map(_.mkString(",")).sorted.toSeq
+    val jobs = jobsPer(
+      "inferred" -> (() => {
+        inferred = Flagship.geocodedFrom(spark.read.parquet(path))
+        inferredRows = rows(inferred)
+      }),
+      "footer" -> (() => {
+        footer = Flagship.geocodedFromParquet(spark, path)
+        footerRows = rows(footer)
+      }))
+    assert(footer.schema == inferred.schema)
+    assert(footerRows.nonEmpty && footerRows == inferredRows)
+    assert(jobs("footer") == jobs("inferred") - 1, s"jobs $jobs")
+  }
 }

@@ -67,8 +67,7 @@ class GroundSpec extends SparkSpec {
     }).toDF("gx", "gy", "v")
     def run(threshold: Long) =
       graft.api.GroundObjects.detect(dsm, b,
-          graft.api.GroundObjects.Config(tileSize = 8,
-            denseThreshold = threshold))
+          graft.api.GroundObjects.Config(tileSize = 8), threshold)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(run(1L << 20) === run(0L))
   }

@@ -260,10 +260,10 @@ class Shr3dSpec extends SparkSpec {
     val got = jobsPer(accessors(p).map { case (name, get) =>
       name -> (() => { val df = get(); if (name == "outlines") df.count() })
     }: _*)
-    // upper bounds: the two gridding aggregates each add a map stage to
-    // dsm and minGrid; every other product is its one task (the voidMask
-    // shares classifyGround's); outlines is the vectorizer's own plan
-    val budget = Map("dsm" -> 3, "minGrid" -> 3, "dsm2" -> 1, "min2" -> 1,
+    // upper bounds: every product is its one task — dsm and minGrid fold
+    // their points into the lattice inside it (no gridding shuffle); the
+    // voidMask shares classifyGround's; outlines is the vectorizer's own plan
+    val budget = Map("dsm" -> 1, "minGrid" -> 1, "dsm2" -> 1, "min2" -> 1,
       "classifyGround.dtm" -> 1, "classifyGround.voidMask" -> 0, "dtm" -> 1,
       "classification" -> 1, "buildingLabels" -> 1, "outlines" -> 2)
     budget.foreach { case (name, max) =>
