@@ -74,16 +74,11 @@ object Align3d {
       tx: Double, ty: Double, tz: Double, rmsMeters: Double,
       completeness: Double, nValid: Long, bestDx: Int, bestDy: Int)
 
-  /** Quantized DSM over a local grid derived from the point bounds. */
-  def prepGrid(pts: DataFrame, ref: GridRef, cfg: Config): DataFrame =
-    prepGrid(pts, ref, cfg, DenseGrid.Threshold)
-
-  /** [[prepGrid]] with the strategy gate `denseCells` (0 forces the tiled
-    * path): below it, the max fold, fill and edge filter run as one
-    * task over the points; above it, a per-cell max aggregate feeds the
-    * tiled fill and stencil. */
-  private[graft] def prepGrid(pts: DataFrame, ref: GridRef, cfg: Config,
-                              denseCells: Long): DataFrame = {
+  /** Quantized DSM over a local grid derived from the point bounds.
+    * Within the strategy gate (`DenseGrid.fits`), the max fold, fill and
+    * edge filter run as one task over the points; above it, a per-cell
+    * max aggregate feeds the tiled fill and stencil. */
+  def prepGrid(pts: DataFrame, ref: GridRef, cfg: Config): DataFrame = {
     val base = pts
       .select(floor((col("x") - lit(ref.x0)) / lit(ref.gsd)).cast("long").as("bx"),
         floor((col("y") - lit(ref.y0)) / lit(ref.gsd)).cast("long").as("by"),
@@ -91,13 +86,12 @@ object Align3d {
       .filter(col("bx") >= 0 && col("bx") < ref.w && col("by") >= 0 && col("by") < ref.h)
     val bounds = Bounds(ref.w, ref.h)
     val edgeK = Kernels.EdgeFilter(math.max(1, math.floor(cfg.maxDzMeters / Quant.Scale).toInt))
-    if (DenseGrid.fits(bounds, denseCells))
+    if (DenseGrid.fits(pts.sparkSession, bounds))
       DenseGrid.grid(Seq(DenseGrid.accumulate(base, bounds, math.max, splat = false)), bounds)(
         _(0).fill(noSmoothing = true, maxLevel = 2).stencil(edgeK))
     else {
       val cells = base.groupBy(col("bx").as("gx"), col("by").as("gy")).agg(max("qz").as("v"))
-      TileStencil(FillVoids(cells, bounds, noSmoothing = true, maxLevel = 2,
-        denseThreshold = denseCells), edgeK, bounds)
+      TileStencil(FillVoids(cells, bounds, noSmoothing = true, maxLevel = 2), edgeK, bounds)
     }
   }
 

@@ -47,12 +47,13 @@ object ClassifyGround {
 
   final case class Result(dtm: DataFrame, voidMask: DataFrame)
 
-  /** The tiled distributed loop. Rasters up to [[DenseGrid.Threshold]]
-    * cells take the one-task strategy instead ([[denseRows]] inside a
+  /** The tiled distributed loop. Rasters within `DenseGrid.fits` take
+    * the one-task strategy instead ([[denseRows]] inside a
     * `DenseGrid.task`, then [[denseResult]]): the reference's own working
     * set fits one node, and ~40 tiny Spark stages per iteration cost more
-    * than the raster. The caller picks (`Shr3d.Products`); both strategies
-    * are asserted equal in DtmSpec. */
+    * than the raster. The caller picks (`Shr3d.Products`); the loop's
+    * fills and labelings gate on the same bounds, so they follow that
+    * choice. Both strategies are asserted equal in DtmSpec. */
   def run(minGrid: DataFrame /* gx, gy, v */,
           solidDsm: DataFrame /* gx, gy, v — DSM with tree cells voided */,
           bounds: Bounds, cfg: Config): Result = {
@@ -61,8 +62,7 @@ object ClassifyGround {
     val dz = cfg.dzRaw
     val tile = cfg.tileSize
 
-    var dtm = FillVoids(minGrid, bounds, noSmoothing = true,
-      denseThreshold = 0L).localCheckpoint()
+    var dtm = FillVoids(minGrid, bounds, noSmoothing = true).localCheckpoint()
     var voidMask = Seq.empty[(Long, Long)].toDF("gx", "gy").localCheckpoint()
     var maskCount = 0L
     var converged = false
@@ -85,10 +85,9 @@ object ClassifyGround {
         .filter(shiftrightunsigned(col("v").cast("long"), 17) === 1)
         .select(col("gx"), col("gy"),
           col("v").bitwiseAND(lit(0x1FFFF)).cast("int").as("v"))
-      // G2: dz-connected labels with the region cap (distributed — the
-      // dense/tiled choice is the caller's, made once for the whole loop)
+      // G2: dz-connected labels with the region cap
       val labeled = ConnectedComponents.label(objCells, bounds, tile,
-        maxDz = Some(dz), maxCount = Some(cfg.maxCount), denseThreshold = 0L)
+        maxDz = Some(dz), maxCount = Some(cfg.maxCount))
       // G5: per-object interior fill -> this iteration's void cells
       val voided = FillObjectBounds(labeled.select("gx", "gy", "label"),
         dtm, bounds, cfg.dhBins)
@@ -103,8 +102,7 @@ object ClassifyGround {
       maskCount = n
       val ground = dtm.join(voidMask, Seq("gx", "gy"), "left_anti")
       dtm = FillVoids(ground, bounds,
-        noSmoothing = !converged && k < cfg.iterations - 1,
-        denseThreshold = 0L).localCheckpoint()
+        noSmoothing = !converged && k < cfg.iterations - 1).localCheckpoint()
     }
 
     // DSM-restore (dtm >= dsm and dsm non-void -> take dsm, leave mask)
@@ -128,8 +126,7 @@ object ClassifyGround {
 
     // final: re-void every masked cell, fill with smoothing
     val finalGround = restoredDtm.join(voidMask, Seq("gx", "gy"), "left_anti")
-    val dtmFinal = FillVoids(finalGround, bounds, noSmoothing = false,
-      denseThreshold = 0L).localCheckpoint()
+    val dtmFinal = FillVoids(finalGround, bounds, noSmoothing = false).localCheckpoint()
     Result(dtmFinal, voidMask)
   }
 

@@ -24,23 +24,18 @@ object GroundObjects {
       // 40000 = the cap at the standard 0.5 gsd
       maxCount: Long = 40000L)
 
-  /** Returns (gx, gy, label) for detected object cells. */
-  def detect(dsm: DataFrame, bounds: Bounds, cfg: Config = Config()): DataFrame =
-    detect(dsm, bounds, cfg, DenseGrid.Threshold)
-
-  /** [[detect]] with the strategy gate `denseCells` (lattice cells; 0
-    * forces the tiled path): grids at or below it run the whole seed +
-    * relaxation chain in ONE task; larger grids take the tiled stencil
-    * passes. Both paths are asserted equal in GroundSpec. */
-  private[graft] def detect(dsm: DataFrame, bounds: Bounds, cfg: Config,
-                            denseCells: Long): DataFrame = {
+  /** Returns (gx, gy, label) for detected object cells. Grids within the
+    * strategy gate (`DenseGrid.fits`) run the whole seed + relaxation
+    * chain in ONE task; larger grids take the tiled stencil passes. Both
+    * paths are asserted equal in GroundSpec. */
+  def detect(dsm: DataFrame, bounds: Bounds, cfg: Config = Config()): DataFrame = {
     // pin the DSM once: it feeds the seed stencil, the label packing
     // join (tiled path), and the scanline fill — its lineage is
     // typically a full docs scan + grid aggregate
     val dsmP = dsm.select(col("gx").cast("long"), col("gy").cast("long"),
       col("v").cast("int")).localCheckpoint(eager = true)
     val objCells =
-      if (DenseGrid.fits(bounds, denseCells))
+      if (DenseGrid.fits(dsm.sparkSession, bounds))
         relaxDense(dsmP, bounds, cfg)
       else relaxTiled(dsmP, bounds, cfg)
     // G2 components constrained by dz, chunk-capped at maxCount cells

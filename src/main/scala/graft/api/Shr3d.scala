@@ -23,10 +23,11 @@ import org.apache.spark.sql.functions._
  * median (`shr3d.cpp:239-294`) and createDTM's final small-void fill
  * (`shr3d.cpp:296-317`).
  *
- * Execution: one task per product below 2^20 cells (the dense gate,
- * `DenseGrid.Threshold`). A product's whole operator chain runs over
- * one in-memory raster (`DenseGrid.task`, entered with `coalesce(1)`
- * over pinned products), then the result is pinned. The DSM and MIN
+ * Execution: one task per product within the dense gate
+ * (`DenseGrid.fits`, 2^20 cells unless the session sets it). A
+ * product's whole operator chain runs over one in-memory raster
+ * (`DenseGrid.task`, entered with `coalesce(1)` over pinned products),
+ * then the result is pinned. The DSM and MIN
  * chains start from the points: `DenseGrid.accumulate` folds them into
  * the lattice in the same task, so no product below the gate runs a
  * gridding shuffle. Larger rasters take the tiled distributed path
@@ -64,17 +65,12 @@ object Shr3d {
     * with. */
   final case class Dtm0(grid: DataFrame /* gx, gy, v */, fit: Quant.Fit)
 
-  /** `denseCells` is the strategy gate (lattice cells); 0 forces the
-    * tiled path (a test seam — callers use the public constructor). */
-  final class Products private[graft] (spark: SparkSession, pts: DataFrame, cfg: Config,
-                                       denseCells: Long) {
-    def this(spark: SparkSession, pts: DataFrame, cfg: Config) =
-      this(spark, pts, cfg, DenseGrid.Threshold)
-
+  final class Products(spark: SparkSession, pts: DataFrame, cfg: Config) {
     private val (w, h) = cfg.boundsOpt.getOrElse(Gridding.boundsFor(cfg.spec))
     private val bounds = Bounds(w, h)
-    /** One task per product (see the object doc) vs the tiled path. */
-    private val dense = DenseGrid.fits(bounds, denseCells)
+    /** One task per product (see the object doc) vs the tiled path. Every
+      * nested gate sees the same `bounds`, so it makes the same choice. */
+    private val dense = DenseGrid.fits(spark, bounds)
     private val stdFit = Quant.Fit(Quant.Offset, Quant.Scale)
     /** The working quantization: the reconciled common fit when a prior
       * DTM is mixed in (shr3d.cpp:213-222), else the standard one. */
@@ -110,8 +106,7 @@ object Shr3d {
       else {
         val q = TileStencil(Gridding.dsm(gridded), quantK, bounds, cfg.tileSize)
         val wl = TileStencil(q, wellK, bounds, cfg.tileSize)
-        FillVoids(wl, bounds, noSmoothing = false, denseThreshold = denseCells)
-          .localCheckpoint()
+        FillVoids(wl, bounds, noSmoothing = false).localCheckpoint()
       }
     }
 
@@ -152,8 +147,7 @@ object Shr3d {
     lazy val minGrid: DataFrame = {
       val base = toActive(
         if (dense) minStages.filter(col("t") === 1).select(col("gx"), col("gy"), col("v"))
-        else FillVoids(minFiltered, bounds, noSmoothing = false, denseThreshold = denseCells)
-          .localCheckpoint())
+        else FillVoids(minFiltered, bounds, noSmoothing = false).localCheckpoint())
       dtm0Adj match {
         case None => base
         case Some(prior) =>
@@ -198,8 +192,7 @@ object Shr3d {
       * starting surface AND the void mirror the DTM step reapplies;
       * shared (and staged by q_shr3d_dtm's partial-chain oracle). */
     lazy val min2: DataFrame =
-      FillVoids(minFiltered, bounds, noSmoothing = true, maxLevel = 2,
-        denseThreshold = denseCells).localCheckpoint()
+      FillVoids(minFiltered, bounds, noSmoothing = true, maxLevel = 2).localCheckpoint()
 
     /** Raw classifyGround output (dtm, voidMask) — createDTM0's core
       * (shr3d.cpp:276-280): the loop starts from the small-void-filled
@@ -222,8 +215,7 @@ object Shr3d {
       * small-void-filled prior (getDTM0 memoization short-circuit). */
     lazy val dtm: DataFrame = dtm0Adj match {
       case Some(prior) =>
-        FillVoids(prior, bounds, noSmoothing = true, maxLevel = 2,
-          denseThreshold = denseCells).localCheckpoint()
+        FillVoids(prior, bounds, noSmoothing = true, maxLevel = 2).localCheckpoint()
       case None =>
         val medK = Kernels.medianFilter(1, dzRaw)
         if (dense)
@@ -234,8 +226,7 @@ object Shr3d {
           val mirrored = classifyGroundResult.dtm
             .join(min2.select("gx", "gy"), Seq("gx", "gy"), "left_semi")
           val med = TileStencil(mirrored, medK, bounds, cfg.tileSize)
-          FillVoids(med, bounds, noSmoothing = true, maxLevel = 2,
-            denseThreshold = denseCells).localCheckpoint()
+          FillVoids(med, bounds, noSmoothing = true, maxLevel = 2).localCheckpoint()
         }
     }
 
@@ -284,7 +275,7 @@ object Shr3d {
             // group on height similarity (dz/2, groupObjects at :1039)
             val withV = mask.join(dsm, Seq("gx", "gy"))
             val grouped = ConnectedComponents.label(withV, bounds, cfg.tileSize,
-              maxDz = Some(dzRaw / 2), denseThreshold = denseCells)
+              maxDz = Some(dzRaw / 2))
             // G4: reject low-ridge objects by mean boundary gradient
             val accepted = GroundObjects
               .acceptByGradient(grouped.select("gx", "gy", "label"), dsm, dzRaw)
@@ -294,8 +285,7 @@ object Shr3d {
             TileStencil(packed, Kernels.MaskOpenResolve(), bounds, cfg.tileSize)
           } else mask.withColumn("v", lit(1))
         // final plain regrouping + min-area reject (:1148-1173)
-        val labeled = ConnectedComponents.label(cleaned, bounds, cfg.tileSize,
-          denseThreshold = denseCells)
+        val labeled = ConnectedComponents.label(cleaned, bounds, cfg.tileSize)
         val sizes = labeled.groupBy("label").agg(count(lit(1)).as("n"))
           .filter(col("n") >= cfg.minRegionCells)
         labeled.join(sizes.select("label"), Seq("label"), "left_semi")

@@ -49,20 +49,19 @@ object ConnectedComponents {
   /** `diag = false` restricts adjacency to 4-connectivity (the
     * reference's BACKGROUND labeling in `Image.h:288-297` — holes are
     * 4-connected while foreground objects are 8-connected).
-    * `denseThreshold` is the strategy gate, in lattice cells: grids
-    * within it label in ONE task (`DenseGrid.labels`, a single
-    * union-find sweep — a 722-cell raster should not pay tile shuffles
-    * + pointer-jump rounds); larger grids take the tiled distributed
-    * path. Both asserted equal in CcSpec. */
+    * Grids within the strategy gate (`DenseGrid.fits`) label in ONE
+    * task (`DenseGrid.labels`, a single union-find sweep — a 722-cell
+    * raster should not pay tile shuffles + pointer-jump rounds); larger
+    * grids take the tiled distributed path. Both asserted equal in
+    * CcSpec. */
   def label(cells: DataFrame, bounds: Bounds, tileSize: Int = 128,
             maxDz: Option[Int] = None, maxCount: Option[Long] = None,
-            denseThreshold: Long = DenseGrid.Threshold,
             diag: Boolean = true): DataFrame = {
     val spark = cells.sparkSession
     import spark.implicits._
     val t = tileSize
     val w = bounds.w
-    if (DenseGrid.fits(bounds, denseThreshold))
+    if (DenseGrid.fits(spark, bounds))
       return DenseGrid.task(Seq(cells), bounds) { g =>
         val lbl = g(0).labels(maxDz, maxCount, diag)
         g(0).cells.map(c => (c.gx, c.gy, c.v, lbl((c.gy * w + c.gx).toInt).toLong))

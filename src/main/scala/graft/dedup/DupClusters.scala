@@ -40,7 +40,11 @@ import org.apache.spark.sql.functions._
  */
 object DupClusters {
 
-  /** Undirected connected components.
+  /** Undirected connected components. Edge lists of at most
+    * `DenseGrid.threshold` rows are labeled in ONE executor task (a
+    * single union-find sweep — 2 jobs instead of ~2 per propagation
+    * round); larger ones take the pointer-jumping loop. Both paths are
+    * asserted equal in DupClustersSpec.
     *
     * @param edges     two-column DataFrame of node-id pairs (Long); self
     *                  loops and duplicate/reversed pairs are tolerated
@@ -48,16 +52,9 @@ object DupClusters {
     *                  throws rather than returning a half-merged
     *                  clustering (adversarial chains should use a bigger
     *                  bound, not silently wrong output)
-    * @param denseThreshold strategy gate, in edge rows: edge lists at or
-    *                  below it are labeled in ONE executor task (a single
-    *                  union-find sweep — 2 jobs instead of ~2 per
-    *                  propagation round); larger edge lists take the
-    *                  pointer-jumping loop. Both paths are asserted equal
-    *                  in DupClustersSpec
     * @return (id, cluster) with cluster = min node id reachable
     */
-  def components(edges: DataFrame, maxRounds: Int = 50,
-                 denseThreshold: Long = DenseGrid.Threshold): DataFrame = {
+  def components(edges: DataFrame, maxRounds: Int = 50): DataFrame = {
     val spark = edges.sparkSession
     val Seq(a, b) = edges.columns.toSeq
     // Pin the edge list ONCE: its lineage is often an expensive pair
@@ -70,7 +67,7 @@ object DupClusters {
     val pinned = edges.select(col(a).as("src"), col(b).as("dst"))
       .localCheckpoint(eager = true)
     // the count is over the just-materialized blocks — no recompute
-    if (pinned.count() <= denseThreshold) return componentsDense(pinned)
+    if (pinned.count() <= DenseGrid.threshold(spark)) return componentsDense(pinned)
     // symmetrize once; nodes = endpoints
     val sym = pinned
       .union(pinned.select(col("dst").as("src"), col("src").as("dst")))

@@ -41,14 +41,12 @@ object DistanceTransform {
     * nearest source is <= radius. `sources` rows not present in
     * `cells` are ignored (a source must be an occupied cell).
     *
-    * `denseThreshold` is the strategy gate, in occupied cells: grids at
-    * or below it run the transform as ONE executor task (a multi-source
-    * Dijkstra sweep — 2 jobs instead of ~3 per Bellman-Ford round);
-    * larger grids take the frontier loop. Both paths asserted equal in
-    * DistanceTransformSpec. */
+    * Grids with at most `DenseGrid.threshold` occupied cells run the
+    * transform as ONE executor task (a multi-source Dijkstra sweep — 2
+    * jobs instead of ~3 per Bellman-Ford round); larger grids take the
+    * frontier loop. Both paths asserted equal in DistanceTransformSpec. */
   def chamferWithin(cells: DataFrame, sources: DataFrame, radius: Long,
-                    maxRounds: Int = 64,
-                    denseThreshold: Long = DenseGrid.Threshold): DataFrame = {
+                    maxRounds: Int = 64): DataFrame = {
     require(radius >= 0, "radius must be non-negative")
     val occ = cells.select("gx", "gy").localCheckpoint(eager = true)
     var dist = sources.select(col("gx"), col("gy"), lit(0L).as("d"))
@@ -56,7 +54,7 @@ object DistanceTransform {
       .join(occ, Seq("gx", "gy"))
       .localCheckpoint(eager = true)
     // count reads the just-materialized blocks — no recompute
-    if (occ.count() <= denseThreshold)
+    if (occ.count() <= DenseGrid.threshold(cells.sparkSession))
       return chamferDense(occ, dist, radius)
     var frontier = dist
     var rounds = 0

@@ -50,23 +50,22 @@ object FlowBasins {
     * sink) and `w` the weight of that hop (MUST be 0 on self-loops); on
     * output `nid` is the terminal sink of `id`'s path and `w` the total
     * path weight. The generic core behind [[basins]]/[[paths]] and the
-    * Euler-tour list ranking in [[FlowAccum]].
+    * Euler-tour list ranking in [[FlowAccum]]. Lists of at most
+    * `DenseGrid.threshold` pointer rows resolve in ONE executor task (a
+    * memoized sequential walk — 2 jobs instead of ~2 per doubling round);
+    * larger lists take the doubling loop. Both paths are asserted equal
+    * in FlowSpec.
     *
     * @param maxRounds doubling-round bound; 64 covers any path that fits
     *                  in a 2^63-row list, so hitting it means a bug, and
     *                  the loop throws instead of returning partial labels
-    * @param denseThreshold strategy gate, in pointer rows: lists at or
-    *                  below it resolve in ONE executor task (a memoized
-    *                  sequential walk — 2 jobs instead of ~2 per doubling
-    *                  round); larger lists take the doubling loop. Both
-    *                  paths are asserted equal in FlowSpec
     */
-  def resolve(next: DataFrame, maxRounds: Int = 64,
-              denseThreshold: Long = DenseGrid.Threshold): DataFrame = {
+  def resolve(next: DataFrame, maxRounds: Int = 64): DataFrame = {
     var frontier = next.select(col("id").cast("long"), col("nid").cast("long"),
       col("w").cast("long")).localCheckpoint(eager = true)
     // the count reads the just-materialized blocks — no recompute
-    if (frontier.count() <= denseThreshold) return resolveDense(frontier)
+    if (frontier.count() <= DenseGrid.threshold(next.sparkSession))
+      return resolveDense(frontier)
     // Active-frontier doubling with path compression. A row is converged
     // exactly when its pointer IS a sink, and the compose join sees that
     // for free: the row it hops through self-loops (jid === jnid, weight

@@ -29,8 +29,8 @@ import org.apache.spark.sql.functions._
  * localCheckpoint'ed — the loop would otherwise stack ~log2(maxdim)
  * plan copies (SURVEY.md §7.4 risk 6).
  *
- * Strategy gate (like Spark's broadcast threshold): lattices up to
- * `denseThreshold` cells run the whole pyramid as ONE executor task
+ * Strategy gate (like Spark's broadcast threshold): lattices within
+ * `DenseGrid.fits` run the whole pyramid as ONE executor task
  * (`DenseGrid.fill`, the same spec over one in-memory raster) — one job
  * over a pinned input instead of ~3·log2(maxdim); bigger lattices take
  * the distributed path. The two are asserted equal in PyramidSpec.
@@ -64,15 +64,13 @@ object FillVoids {
   }
 
   /** Full pyramid fill. Returns the level-0 grid with voids filled
-    * (columns gx, gy, v). `denseThreshold` is the strategy gate in
-    * lattice cells (see the object doc). */
+    * (columns gx, gy, v). */
   def apply(cells: DataFrame, bounds: Bounds, noSmoothing: Boolean = false,
-            maxLevel: Int = 32,
-            denseThreshold: Long = DenseGrid.Threshold): DataFrame = {
+            maxLevel: Int = 32): DataFrame = {
     val spark = cells.sparkSession
     import spark.implicits._
 
-    if (DenseGrid.fits(bounds, denseThreshold))
+    if (DenseGrid.fits(spark, bounds))
       return DenseGrid.grid(Seq(cells), bounds)(_(0).fill(noSmoothing, maxLevel))
 
     // ---- up phase ----

@@ -1,7 +1,7 @@
 package graft.stencil
 
 import graft.stencil.TileStencil.{Bounds, Kernel}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
  * its own. [[DenseGrid.accumulate]] folds raw points into such a table
  * in one task of the same kind, so a chain that starts from points
  * (the SHR3D DSM and MIN grids, the ALIGN3D DSMs) is one task too.
- * Rasters above [[DenseGrid.Threshold]] cells keep their tiled
+ * Rasters above [[DenseGrid.threshold]] cells keep their tiled
  * distributed paths.
  */
 final class DenseGrid(val w: Int, val h: Int) {
@@ -225,15 +225,25 @@ final class DenseGrid(val w: Int, val h: Int) {
 
 object DenseGrid {
 
-  /** The one strategy gate: rasters up to this many lattice cells run as
-    * one task; larger ones take the tiled distributed paths. The
-    * row-counted gates (DistanceTransform's occupied cells, FlowBasins'
-    * pointer rows, DupClusters' edge rows) and RefTrace's default read
-    * the same size. */
-  final val Threshold: Long = 1L << 20
+  /** The one strategy gate, the session setting [[ThresholdKey]]:
+    * rasters up to this many lattice cells run as one task; larger ones
+    * take the tiled distributed paths. The row-counted gates
+    * (DistanceTransform's occupied cells, FlowBasins' pointer rows,
+    * DupClusters' edge rows) compare against the same size. Unset, it is
+    * 2^20; 0 forces every distributed path. SparkConf loads `spark.*` JVM
+    * system properties, so a `-D<key>=0` option forces them for a whole
+    * run. Operators read it when they build their DataFrame, not when it
+    * runs. */
+  def threshold(spark: SparkSession): Long =
+    spark.conf.getOption(ThresholdKey).fold(1L << 20) { s =>
+      s.trim.toLongOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
+        s"$ThresholdKey must be a non-negative integer, got '$s'"))
+    }
 
-  def fits(bounds: Bounds, threshold: Long = Threshold): Boolean =
-    bounds.w.toLong * bounds.h <= threshold
+  final val ThresholdKey = "spark.graft.denseThreshold"
+
+  def fits(spark: SparkSession, bounds: Bounds): Boolean =
+    bounds.w.toLong * bounds.h <= threshold(spark)
 
   final case class Cell(gx: Long, gy: Long, v: Int)
   final case class Tagged(t: Int, gx: Long, gy: Long, v: Int)

@@ -141,9 +141,8 @@ object RefTrace {
     * pixel count (own + holes) exceeds `maxCells` are refused with a
     * null wkt, as in [[Vectorize.outlines]]. */
   def refOutlines(mask: DataFrame, bounds: Bounds, tileSize: Int = 128,
-                  maxCells: Long = Vectorize.DefaultMaxCells,
-                  denseThreshold: Long = DenseGrid.Threshold): DataFrame =
-    outlinesWith(mask, bounds, tileSize, maxCells, denseThreshold,
+                  maxCells: Long = Vectorize.DefaultMaxCells): DataFrame =
+    outlinesWith(mask, bounds, tileSize, maxCells,
       (outer, inners) => Some(toWkt(outer, inners)))
 
   /** WKT POLYGON over fractional-coordinate rings (buildingSimplify
@@ -165,8 +164,7 @@ object RefTrace {
     * gsd/factor on write). `n_cells` counts upsampled object pixels. */
   def refOutlinesSimplified(mask: DataFrame, bounds: Bounds, scale: Int = 36,
                             factor: Int = 3, tileSize: Int = 128,
-                            maxCells: Long = Vectorize.DefaultMaxCells,
-                            denseThreshold: Long = DenseGrid.Threshold): DataFrame = {
+                            maxCells: Long = Vectorize.DefaultMaxCells): DataFrame = {
     val spark = mask.sparkSession
     import spark.implicits._
     val deltas = (for { dy <- 0 until factor; dx <- 0 until factor }
@@ -175,8 +173,7 @@ object RefTrace {
       .crossJoin(broadcast(deltas))
       .select((col("gx") * factor + col("dx")).as("gx"),
         (col("gy") * factor + col("dy")).as("gy"))
-    outlinesWith(up, Bounds(bounds.w * factor, bounds.h * factor),
-      tileSize, maxCells, denseThreshold,
+    outlinesWith(up, Bounds(bounds.w * factor, bounds.h * factor), tileSize, maxCells,
       (outer, inners) => {
         def d(r: Vector[Pt]) = r.map(p => (p._1.toDouble, p._2.toDouble))
         val so = Vectorize.buildingSimplify(d(outer), scale)
@@ -187,8 +184,7 @@ object RefTrace {
       })
   }
 
-  private def outlinesWith(mask: DataFrame, bounds: Bounds, tileSize: Int,
-                           maxCells: Long, denseThreshold: Long,
+  private def outlinesWith(mask: DataFrame, bounds: Bounds, tileSize: Int, maxCells: Long,
                            render: (Vector[Pt], Seq[Vector[Pt]]) => Option[String])
   : DataFrame = {
     val spark = mask.sparkSession
@@ -201,9 +197,9 @@ object RefTrace {
     // passes, scan-order renumbering, hole attachment, and every ring
     // walk — in ONE executor task (~4 jobs instead of ~30 for the
     // distributed pipeline below). Larger rasters keep the tiled path;
-    // both are asserted equal in RefTraceSpec (dense vs denseThreshold=0
-    // vs the independent test oracle).
-    if (w * h <= denseThreshold)
+    // both are asserted equal in RefTraceSpec (dense vs the forced tiled
+    // path vs the independent test oracle).
+    if (DenseGrid.fits(spark, bounds))
       return outlinesDense(mask, bounds.w, bounds.h, maxCells, render)
 
     // pin the mask ONCE: its lineage (typically a docs scan + grid
@@ -213,8 +209,7 @@ object RefTrace {
       .withColumn("v", lit(1))
       .localCheckpoint(eager = true)
     // 8-connected foreground labeling (canonical min-cell-id labels)
-    val fgLab = ConnectedComponents.label(fgCells, bounds, tileSize,
-        denseThreshold = denseThreshold)
+    val fgLab = ConnectedComponents.label(fgCells, bounds, tileSize)
       .select("gx", "gy", "label").localCheckpoint()
     // renumber to the reference's scan order: rank of first pixel
     val fgFirst = fgLab.groupBy("label")
@@ -254,8 +249,7 @@ object RefTrace {
     val bgCells = lattice
       .join(fgCells.select("gx", "gy"), Seq("gx", "gy"), "left_anti")
       .withColumn("v", lit(1))
-    val bgLab = ConnectedComponents.label(bgCells, bounds, tileSize,
-        denseThreshold = denseThreshold, diag = false)
+    val bgLab = ConnectedComponents.label(bgCells, bounds, tileSize, diag = false)
       .select("gx", "gy", "label").localCheckpoint()
     val edgeLabels = bgLab.filter(
       col("gx") === bx0 || col("gx") === bx1 ||

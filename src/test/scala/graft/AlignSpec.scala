@@ -212,10 +212,13 @@ class AlignSpec extends SparkSpec {
     val (_, tgt) = tiledScene(3.0, -2.0, 0.5)
     val cfg = Align3d.Config(gsd = 1.0)
     val grid = Align3d.gridFor(tgt, cfg)
-    def rows(denseCells: Long) = Align3d.prepGrid(tgt, grid, cfg, denseCells).collect()
+    def rows() = Align3d.prepGrid(tgt, grid, cfg).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
-    val dense = rows(graft.stencil.DenseGrid.Threshold)
-    assert(dense.nonEmpty && dense == rows(0L))
+    var (dense, tiled) = (Seq.empty[(Long, Long, Int)], Seq.empty[(Long, Long, Int)])
+    val jobs = jobsPer("dense" -> (() => dense = rows()),
+      "tiled" -> (() => tiled = withDenseThreshold(0)(rows())))
+    assert(jobs("tiled") > jobs("dense"), s"the tiled side is not tiled: $jobs")
+    assert(dense.nonEmpty && dense == tiled)
   }
 
   test("job budget: Align3d.stage below the dense gate") {

@@ -46,10 +46,10 @@ class CcSpec extends SparkSpec {
       import spark.implicits._
       val (w, h) = (41, 29)
       val cells = randomCells((density * 100).toInt + tile, w, h, density)
-      val got = ConnectedComponents.label(
-          cells.toDF("gx", "gy", "v").repartition(7), Bounds(w, h), tile, dz,
-          denseThreshold = thresh)
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(3)).toMap
+      val got = withDenseThreshold(thresh) {
+        ConnectedComponents.label(cells.toDF("gx", "gy", "v").repartition(7), Bounds(w, h), tile, dz)
+          .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(3)).toMap
+      }
       val want = oracle(cells, w, dz)
       assert(got.size == want.size)
       assert(got == want)
@@ -62,9 +62,10 @@ class CcSpec extends SparkSpec {
     val cells = randomCells(9, w, h, 0.6).map { case (x, y, v) => (x, y, if (v <= 30) 0 else v) }
     assert(cells.exists(_._3 == 0))
     for (dz <- Seq(None, Some(20)); thresh <- Seq(0L, Long.MaxValue)) {
-      val got = ConnectedComponents.label(cells.toDF("gx", "gy", "v").repartition(3),
-          Bounds(w, h), 8, dz, denseThreshold = thresh)
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(3)).toMap
+      val got = withDenseThreshold(thresh) {
+        ConnectedComponents.label(cells.toDF("gx", "gy", "v").repartition(3), Bounds(w, h), 8, dz)
+          .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(3)).toMap
+      }
       assert(got == oracle(cells, w, dz), s"dz=$dz threshold=$thresh")
     }
   }
@@ -77,9 +78,9 @@ class CcSpec extends SparkSpec {
     val blob = Seq((130L, 55L, 1), (131L, 55L, 1), (131L, 56L, 1))
     val df = (giant ++ blob).toDF("gx", "gy", "v").repartition(13)
     val cap = 1000L
-    val got = ConnectedComponents.label(df, Bounds(w, h), tileSize = 32,
-      maxCount = Some(cap), denseThreshold = 0L).collect()
-      .map(r => ((r.getLong(0), r.getLong(1)), r.getLong(3)))
+    val got = withDenseThreshold(0) {
+      ConnectedComponents.label(df, Bounds(w, h), tileSize = 32, maxCount = Some(cap)).collect()
+    }.map(r => ((r.getLong(0), r.getLong(1)), r.getLong(3)))
     assert(got.length == giant.size + blob.size, "no cell may be dropped")
     val bySize = got.groupBy(_._2).view.mapValues(_.length).toMap
     assert(bySize.values.forall(_ <= cap), s"chunk over cap: $bySize")
@@ -91,14 +92,15 @@ class CcSpec extends SparkSpec {
       assert(cs.map { case ((x, y), _) => y * w + x }.min == lbl)
     }
     // partitioning/tile independence
-    val again = ConnectedComponents.label(df.repartition(3), Bounds(w, h),
-      tileSize = 256, maxCount = Some(cap), denseThreshold = 0L).collect()
-      .map(r => ((r.getLong(0), r.getLong(1)), r.getLong(3))).toMap
+    val again = withDenseThreshold(0) {
+      ConnectedComponents.label(df.repartition(3), Bounds(w, h), tileSize = 256,
+        maxCount = Some(cap)).collect()
+    }.map(r => ((r.getLong(0), r.getLong(1)), r.getLong(3))).toMap
     assert(again == got.toMap, "chunking depends on partitioning")
     // dense strategy: identical chunked labels
-    val dense = ConnectedComponents.label(df, Bounds(w, h), tileSize = 32,
-      maxCount = Some(cap), denseThreshold = Long.MaxValue).collect()
-      .map(r => ((r.getLong(0), r.getLong(1)), r.getLong(3))).toMap
+    val dense = withDenseThreshold(Long.MaxValue) {
+      ConnectedComponents.label(df, Bounds(w, h), tileSize = 32, maxCount = Some(cap)).collect()
+    }.map(r => ((r.getLong(0), r.getLong(1)), r.getLong(3))).toMap
     assert(dense == got.toMap, "dense strategy diverges from tiled")
   }
 
@@ -108,14 +110,15 @@ class CcSpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.expressions.RowNumber
     // vertical strip of 12,000 cells on a lattice wide enough that the
     // strip spans ~6,000 cid blocks (w = 2^19, block = 2^20): the local
-    // rank genuinely composes with the prefix offsets
+    // rank genuinely composes with the prefix offsets; the 6.3e9-cell
+    // lattice is far above the dense gate
     val w = 1 << 19
     val h = 12000
     val strip = (0L until 12000L).map(y => (5L, y, 1))
     val df = strip.toDF("gx", "gy", "v").repartition(7)
     val cap = 1000L
     val out = ConnectedComponents.label(df, Bounds(w, h), tileSize = 4096,
-      maxCount = Some(cap), denseThreshold = 0L)
+      maxCount = Some(cap))
 
     // plan-asserted: every row_number window partitions by >= 2 keys —
     // the old single-stage rank partitioned the whole CELL table by

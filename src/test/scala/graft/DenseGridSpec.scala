@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
 
 /** [[DenseGrid.accumulate]] against the aggregates it replaces below the
   * dense gate: `Gridding.dsm` / `minGrid` with the 2x2 splat, and the
-  * per-cell max of `Align3d.prepGrid` without it. */
+  * per-cell max of `Align3d.prepGrid` without it; and the gate's session
+  * setting. */
 class DenseGridSpec extends SparkSpec {
 
   private val spec = Gridding.GridSpec(lon0 = 0.0, lat0 = 0.0, gsd = 1.0)
@@ -68,5 +69,15 @@ class DenseGridSpec extends SparkSpec {
     assert(e.getMessage.contains("cell (24, 4) outside the 24x20 raster"), e.getMessage)
     // without the splat the same point stays inside
     assert(rows(DenseGrid.accumulate(edge, bounds, math.max, splat = false)).size == 2)
+  }
+
+  test("a dense gate setting that is not a non-negative integer is refused, naming its key") {
+    import spark.implicits._
+    val key = "spark.graft.denseThreshold"
+    val cells = Seq((0L, 0L, 5)).toDF("gx", "gy", "v")
+    for (bad <- Seq("many", "-1", "1.5", "")) withConf(key, bad) {
+      val e = intercept[IllegalArgumentException](graft.pyramid.FillVoids(cells, Bounds(2, 2)))
+      assert(e.getMessage.contains(key), e.getMessage)
+    }
   }
 }

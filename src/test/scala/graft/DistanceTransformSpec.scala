@@ -94,9 +94,10 @@ class DistanceTransformSpec extends SparkSpec {
   test("dense and distributed strategies agree (wall field)") {
     val sources = Set((1L, 5L), (14L, 8L))
     val dense = run(field, sources, 300L) // default gate: dense path
-    val dist = DistanceTransform
-      .chamferWithin(toDf(field), srcDf(sources), 300L, denseThreshold = 0)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    val dist = withDenseThreshold(0) {
+      DistanceTransform.chamferWithin(toDf(field), srcDf(sources), 300L)
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    }
     assert(dense === dist)
     assert(dense === dijkstra(field, sources, 300L))
   }

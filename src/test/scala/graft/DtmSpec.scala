@@ -34,8 +34,10 @@ class DtmSpec extends SparkSpec {
     (minG, solid)
   }
 
-  /** The tiled loop (`ClassifyGround.run`), or with `dense` the one-task
-    * strategy through the entry `Shr3d` uses below the gate. */
+  /** The tiled loop (`ClassifyGround.run` under a 0 dense gate, so its
+    * own fills and labelings stay tiled on these small rasters), or with
+    * `dense` the one-task strategy through the entry `Shr3d` uses below
+    * the gate. */
   private def runEngine(minG: Map[(Long, Long), Int],
                         solid: Map[(Long, Long), Int], w: Int, h: Int,
                         dz: Int, dh: Int, maxCount: Long, tile: Int,
@@ -52,17 +54,14 @@ class DtmSpec extends SparkSpec {
       val bounds = Bounds(w, h)
       val cfg = ClassifyGround.Config(dzRaw = dz, dhBins = dh, iterations = 5,
         maxCount = maxCount, tileSize = tile)
-      val res =
-        if (dense)
-          ClassifyGround.denseResult(DenseGrid.task(Seq(minDf, solidDf), bounds) { g =>
-            ClassifyGround.denseRows(g(0), g(1), cfg)
-          }(Encoders.product[DenseGrid.Tagged]).toDF())
-        else ClassifyGround.run(minDf, solidDf, bounds, cfg)
-      val dtm = res.dtm.collect()
-        .map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
-      val mask = res.voidMask.collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      (dtm, mask)
+      def collected(res: ClassifyGround.Result) = (
+        res.dtm.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap,
+        res.voidMask.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+      if (dense)
+        collected(ClassifyGround.denseResult(DenseGrid.task(Seq(minDf, solidDf), bounds) { g =>
+          ClassifyGround.denseRows(g(0), g(1), cfg)
+        }(Encoders.product[DenseGrid.Tagged]).toDF()))
+      else withDenseThreshold(0)(collected(ClassifyGround.run(minDf, solidDf, bounds, cfg)))
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 

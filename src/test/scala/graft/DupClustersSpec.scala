@@ -1,7 +1,6 @@
 package graft
 
 import graft.dedup.DupClusters
-import graft.stencil.DenseGrid
 import org.apache.spark.sql.functions._
 
 class DupClustersSpec extends SparkSpec {
@@ -24,12 +23,9 @@ class DupClustersSpec extends SparkSpec {
     }.toMap
   }
 
-  private def run(edges: Seq[(Long, Long)], maxRounds: Int = 50,
-                  denseThreshold: Long = DenseGrid.Threshold)
-      : Map[Long, Long] = {
+  private def run(edges: Seq[(Long, Long)], maxRounds: Int = 50): Map[Long, Long] = {
     import spark.implicits._
-    DupClusters.components(edges.toDF("a", "b").repartition(9), maxRounds,
-        denseThreshold)
+    DupClusters.components(edges.toDF("a", "b").repartition(9), maxRounds)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
@@ -39,16 +35,16 @@ class DupClustersSpec extends SparkSpec {
       (rnd.nextInt(250).toLong, rnd.nextInt(250).toLong))
     val expected = ufComponents(edges)
     assert(run(edges) == expected) // dense path (below the gate)
-    assert(run(edges, denseThreshold = 0) == expected) // distributed loop
+    assert(withDenseThreshold(0)(run(edges)) == expected) // distributed loop
   }
 
   test("long path converges fast (pointer jumping), exact labels") {
     // a 64-node path: neighbor-min alone needs 63 rounds; with the jump
     // step the budget of 12 is ample — failing this means the shortcut
-    // regressed to plain propagation. denseThreshold 0 forces the
-    // distributed loop (the dense gate would otherwise absorb the case).
+    // regressed to plain propagation. A 0 gate forces the distributed
+    // loop (the dense gate would otherwise absorb the case).
     val edges = (0L until 63L).map(i => (i + 1, i))
-    assert(run(edges, maxRounds = 12, denseThreshold = 0) ==
+    assert(withDenseThreshold(0)(run(edges, maxRounds = 12)) ==
       (0L to 63L).map(_ -> 0L).toMap)
   }
 
@@ -69,13 +65,13 @@ class DupClustersSpec extends SparkSpec {
   test("non-convergence within maxRounds throws instead of truncating") {
     val edges = (0L until 63L).map(i => (i + 1, i))
     intercept[IllegalStateException] {
-      run(edges, maxRounds = 2, denseThreshold = 0)
+      withDenseThreshold(0)(run(edges, maxRounds = 2))
     }
   }
 
   test("self loops and duplicate/reversed edges, distributed loop") {
     val edges = Seq((5L, 5L), (1L, 2L), (2L, 1L), (1L, 2L), (7L, 8L))
-    assert(run(edges, denseThreshold = 0) ==
+    assert(withDenseThreshold(0)(run(edges)) ==
       Map(5L -> 5L, 1L -> 1L, 2L -> 1L, 7L -> 7L, 8L -> 7L))
   }
 }

@@ -274,8 +274,8 @@ class FlowSpec extends SparkSpec {
 
   test("resolve: dense and distributed strategies agree (random forest)") {
     // random functional graph with self-loop sinks and weighted hops —
-    // the resolve() contract; forcing denseThreshold = 0 runs the
-    // doubling loop, the default runs the single-task memoized walk
+    // the resolve() contract; a 0 gate forces the doubling loop, the
+    // default runs the single-task memoized walk
     val rnd = new scala.util.Random(23)
     val n = 300
     val rows = (0L until n).map { i =>
@@ -290,8 +290,9 @@ class FlowSpec extends SparkSpec {
     val df = rows.toDF("id", "nid", "w").repartition(7)
     val dense = FlowBasins.resolve(df)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val dist = FlowBasins.resolve(df, denseThreshold = 0)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val dist = withDenseThreshold(0) {
+      FlowBasins.resolve(df).collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    }
     assert(dense == dist)
     // sinks resolve to themselves with weight 0 on both paths
     assert((0L until n).filter(_ % 17 == 0).forall(s => dense(s) == (s, 0L)))

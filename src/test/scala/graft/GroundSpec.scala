@@ -65,11 +65,13 @@ class GroundSpec extends SparkSpec {
         else 1000 + rnd.nextInt(500)
       (x, y, v)
     }).toDF("gx", "gy", "v")
-    def run(threshold: Long) =
-      graft.api.GroundObjects.detect(dsm, b,
-          graft.api.GroundObjects.Config(tileSize = 8), threshold)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(run(1L << 20) === run(0L))
+    def run() = graft.api.GroundObjects.detect(dsm, b, graft.api.GroundObjects.Config(tileSize = 8))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    var (dense, tiled) = (Set.empty[(Long, Long, Long)], Set.empty[(Long, Long, Long)])
+    val jobs = jobsPer("dense" -> (() => dense = run()),
+      "tiled" -> (() => tiled = withDenseThreshold(0)(run())))
+    assert(jobs("tiled") > jobs("dense"), s"the tiled side is not tiled: $jobs")
+    assert(dense === tiled)
   }
 
   test("G4 gradient accept/reject drops low ridges, keeps real objects") {

@@ -283,9 +283,10 @@ class PlanSpec extends SparkSpec {
       if (x * 31 + y * 17) % 3 != 0 } yield (x, y)).toDF("gx", "gy")
     // force the tiled distributed pipeline (the dense single-task gate
     // has no joins to guard)
-    val df = graft.vector.RefTrace.refOutlines(cells, Bounds(64, 64), tileSize = 16,
-      denseThreshold = 0L)
-    val p = df.queryExecution.executedPlan.toString
+    val p = withDenseThreshold(0) {
+      graft.vector.RefTrace.refOutlines(cells, Bounds(64, 64), tileSize = 16)
+        .queryExecution.executedPlan.toString
+    }
     assert(!p.contains("CartesianProduct"), s"cartesian in trace plan:\n${p.take(3000)}")
     assert(!p.contains("BroadcastNestedLoopJoin"),
       s"nested-loop join in trace plan:\n${p.take(3000)}")

@@ -59,9 +59,10 @@ class PyramidSpec extends SparkSpec {
     // both strategies: 0 forces the distributed pyramid, MaxValue the
     // dense single-task one
     for (thresh <- Seq(0L, Long.MaxValue)) {
-      val got = FillVoids(cells.toDF("gx", "gy", "v").repartition(5),
-          Bounds(w, h), noSmoothing, maxLevel, denseThreshold = thresh)
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
+      val got = withDenseThreshold(thresh) {
+        FillVoids(cells.toDF("gx", "gy", "v").repartition(5), Bounds(w, h), noSmoothing, maxLevel)
+          .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
+      }
       assert(got == want,
         s"thresh=$thresh: engine ${got.size} cells vs oracle ${want.size}")
     }

@@ -220,9 +220,10 @@ class RefTraceSpec extends SparkSpec {
     val cells = for {
       y <- 0 until h; x <- 0 until w; if mask(y)(x)
     } yield (x.toLong, y.toLong)
-    val got = RefTrace.refOutlines(cells.toDF("gx", "gy"), Bounds(w, h),
-        tileSize = 4, denseThreshold = 0L)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
+    val got = withDenseThreshold(0) {
+      RefTrace.refOutlines(cells.toDF("gx", "gy"), Bounds(w, h), tileSize = 4)
+        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
+    }
     assert(got === exp)
   }
 

@@ -210,8 +210,13 @@ class Shr3dSpec extends SparkSpec {
 
   private def assertTiledEqualsDense(pts: DataFrame): Shr3d.Products = {
     val dense = Shr3d.run(spark, pts, specCfg)
-    val tiled = new Shr3d.Products(spark, pts, specCfg, 0L)
-    productRows(dense).zip(productRows(tiled)).foreach { case ((name, d), (_, t)) =>
+    var (denseRows, tiledRows) = (Seq.empty[(String, Seq[String])], Seq.empty[(String, Seq[String])])
+    val jobs = jobsPer("dense" -> (() => denseRows = productRows(dense)),
+      "tiled" -> (() => tiledRows =
+        withDenseThreshold(0)(productRows(Shr3d.run(spark, pts, specCfg)))))
+    // a 0 gate that never reached the products' gates leaves both sides dense
+    assert(jobs("tiled") > jobs("dense"), s"the tiled side is not tiled: $jobs")
+    denseRows.zip(tiledRows).foreach { case ((name, d), (_, t)) =>
       val same = d == t
       assert(same, s"$name: dense ${d.size} lines vs tiled ${t.size}, first difference " +
         d.zipAll(t, "-", "-").find(p => p._1 != p._2))

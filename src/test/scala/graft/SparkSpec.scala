@@ -27,6 +27,21 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sfSmoke = "/root/testdata/sf0.001"
 
+  /** Runs `body` with the strategy gate (`DenseGrid.ThresholdKey`) set
+    * to `n` — 0 forces every distributed path, `Long.MaxValue` every
+    * dense one — then restores the previous setting. Gates read it when
+    * an operator builds its DataFrame, so build and collect inside. */
+  def withDenseThreshold[T](n: Long)(body: => T): T =
+    withConf(graft.stencil.DenseGrid.ThresholdKey, n.toString)(body)
+
+  /** Runs `body` with the session setting `key` set to `value`, then
+    * restores (or unsets) it. */
+  def withConf[T](key: String, value: String)(body: => T): T = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   /** Spark jobs launched inside each labelled block, run in order: a
     * listener keyed by a job-local property, read after draining the
     * listener bus (the listener is asynchronous). */
