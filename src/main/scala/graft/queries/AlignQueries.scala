@@ -7,13 +7,17 @@ import org.apache.spark.sql.functions._
 /** ALIGN3D as driver-visible queries: the geocoded doc points are the
   * reference; the target is the same cloud with a known injected shift.
   *
-  * - q_align_offset: the end-to-end result row (rows-only — the argmin
-  *   + Newton interpolation are driver-side scalars).
+  * - q_align_offset: the end-to-end result row (argmin + Newton peak
+  *   step over the stats table).
   * - q_align_rms: the per-offset stats table (odx, ody, n, med, rms,
   *   complete) — the L4 walk-until-valid cap, A9 median + robust RMS,
-  *   and J2/J7 probe joins, BIT-EXACTLY oracle-checked: the staged DSMs
-  *   and the seeded sample list are dumped to parquet side-tables that
-  *   the DuckDB dual replays with row_number + list_sort.
+  *   and J2/J7 probe joins.
+  *
+  * Both are bit-exactly oracle-checked: `stageAndStats` stages the
+  * reference and target DSMs and the seeded sample list as side tables
+  * ([[SideTables.stage]], one write after another on the calling
+  * thread, so each job carries that thread's job-local properties), and
+  * the DuckDB duals replay the stats with row_number + list_sort.
   */
 object AlignQueries {
 
@@ -73,18 +77,9 @@ object AlignQueries {
   private def stageAndStats(s: org.apache.spark.sql.SparkSession, dir: String) = {
     val (pts, tgt) = clouds(s, dir)
     val st = Align3d.stage(s, pts, tgt, cfg)
-    // the three side-table writes are independent jobs over already-
-    // persisted (ref/tgt) or driver-built (samples) inputs: submit them
-    // concurrently so one write's task tail back-fills the others
-    // (guide §2.6); write contents are unchanged.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val writes = Seq(
-      Future(st.refDsm.coalesce(1).write.mode("overwrite").parquet(s"$SideRoot/ref_dsm")),
-      Future(st.tgtDsm.coalesce(1).write.mode("overwrite").parquet(s"$SideRoot/tgt_dsm")),
-      Future(st.samples.coalesce(1).write.mode("overwrite").parquet(s"$SideRoot/samples")))
-    writes.foreach(Await.result(_, Duration.Inf))
+    SideTables.stage(st.refDsm, s"$SideRoot/ref_dsm")
+    SideTables.stage(st.tgtDsm, s"$SideRoot/tgt_dsm")
+    SideTables.stage(st.samples, s"$SideRoot/samples")
     (st, Align3d.offsetStats(st, cfg))
   }
 

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.core.{Geo, Tables}
+import graft.core.Tables
 import graft.grid.{Contours, Gridding}
 import graft.vector.RingMetrics
 import org.apache.spark.sql.functions._
@@ -15,11 +15,8 @@ import org.apache.spark.sql.functions._
  */
 object ContourQueries {
 
-  private val spec = Gridding.GridSpec(gsd = 10.0)
+  import Grid10.{dsm10, spec}
   private val Levels = Seq(15000L, 30000L, 45000L)
-
-  private def dsm10(s: org.apache.spark.sql.SparkSession, dir: String) =
-    Gridding.dsm(Gridding.points(Geo.withGeo(Tables.documents(s, dir)), spec))
 
   /** Shared dual prefix: blocks + per-level case classification +
     * tagged crossing points (struct per edge; a point is only consumed

@@ -166,13 +166,7 @@ object Joins {
     val stream = s.readStream.schema(schema).parquet(tmp.toString)
     val pts = Geo.withGeo(stream).select("doc_id", "lon", "lat")
     val hits = graft.streaming.StreamOps.pipEnrich(pts)
-    s.catalog.dropTempView("stream_pip_out")
-    val q = hits.writeStream.outputMode("append").format("memory")
-      .queryName("stream_pip_out")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.table("stream_pip_out").groupBy(col("aoi_id"))
+    QueryDef.streamToMemory(hits, "stream_pip_out").groupBy(col("aoi_id"))
       .agg(count(lit(1)).as("n"), sum(col("doc_id")).as("id_sum"))
       .orderBy(col("aoi_id"))
   }
@@ -213,24 +207,7 @@ object Joins {
         withinSec = 600, watermark = "1 hour")
       .select(col("user_id"), col("view_id"), col("click_id"),
         (col("cts").cast("double") - col("vts").cast("double")).as("lag_sec"))
-    s.catalog.dropTempView("stream_join_out")
-    // a stream-stream join runs FOUR state stores per shuffle partition
-    // (left/right x keyToNumValues/keyWithIndexToValue), each paying a
-    // per-micro-batch snapshot+commit regardless of row count — at smoke
-    // scale that fixed cost dominated the query (21.9 s of the round-3
-    // sweep at 32 partitions). Scope the partition count to the
-    // streaming run and restore after; on a real cluster this knob is
-    // sized to executors, not left at the session default.
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = joined.writeStream.outputMode("append").format("memory")
-        .queryName("stream_join_out")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    s.table("stream_join_out")
+    QueryDef.streamToMemory(joined, "stream_join_out")
       .orderBy(col("user_id"), col("view_id"), col("click_id"))
   }
 

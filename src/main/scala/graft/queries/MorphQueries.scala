@@ -12,16 +12,8 @@ import org.apache.spark.sql.functions._
   * DuckDB oracle. */
 object MorphQueries {
 
-  private val spec = Gridding.GridSpec(gsd = 10.0)
-  private val (w, h) = Gridding.boundsFor(spec)
-  private val bounds = Bounds(w, h)
+  import Grid10.{bounds, dsm10, h, offsets8, spec, w}
   private val BldgT = 35000L
-
-  private def dsm10(s: org.apache.spark.sql.SparkSession, dir: String) =
-    Gridding.dsm(Gridding.points(Geo.withGeo(Tables.documents(s, dir)), spec))
-
-  private val offsets8 =
-    "(VALUES (-1,-1), (-1,0), (-1,1), (0,-1), (0,1), (1,-1), (1,0), (1,1)) o(dx, dy)"
 
   /** W10: ground cells with a building majority in their in-bounds
     * neighborhood flip to building. */

@@ -56,8 +56,7 @@ object PipelineQueries {
        |  SELECT s.x, reach.r FROM sym s JOIN reach ON s.y = reach.id)
        |SELECT id AS doc_id, min(r) AS cluster
        |FROM reach GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
-    dupDocs(s).coalesce(1).write.mode("overwrite").parquet(s"$SideRoot/dupdocs")
-    val d = s.read.parquet(s"$SideRoot/dupdocs")
+    val d = SideTables.stage(dupDocs(s), s"$SideRoot/dupdocs")
       .select(col("doc_id"),
         split(col("text"), " ")(0).as("pk"),
         split(col("text"), " ")(1).as("sk"))

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /**
  * One verifiable engine operation: a Spark implementation plus (where the
@@ -32,5 +33,32 @@ object QueryDef {
     }
     rm(new java.io.File(root))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
+  }
+
+  /** Run the streaming query `writer` describes to the end of its input
+    * (`AvailableNow`, drained, stopped even when it fails), with
+    * `spark.sql.shuffle.partitions` at 4 for the length of the run and
+    * restored after. Stateful runs keep state stores per shuffle
+    * partition (four per partition for a stream-stream join), each
+    * paying a snapshot and a commit per micro-batch whatever its row
+    * count; at fixture scale that fixed cost dominated (21.9 s of the
+    * round-3 sweep at 32 partitions). */
+  def runStream(s: SparkSession, writer: DataStreamWriter[_]): Unit = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = s.conf.get(key)
+    s.conf.set(key, "4")
+    try {
+      val q = writer.trigger(Trigger.AvailableNow()).start()
+      try q.processAllAvailable() finally q.stop()
+    } finally s.conf.set(key, prev)
+  }
+
+  /** [[runStream]] appending `df` into the memory table `name`, returned
+    * as a frame; a run under a name already used replaces its table
+    * (the memory sink registers it with create-or-replace). */
+  def streamToMemory(df: DataFrame, name: String): DataFrame = {
+    val s = df.sparkSession
+    runStream(s, df.writeStream.outputMode("append").format("memory").queryName(name))
+    s.table(name)
   }
 }

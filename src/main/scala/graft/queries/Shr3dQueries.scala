@@ -46,9 +46,9 @@ object Shr3dQueries {
          |LEFT JOIN var2 v2 ON v2.gx = d.gx AND v2.gy = d.gy
          |ORDER BY d.gx, d.gy""".stripMargin) { (s, dir) =>
       val p = products(s, dir)
-      p.dsm.coalesce(1).write.mode("overwrite").parquet(s"$SideRoot/dsm")
-      p.dtm.coalesce(1).write.mode("overwrite").parquet(s"$SideRoot/dtm")
-      p.dsm2.coalesce(1).write.mode("overwrite").parquet(s"$SideRoot/dsm2")
+      SideTables.stage(p.dsm, s"$SideRoot/dsm")
+      SideTables.stage(p.dtm, s"$SideRoot/dtm")
+      SideTables.stage(p.dsm2, s"$SideRoot/dsm2")
       p.classification.orderBy(col("gx"), col("gy"))
     }
   }
@@ -80,10 +80,9 @@ object Shr3dQueries {
       Geo.withGeo(Tables.documents(s, dir)), spec5))
     val mask = dsm.filter(col("v") > 30000)
       .select(col("gx"), col("gy"), lit(1).as("v"))
-    ConnectedComponents.label(mask, Bounds(w, h), 16)
-      .select("gx", "gy", "label")
-      .coalesce(1).write.mode("overwrite").parquet(s"$SideRoot/covlabels")
-    val staged = s.read.parquet(s"$SideRoot/covlabels")
+    val staged = SideTables.stage(
+      ConnectedComponents.label(mask, Bounds(w, h), 16).select("gx", "gy", "label"),
+      s"$SideRoot/covlabels")
     // keep every ring (minArea 0) so cover equality is exact
     val polys = graft.vector.Vectorize.outlines(staged, minArea = 0.0)
       .filter(col("wkt").isNotNull)
@@ -152,9 +151,8 @@ object Shr3dQueries {
          |SELECT gx, gy, CAST(v AS BIGINT) AS v FROM f0
          |ORDER BY gx, gy""".stripMargin) { (s, dir) =>
       val p = products(s, dir)
-      p.min2.coalesce(1).write.mode("overwrite").parquet(s"$SideRoot/min2")
-      p.classifyGroundResult.dtm.coalesce(1).write.mode("overwrite")
-        .parquet(s"$SideRoot/loopdtm")
+      SideTables.stage(p.min2, s"$SideRoot/min2")
+      SideTables.stage(p.classifyGroundResult.dtm, s"$SideRoot/loopdtm")
       p.dtm.orderBy(col("gx"), col("gy"))
     }
   }

@@ -1,9 +1,12 @@
 package graft.queries
 
-/** SF-scoped roots for the oracle side tables.
+import org.apache.spark.sql.DataFrame
+
+/** Oracle side tables: SF-scoped roots and the one staging write.
   *
   * Several queries stage intermediate results to a parquet side table
-  * that their DuckDB dual reads back (`... FROM '/tmp/...parquet'`).
+  * that their DuckDB dual reads back (`... FROM '/tmp/...parquet'`),
+  * all through [[stage]].
   * The staged contents are derived from the SF input tables, so the
   * root must be scoped BY SF: a fixed path lets any later run at a
   * different scale factor (e.g. the Bench sweep at sf0.1, or a test
@@ -42,4 +45,22 @@ object SideTables {
       new java.io.File(sfDir).getName.replaceAll("[^A-Za-z0-9]", "_"))
 
   def root(name: String): String = s"/tmp/graft_${name}_$Token"
+
+  /** Stage `df` as a side table: write it as ONE parquet file at `dir`
+    * (`coalesce(1)`, overwriting what is there) and return the frame
+    * read back from that path, so the engine query consumes the same
+    * bytes its dual replays. The read-back takes `df`'s schema, so it
+    * infers nothing and runs no job; callers that only feed the dual
+    * ignore it.
+    *
+    * Callers must keep `df` bounded independently of the scale factor:
+    * the single file is written by one task. Every staged frame is a
+    * fixed lattice (the gsd-10, gsd-5 and gsd-120 DSMs) or a fixture
+    * constant (4000 pages, 3000/3000 url metadata rows, 4000 urls, 5000
+    * items, 1000 line docs, 480 dup docs, 20000 align samples, PQ
+    * codebooks), so no size gate is needed. */
+  def stage(df: DataFrame, dir: String): DataFrame = {
+    df.coalesce(1).write.mode("overwrite").parquet(dir)
+    df.sparkSession.read.schema(df.schema).parquet(dir)
+  }
 }

@@ -199,8 +199,7 @@ object SimilarityQueries {
       val sample = t.orderBy(col("vec_id")).limit(256)
         .select(col("v")).as[Seq[Double]].collect().map(_.toArray)
       val cb = graft.similarity.Pq.train(sample, M, NC, iters = 4)
-      graft.similarity.Pq.codebookDf(s, cb)
-        .coalesce(1).write.mode("overwrite").parquet(s"$PqSideRoot/cb")
+      SideTables.stage(graft.similarity.Pq.codebookDf(s, cb), s"$PqSideRoot/cb")
       val queries = e.filter(col("vec_id") < 3).orderBy(col("vec_id"))
         .select(col("vec_id"), col("v")).as[(Long, Seq[Double])]
         .collect().map { case (id, v) => (id, v.toArray) }.toSeq
@@ -260,8 +259,7 @@ object SimilarityQueries {
       val sample = t.orderBy(col("vec_id")).limit(256)
         .select(col("v")).as[Seq[Double]].collect().map(_.toArray)
       val cb = graft.similarity.Pq.train(sample, M, NC, iters = 4)
-      graft.similarity.Pq.codebookDf(s, cb)
-        .coalesce(1).write.mode("overwrite").parquet(s"$PqSideRoot/cb_ivf")
+      SideTables.stage(graft.similarity.Pq.codebookDf(s, cb), s"$PqSideRoot/cb_ivf")
       val q = e.filter(col("vec_id") < 3)
         .select(col("vec_id").as("qid"), col("v").as("qv"))
       graft.similarity.Pq.ivfPqTopK(q, t, cb, 10, nList = 16, nProbe = 4)

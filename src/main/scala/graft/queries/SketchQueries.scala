@@ -78,12 +78,11 @@ object SketchQueries {
        |SELECT lang, item, n FROM c WHERE n >= 20
        |ORDER BY lang, n DESC, item""".stripMargin) { (s, dir) =>
     import s.implicits._
-    s.range(5000L).map { id =>
+    val pages = s.range(5000L).map { id =>
       val (url, _, lang, _) = graft.ingest.WebPages.makeMeta(13L, id)
       (url, lang)
     }.toDF("url", "lang")
-      .coalesce(1).write.mode("overwrite").parquet(s"$SideRoot/freqpages")
-    val p = s.read.parquet(s"$SideRoot/freqpages")
+    val p = SideTables.stage(pages, s"$SideRoot/freqpages")
       .withColumn("item", regexp_extract(col("url"), "https://([^/]+)/", 1))
     p.groupBy("lang")
       .agg(Sketches.freqItems(col("item"), minCount = 20L).as("fi"))

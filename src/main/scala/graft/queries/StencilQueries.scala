@@ -5,6 +5,21 @@ import graft.grid.Gridding
 import graft.stencil.{Kernels, TileStencil}
 import org.apache.spark.sql.functions._
 
+/** The gsd-10 DSM fixture the stencil, morphology and contour packs
+  * share: its grid, lattice bounds, engine DSM, and the 8-neighbor
+  * offsets `o(dx, dy)` their duals join against. */
+private[queries] object Grid10 {
+  val spec = Gridding.GridSpec(gsd = 10.0)
+  val (w, h) = Gridding.boundsFor(spec) // (38, 19)
+  val bounds = TileStencil.Bounds(w, h)
+
+  def dsm10(s: org.apache.spark.sql.SparkSession, dir: String) =
+    Gridding.dsm(Gridding.points(Geo.withGeo(Tables.documents(s, dir)), spec))
+
+  val offsets8 =
+    "(VALUES (-1,-1), (-1,0), (-1,1), (0,-1), (0,1), (1,-1), (1,0), (1,1)) o(dx, dy)"
+}
+
 /**
  * SQL-checked stencil queries (SURVEY.md §2.5). Run on a coarse
  * 10-degree grid where the doc scatter is dense enough for neighborhoods
@@ -15,16 +30,8 @@ import org.apache.spark.sql.functions._
  */
 object StencilQueries {
 
-  private val spec = Gridding.GridSpec(gsd = 10.0)
-  private val (w, h) = Gridding.boundsFor(spec) // (38, 19)
-  private val bounds = TileStencil.Bounds(w, h)
+  import Grid10.{bounds, dsm10, h, offsets8, spec, w}
   private val EdgeDz = 40000
-
-  private def dsm10(s: org.apache.spark.sql.SparkSession, dir: String) =
-    Gridding.dsm(Gridding.points(Geo.withGeo(Tables.documents(s, dir)), spec))
-
-  private val offsets8 =
-    "(VALUES (-1,-1), (-1,0), (-1,1), (0,-1), (0,1), (1,-1), (1,0), (1,1)) o(dx, dy)"
   private val offsets9 =
     "(VALUES (-1,-1), (-1,0), (-1,1), (0,-1), (0,0), (0,1), (1,-1), (1,0), (1,1)) o(dx, dy)"
 

@@ -355,17 +355,7 @@ object TemporalQueries {
       val top = graft.streaming.StreamOps.windowTopK(
         stream, "ts", "user_id", win = "1 hour", k = 3,
         watermark = "400 days")
-      s.catalog.dropTempView("stream_topk_out")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = top.writeStream.outputMode("append").format("memory")
-          .queryName("stream_topk_out")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.table("stream_topk_out").orderBy(col("ws"), col("rank"))
+      QueryDef.streamToMemory(top, "stream_topk_out").orderBy(col("ws"), col("rank"))
     }
   }
 
@@ -445,17 +435,7 @@ object TemporalQueries {
       val rows = graft.streaming.StreamOps.streamCusum(
         stream, "event_type", "ts", bucketSecs = 3600L,
         drift = 5L, threshold = 15L, watermark = "400 days")
-      s.catalog.dropTempView("stream_cusum_out")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = rows.toDF().writeStream.outputMode("append")
-          .format("memory").queryName("stream_cusum_out")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.table("stream_cusum_out")
+      QueryDef.streamToMemory(rows.toDF(), "stream_cusum_out")
         .filter(col("key") =!= "_sentinel")
         .orderBy(col("key"), col("t"))
     }

@@ -170,9 +170,8 @@ object TextQueries {
        |SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS text
        |FROM r WHERE rn = 1 GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
     import s.implicits._
-    s.range(1000L).map(id => (id, lineDoc(11L, id))).toDF("doc_id", "text")
-      .coalesce(1).write.mode("overwrite").parquet(s"$SideRoot/linedocs")
-    graft.dedup.LineDedup.dedupLines(s.read.parquet(s"$SideRoot/linedocs"))
+    val docs = s.range(1000L).map(id => (id, lineDoc(11L, id))).toDF("doc_id", "text")
+    graft.dedup.LineDedup.dedupLines(SideTables.stage(docs, s"$SideRoot/linedocs"))
       .orderBy(col("doc_id"))
   }
 

@@ -42,8 +42,7 @@ object WebQueries {
   private def stagedPages(s: org.apache.spark.sql.SparkSession) = {
     val pages = withGeo(WebPages.generate(s, N).toDF())
       .select("url", "warc_ts", "text", "lang", "lon", "lat", "z")
-    pages.coalesce(1).write.mode("overwrite").parquet(s"$SideRoot/pages")
-    s.read.parquet(s"$SideRoot/pages")
+    SideTables.stage(pages, s"$SideRoot/pages")
   }
 
   /** Dedup CTE shared by both duals — WebPages.latestCapture's exact
@@ -130,13 +129,10 @@ object WebQueries {
       .map { id =>
         val (url, ts, lang, _) = WebPages.makeMeta(42L, id); (url, ts, lang)
       }.toDF("url", "warc_ts", "lang")
-    val seen = meta(0L, 3000L)
-    val batch = meta(2000L, 5000L)
-    seen.coalesce(1).write.mode("overwrite").parquet(s"$SideRoot/seen")
-    batch.coalesce(1).write.mode("overwrite").parquet(s"$SideRoot/batch")
-    graft.dedup.Incremental.newRows(
-      s.read.parquet(s"$SideRoot/batch"), s.read.parquet(s"$SideRoot/seen"),
-      "url", estimatedItems = 4096L, numBits = 1L << 16)
+    val seen = SideTables.stage(meta(0L, 3000L), s"$SideRoot/seen")
+    val batch = SideTables.stage(meta(2000L, 5000L), s"$SideRoot/batch")
+    graft.dedup.Incremental.newRows(batch, seen, "url",
+      estimatedItems = 4096L, numBits = 1L << 16)
       .orderBy(col("url"), col("warc_ts"), col("lang"))
   }
 
@@ -181,9 +177,8 @@ object WebQueries {
        |SELECT url, norm_url, host, reg_domain
        |FROM u ORDER BY url""".stripMargin) { (s, dir) =>
     import s.implicits._
-    s.range(4000L).map(id => messyUrl(99L, id)).toDF("url")
-      .coalesce(1).write.mode("overwrite").parquet(s"$SideRoot/rawurls")
-    val u = s.read.parquet(s"$SideRoot/rawurls")
+    val u = SideTables.stage(s.range(4000L).map(id => messyUrl(99L, id)).toDF("url"),
+      s"$SideRoot/rawurls")
     u.select(col("url"),
         UrlOps.normalize(col("url")).as("norm_url"),
         UrlOps.hostOf(col("url")).as("host"),
@@ -218,13 +213,11 @@ object WebQueries {
     val schema = s.read.parquet(src).schema
     val stream = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(src)
-    val q = graft.streaming.StreamOps.upsertSink(stream, root, "pages",
-        keyCols = Seq("url"),
-        orderCols = Seq(col("warc_ts").desc, md5(col("text")).desc),
-        queryName = "stream_upsert")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    val sink = graft.streaming.StreamOps.upsertSink(stream, root, "pages",
+      keyCols = Seq("url"),
+      orderCols = Seq(col("warc_ts").desc, md5(col("text")).desc),
+      queryName = "stream_upsert")
+    QueryDef.runStream(s, sink)
     val m = graft.meta.Snapshots.latest(root, "pages").get
     require(m.snapshotId >= 3,
       s"expected >= 4 micro-batch commits, saw id ${m.snapshotId}")
@@ -262,17 +255,7 @@ object WebQueries {
         stream.withColumn("content_md5", md5(col("text"))),
         "warc_ts", Seq("url", "warc_ts", "content_md5"),
         horizon = "3650 days")
-    s.catalog.dropTempView("stream_dedup_out")
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = deduped.writeStream.outputMode("append").format("memory")
-        .queryName("stream_dedup_out")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    s.table("stream_dedup_out")
+    QueryDef.streamToMemory(deduped, "stream_dedup_out")
       .select(col("url"), col("warc_ts"), col("content_md5"),
         length(col("text")).cast("long").as("text_len"))
       .orderBy(col("url"), col("warc_ts"), col("content_md5"))

@@ -20,6 +20,23 @@ class QueriesSmokeSpec extends SparkSpec {
     }
   }
 
+  test("SideTables.stage writes one file and reads back exactly its rows") {
+    import graft.queries.SideTables
+    val dir = java.nio.file.Files.createTempDirectory("graft-stage")
+      .resolve("t").toString
+    val df = spark.range(0L, 1000L, 1L, 7)
+      .select(col("id"), (col("id") % 13).as("k"), col("id").cast("string").as("s"))
+    assert(df.rdd.getNumPartitions == 7)
+    val back = SideTables.stage(df, dir)
+    assert(back.exceptAll(df).isEmpty && df.exceptAll(back).isEmpty)
+    assert(back.schema == spark.read.parquet(dir).schema)
+    assert(new java.io.File(dir).list().count(_.endsWith(".parquet")) == 1)
+    val small = df.filter(col("id") < 10)
+    SideTables.stage(small, dir)
+    val reread = spark.read.parquet(dir)
+    assert(reread.exceptAll(small).isEmpty && small.exceptAll(reread).isEmpty)
+  }
+
   test("cell expression matches Scala model") {
     import spark.implicits._
     val pts = Seq.tabulate(500) { i =>

@@ -336,6 +336,31 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("runStream: 4 shuffle partitions only during the run, restored after a failing sink; memory reruns replace the table") {
+    import graft.queries.QueryDef
+    import org.apache.spark.sql.{Dataset, Row}
+    val src = java.nio.file.Files.createTempDirectory("graft-run-stream").toString
+    spark.range(20L).write.mode("overwrite").parquet(src)
+    def stream() = spark.readStream.schema("id LONG").parquet(src)
+    val key = "spark.sql.shuffle.partitions"
+    withConf(key, "7") {
+      var during = ""
+      val failing = stream().writeStream.foreachBatch {
+        (batch: Dataset[Row], _: Long) =>
+          during = batch.sparkSession.conf.get(key)
+          throw new IllegalStateException("sink failed")
+      }
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        QueryDef.runStream(spark, failing))
+      assert(during == "4")
+      assert(spark.conf.get(key) == "7")
+      assert(QueryDef.streamToMemory(stream(), "run_stream_out").count() == 20)
+      assert(QueryDef.streamToMemory(stream().filter(col("id") < 5),
+        "run_stream_out").count() == 5)
+      assert(spark.conf.get(key) == "7")
+    }
+  }
+
   test("snapshot sink: one committed snapshot per micro-batch, replay-idempotent") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

@@ -10,7 +10,11 @@ doubles but reported with ulp tolerance so near-misses are visible).
 Usage: python3 tools/check.py [--sf /root/testdata/sf0.01] [--skip-verify]
 """
 import argparse, json, math, os, subprocess, sys
+from pathlib import Path
 import duckdb
+
+# the checkout holding this script: Verify builds and runs its sources
+REPO = Path(__file__).resolve().parents[1]
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -18,8 +22,9 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 
 def run_verify(sf, out):
     cmd = ["sbt", "-batch", f'runMain graft.Verify {sf} {out}']
-    env = dict(os.environ, SPARK_GRAFT_CPUS="8")
-    r = subprocess.run(cmd, cwd="/root/repo", env=env,
+    env = dict(os.environ)
+    env.setdefault("SPARK_GRAFT_CPUS", "8")
+    r = subprocess.run(cmd, cwd=REPO, env=env,
                        capture_output=True, text=True)
     sys.stdout.write(r.stdout[-3000:])
     if r.returncode != 0:

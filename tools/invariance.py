@@ -3,6 +3,7 @@
 run graft.Verify at two SPARK_GRAFT_CPUS levels on the same SF and
 value-compare every query's parquet output."""
 import os, subprocess, sys
+from pathlib import Path
 import duckdb
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
@@ -11,7 +12,7 @@ OUTS = [("/tmp/graft_inv_c2", "2"), ("/tmp/graft_inv_c8", "8")]
 for out, cpus in OUTS:
     env = dict(os.environ, SPARK_GRAFT_CPUS=cpus)
     r = subprocess.run(["sbt", "-batch", f"runMain graft.Verify {SF} {out}"],
-                       cwd="/root/repo", env=env, capture_output=True, text=True)
+                       cwd=Path(__file__).resolve().parents[1], env=env, capture_output=True, text=True)
     if r.returncode != 0:
         sys.exit(f"verify at cpus={cpus} failed:\n{r.stderr[-2000:]}")
 
