@@ -1,6 +1,6 @@
 package graft.api
 
-import graft.cc.{ConnectedComponents, FillObjectBounds}
+import graft.cc.{ConnectedComponents, FillObjectBounds, ScanlineFill}
 import graft.pyramid.FillVoids
 import graft.stencil.{DenseGrid, Kernels, TileStencil}
 import graft.stencil.TileStencil.Bounds
@@ -171,12 +171,12 @@ object ClassifyGround {
       while (bIt.hasNext) {
         val e = bIt.next()
         val lbl = e.getKey.intValue(); val b = e.getValue
-        val cells = scala.collection.mutable.ArrayBuffer[FillObjectBounds.CellIn]()
+        val cells = scala.collection.mutable.ArrayBuffer[ScanlineFill.CellIn]()
         for (y <- math.max(0, b(2) - m) to math.min(b(3) + m, h - 1);
              x <- math.max(0, b(0) - m) to math.min(b(1) + m, w - 1)) {
           val i = dtm.index(x, y)
           if (dtm.has(i))
-            cells += FillObjectBounds.CellIn(0L, x, y, dtm(i), label(i) == lbl)
+            cells += ScanlineFill.CellIn(0L, x, y, dtm(i), label(i) == lbl)
         }
         FillObjectBounds.fillOne(cells.toArray, w, h, cfg.dhBins)
           .foreach { case (x, y) => voidMask.set(dtm.index(x.toInt, y.toInt)) }

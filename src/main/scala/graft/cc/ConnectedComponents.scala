@@ -1,5 +1,6 @@
 package graft.cc
 
+import graft.dedup.DupClusters
 import graft.stencil.DenseGrid
 import graft.stencil.TileStencil.Bounds
 import org.apache.spark.sql.DataFrame
@@ -16,13 +17,20 @@ import org.apache.spark.sql.functions._
  * reference's scan-order label numbering (SURVEY.md §7.4 risk 2; the
  * reference's own labels are erased by its G6 pass anyway).
  *
- * Algorithm (classic Spark CCL):
- *  1. per-tile local CCL (union-find inside flatMapGroups, zero halo);
+ * Algorithm (classic Spark CCL, built from the engine's two labeling
+ * cores):
+ *  1. per-tile labels: each tile's cells fill a [[DenseGrid]] sized to
+ *     the bbox of the tile's occupied cells (at most tileSize²) and are
+ *     labeled by `DenseGrid.labels`; bbox indices are row-major like
+ *     cell ids, so each tile component's label maps back to its minimum
+ *     cell id;
  *  2. cross-tile equivalence edges from border-cell adjacency (one
  *     self-join restricted to border cells);
- *  3. min-label propagation with pointer jumping on the (small) label
- *     graph until fixpoint — O(log diameter) rounds, each
- *     localCheckpoint'ed;
+ *  3. the (O(perimeter)) seam graph is resolved by
+ *     [[graft.dedup.DupClusters.components]] — one task under the
+ *     strategy gate, its pointer-jumping loop above it, and an error,
+ *     not half-merged labels, if that loop does not converge; labels
+ *     with no seam edge keep their own;
  *  4. one join to relabel cells.
  *
  * `maxDz`: optional G2 semantics — cells connect only when
@@ -50,10 +58,9 @@ object ConnectedComponents {
     * reference's BACKGROUND labeling in `Image.h:288-297` — holes are
     * 4-connected while foreground objects are 8-connected).
     * Grids within the strategy gate (`DenseGrid.fits`) label in ONE
-    * task (`DenseGrid.labels`, a single union-find sweep — a 722-cell
-    * raster should not pay tile shuffles + pointer-jump rounds); larger
-    * grids take the tiled distributed path. Both asserted equal in
-    * CcSpec. */
+    * task (`DenseGrid.labels` over the whole lattice — a 722-cell
+    * raster should not pay tile shuffles); larger grids take the tiled
+    * path. Both asserted equal in CcSpec. */
   def label(cells: DataFrame, bounds: Bounds, tileSize: Int = 128,
             maxDz: Option[Int] = None, maxCount: Option[Long] = None,
             diag: Boolean = true): DataFrame = {
@@ -67,54 +74,23 @@ object ConnectedComponents {
         g(0).cells.map(c => (c.gx, c.gy, c.v, lbl((c.gy * w + c.gx).toInt).toLong))
       }.toDF("gx", "gy", "v", "label")
 
-    val dzOk: (Int, Int) => Boolean = maxDz match {
-      case Some(dz) => (a, b) => math.abs(a - b) <= dz
-      case None => (_, _) => true
-    }
-
     val ds = cells.select(col("gx").cast("long"), col("gy").cast("long"),
       col("v").cast("int")).as[Cell]
 
-    // ---- 1. per-tile local CCL ----
+    // ---- 1. per-tile labels on the bbox of the tile's occupied cells ----
     val local = ds.groupByKey(c => ((c.gx / t) << 32) | (c.gy / t))
       .flatMapGroups { (_, it) =>
         val arr = it.toArray
-        val idx = new java.util.HashMap[java.lang.Long, java.lang.Integer](arr.length * 2)
-        arr.zipWithIndex.foreach { case (c, i) => idx.put(c.gy * w + c.gx, i) }
-        val parent = Array.tabulate(arr.length)(identity)
-        def find(i: Int): Int = {
-          var r = i
-          while (parent(r) != r) r = parent(r)
-          var c = i
-          while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-          r
-        }
-        def union(a: Int, b: Int): Unit = {
-          val ra = find(a); val rb = find(b)
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
-        val offs = if (diag) Seq((1, -1), (1, 0), (1, 1), (0, 1))
-                   else Seq((1, 0), (0, 1))
-        arr.zipWithIndex.foreach { case (c, i) =>
-          offs.foreach { case (dx, dy) =>
-            val nx = c.gx + dx; val ny = c.gy + dy
-            if (nx >= 0 && nx < w && ny >= 0) { // id aliasing guard
-              val j = idx.get(ny * w + nx)
-              // neighbor must be in the same tile (cross-tile handled below)
-              if (j != null && arr(j).gx / t == c.gx / t && arr(j).gy / t == c.gy / t
-                && dzOk(c.v, arr(j).v)) union(i, j.intValue())
-            }
-          }
-        }
-        val rootMin = new java.util.HashMap[java.lang.Integer, java.lang.Long]()
-        arr.zipWithIndex.foreach { case (c, i) =>
-          val r = find(i)
-          val id = c.gy * w + c.gx
-          val cur = rootMin.get(r)
-          if (cur == null || id < cur.longValue()) rootMin.put(r, id)
-        }
-        arr.zipWithIndex.iterator.map { case (c, i) =>
-          Labeled(c.gx, c.gy, c.v, rootMin.get(find(i)).longValue())
+        val x0 = arr.iterator.map(_.gx).min; val y0 = arr.iterator.map(_.gy).min
+        val bw = (arr.iterator.map(_.gx).max - x0 + 1).toInt
+        val g = new DenseGrid(bw, (arr.iterator.map(_.gy).max - y0 + 1).toInt)
+        arr.foreach(c => g.set(g.index((c.gx - x0).toInt, (c.gy - y0).toInt), c.v))
+        // bbox indices are row-major like cell ids: the minimum index of
+        // a component maps to its minimum cell id
+        val lbl = g.labels(maxDz, None, diag)
+        arr.iterator.map { c =>
+          val l = lbl(g.index((c.gx - x0).toInt, (c.gy - y0).toInt))
+          Labeled(c.gx, c.gy, c.v, (y0 + l / bw) * w + x0 + l % bw)
         }
       }.toDF("gx", "gy", "v", "lbl").localCheckpoint()
 
@@ -137,37 +113,13 @@ object ConnectedComponents {
       case Some(dz) => edges.filter(abs(col("av") - col("bv")) <= dz)
       case None => edges
     }
-    val edgeDf = edges.select(col("la"), col("lb")).distinct().localCheckpoint()
 
-    // ---- 3. min-label propagation + pointer jumping ----
-    var rep = local.select(col("lbl").as("l")).distinct()
-      .withColumn("r", col("l")).localCheckpoint()
-    var converged = false
-    var round = 0
-    while (!converged && round < 64) {
-      val viaEdges = edgeDf
-        .join(rep.withColumnRenamed("l", "lb2").withColumnRenamed("r", "rb"),
-          col("lb") === col("lb2"))
-        .select(col("la").as("l"), col("rb").as("r"))
-      val stepped = rep.select("l", "r").unionByName(viaEdges)
-        .groupBy("l").agg(min("r").as("r"))
-      // pointer jumping: r <- rep(r)
-      val jumped = stepped
-        .join(stepped.select(col("l").as("r"), col("r").as("r2")), Seq("r"), "left")
-        .select(col("l"), coalesce(col("r2"), col("r")).as("r"))
-        .localCheckpoint()
-      val changed = jumped.as("n").join(rep.as("o"), col("n.l") === col("o.l"))
-        .filter(col("n.r") =!= col("o.r")).count()
-      rep = jumped
-      converged = changed == 0
-      round += 1
-    }
+    // ---- 3. resolve the seam graph; labels with no seam edge keep theirs ----
+    val rep = DupClusters.components(edges.select(col("la"), col("lb")).distinct())
+    val full = local.join(rep, local("lbl") === rep("id"), "left")
+      .select(col("gx"), col("gy"), col("v"), coalesce(col("cluster"), col("lbl")).as("label"))
 
-    // ---- 4. relabel ----
-    val full = local.join(rep, local("lbl") === rep("l"))
-      .select(col("gx"), col("gy"), col("v"), col("r").as("label"))
-
-    // ---- 5. optional region cap (canonical chunking, see object doc) ----
+    // ---- 4. optional region cap (canonical chunking, see object doc) ----
     applyCap(full, w, maxCount)
   }
 

@@ -1,8 +1,8 @@
 package graft.cc
 
+import graft.cc.ScanlineFill.CellIn
 import graft.stencil.TileStencil.Bounds
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /**
  * G5 object interior fill, reference-faithful variant (pubgeo
@@ -31,14 +31,13 @@ import org.apache.spark.sql.functions._
  * visible to a later object's passes) are order-dependent and cannot be
  * reproduced by any partitioning-independent engine.
  *
- * Distribution: identical shape to [[ScanlineFill]] — bbox(+rad+1)
- * exploded to covering tile keys, DTM cells equi-joined on tile, exact
- * containment as a post-filter, one mapGroups per label. Upstream
- * region caps (ConnectedComponents maxCount) bound per-group memory.
+ * Distribution: [[ScanlineFill]]'s gather ([[ScanlineFill.gather]])
+ * with a margin of rad+1 — bbox(+rad+1) exploded to covering tile keys,
+ * DTM cells equi-joined on tile, exact containment as a post-filter —
+ * then one mapGroups per label. Upstream region caps
+ * (ConnectedComponents maxCount) bound per-group memory.
  */
 object FillObjectBounds {
-
-  final case class CellIn(label: Long, gx: Long, gy: Long, v: Int, isObj: Boolean)
 
   private final val InOne: Byte = 1
   private final val Accepted: Byte = 2
@@ -50,33 +49,11 @@ object FillObjectBounds {
             bounds: Bounds, rad: Int): DataFrame = {
     val spark = labeled.sparkSession
     import spark.implicits._
-    val t = ScanlineFill.GatherTile
-    val m = rad + 1 // gather margin: dilation writes up to bbox + rad + 1
-    val bboxes = labeled.groupBy("label")
-      .agg(min("gx").as("xmin"), max("gx").as("xmax"),
-        min("gy").as("ymin"), max("gy").as("ymax"))
-    val bboxTiles = bboxes
-      .withColumn("tx", explode(sequence(
-        expr(s"greatest(0L, xmin - $m) div $t"), expr(s"(xmax + $m) div $t"))))
-      .withColumn("ty", explode(sequence(
-        expr(s"greatest(0L, ymin - $m) div $t"), expr(s"(ymax + $m) div $t"))))
-    val dtmTiled = dtm
-      .withColumn("tx", expr(s"cast(gx as long) div $t"))
-      .withColumn("ty", expr(s"cast(gy as long) div $t"))
-    val cand = dtmTiled.join(bboxTiles, Seq("tx", "ty"))
-      .filter(col("gx") >= col("xmin") - m && col("gx") <= col("xmax") + m &&
-        col("gy") >= col("ymin") - m && col("gy") <= col("ymax") + m)
-      .join(labeled.withColumn("isObj", lit(true)), Seq("gx", "gy", "label"), "left")
-      .select(col("label"), col("gx"), col("gy"), col("v").cast("int"),
-        coalesce(col("isObj"), lit(false)).as("isObj"))
-      .as[CellIn]
-
     val w = bounds.w.toLong
     val h = bounds.h.toLong
-    val radL = rad
-
-    cand.groupByKey(_.label).flatMapGroups { (_, it) =>
-      fillOne(it.toArray, w, h, radL)
+    // gather margin: dilation writes up to bbox + rad + 1
+    ScanlineFill.gather(labeled, dtm, rad + 1).groupByKey(_.label).flatMapGroups { (_, it) =>
+      fillOne(it.toArray, w, h, rad)
     }.toDF("gx", "gy").distinct()
   }
 

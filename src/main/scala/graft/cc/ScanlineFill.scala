@@ -1,6 +1,6 @@
 package graft.cc
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /**
@@ -19,11 +19,12 @@ import org.apache.spark.sql.functions._
  *
  * Distribution: objects are bbox-bounded and small (G2 caps region
  * size), so each object's bbox block is gathered per label and scanned
- * locally in mapGroups (SURVEY.md §2.8 G5 locality). The gather is a
- * TILE equi-join, not a range theta-join: each bbox (+1 margin)
- * explodes to its covering tile keys and DSM cells join on their tile —
- * O(cells + bbox-covered cells), never O(cells x objects). The exact
- * bbox containment is a post-filter on the equi-join output.
+ * locally in mapGroups (SURVEY.md §2.8 G5 locality). The gather,
+ * [[gather]] with a margin of 1, is the one both G5 fills share: a
+ * TILE equi-join, not a range theta-join — each bbox (+margin)
+ * explodes to its covering tile keys and DSM cells join on their tile,
+ * O(cells + bbox-covered cells), never O(cells x objects), with the
+ * exact bbox containment as a post-filter on the equi-join output.
  */
 object ScanlineFill {
 
@@ -33,33 +34,41 @@ object ScanlineFill {
   /** Tile edge for the bbox-cover equi-join. */
   final val GatherTile = 64
 
-  def apply(labeled: DataFrame /* gx, gy, label */, dsm: DataFrame /* gx, gy, v */,
-            dzRaw: Int): DataFrame = {
+  /** The G5 gather: per object of `labeled`, the `grid` cells of its
+    * bbox grown by `margin` on every side, each flagged with whether it
+    * is an object cell. Each bbox (+margin, clamped at 0 — grid coords
+    * are non-negative) explodes to its covering [[GatherTile]] keys and
+    * grid cells equi-join on their tile; the exact bbox containment is a
+    * post-filter on the join output. */
+  def gather(labeled: DataFrame /* gx, gy, label */, grid: DataFrame /* gx, gy, v */,
+             margin: Int): Dataset[CellIn] = {
     val spark = labeled.sparkSession
     import spark.implicits._
     val t = GatherTile
-    val bboxes = labeled.groupBy("label")
+    val m = margin
+    val bboxTiles = labeled.groupBy("label")
       .agg(min("gx").as("xmin"), max("gx").as("xmax"),
         min("gy").as("ymin"), max("gy").as("ymax"))
-    // bbox (+1 margin, clamped at 0 — grid coords are non-negative)
-    // -> covering tile lattice keys
-    val bboxTiles = bboxes
       .withColumn("tx", explode(sequence(
-        expr(s"greatest(0L, xmin - 1) div $t"), expr(s"(xmax + 1) div $t"))))
+        expr(s"greatest(0L, xmin - $m) div $t"), expr(s"(xmax + $m) div $t"))))
       .withColumn("ty", explode(sequence(
-        expr(s"greatest(0L, ymin - 1) div $t"), expr(s"(ymax + 1) div $t"))))
-    val dsmTiled = dsm
-      .withColumn("tx", expr(s"cast(gx as long) div $t"))
+        expr(s"greatest(0L, ymin - $m) div $t"), expr(s"(ymax + $m) div $t"))))
+    grid.withColumn("tx", expr(s"cast(gx as long) div $t"))
       .withColumn("ty", expr(s"cast(gy as long) div $t"))
-    val cand = dsmTiled.join(bboxTiles, Seq("tx", "ty"))
-      .filter(col("gx") >= col("xmin") - 1 && col("gx") <= col("xmax") + 1 &&
-        col("gy") >= col("ymin") - 1 && col("gy") <= col("ymax") + 1)
+      .join(bboxTiles, Seq("tx", "ty"))
+      .filter(col("gx") >= col("xmin") - m && col("gx") <= col("xmax") + m &&
+        col("gy") >= col("ymin") - m && col("gy") <= col("ymax") + m)
       .join(labeled.withColumn("isObj", lit(true)), Seq("gx", "gy", "label"), "left")
       .select(col("label"), col("gx"), col("gy"), col("v").cast("int"),
         coalesce(col("isObj"), lit(false)).as("isObj"))
       .as[CellIn]
+  }
 
-    val filled = cand.groupByKey(_.label).flatMapGroups { (label, it) =>
+  def apply(labeled: DataFrame /* gx, gy, label */, dsm: DataFrame /* gx, gy, v */,
+            dzRaw: Int): DataFrame = {
+    val spark = labeled.sparkSession
+    import spark.implicits._
+    val filled = gather(labeled, dsm, 1).groupByKey(_.label).flatMapGroups { (label, it) =>
       val cells = it.toArray
       val byPos = cells.map(c => (c.gx, c.gy) -> c).toMap
       val obj = cells.filter(_.isObj)

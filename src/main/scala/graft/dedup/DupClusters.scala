@@ -36,7 +36,9 @@ import org.apache.spark.sql.functions._
  * The cluster id is the minimum member id — which IS the canonical-doc
  * choice (keep-min) used by the exact-dedup family, so
  * `components(pairs)` composes directly with a `filter(id === cluster)`
- * keep step.
+ * keep step. It is also the engine's one graph-CC loop:
+ * [[graft.cc.ConnectedComponents]] resolves its tile-seam label graph
+ * here.
  */
 object DupClusters {
 
@@ -120,7 +122,9 @@ object DupClusters {
   }
 
   /** Dense single-task strategy: one union-find sweep over the whole
-    * (gate-bounded) edge list in one executor task. Union-by-min keeps
+    * (gate-bounded) edge list in one executor task, entered with
+    * `coalesce(1)` over the pinned blocks — no exchange, the
+    * [[DenseGrid.task]] rule. Union-by-min keeps
     * every tree's root at the component's minimum node id — the same
     * canonical labels as the distributed loop, independent of edge
     * order (the component minimum, once a root, is never displaced:
@@ -130,7 +134,7 @@ object DupClusters {
     import spark.implicits._
     pinned.select(col("src").cast("long"), col("dst").cast("long"))
       .as[(Long, Long)]
-      .repartition(1).mapPartitions { it =>
+      .coalesce(1).mapPartitions { it =>
         val parent = new scala.collection.mutable.LongMap[Long]()
         def add(x: Long): Unit = if (!parent.contains(x)) parent.update(x, x)
         def find(x: Long): Long = {

@@ -86,7 +86,8 @@ object DistanceTransform {
   }
 
   /** Dense single-task strategy: multi-source Dijkstra over the whole
-    * (gate-bounded) occupied-cell set in one executor task. Distances
+    * (gate-bounded) occupied-cell set in one executor task, entered with
+    * `coalesce(1)` over the two pinned tables (no exchange). Distances
     * are exact chamfer minima, so the result set is identical to the
     * frontier loop's fixpoint regardless of processing order. The
     * sources frame is already restricted to occupied cells with d=0. */
@@ -98,7 +99,7 @@ object DistanceTransform {
         lit(false).as("src"))
       .unionByName(sources.select(col("gx").cast("long"),
         col("gy").cast("long"), lit(true).as("src")))
-    tagged.as[(Long, Long, Boolean)].repartition(1).mapPartitions { it =>
+    tagged.as[(Long, Long, Boolean)].coalesce(1).mapPartitions { it =>
       val occSet = new java.util.HashSet[Long]()
       val srcs = new scala.collection.mutable.ArrayBuffer[Long]()
       it.foreach { case (x, y, isSrc) =>

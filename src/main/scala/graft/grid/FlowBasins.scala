@@ -115,7 +115,8 @@ object FlowBasins {
   }
 
   /** Dense single-task strategy: memoized sequential path walk over the
-    * whole (gate-bounded) pointer table in one executor task — same
+    * whole (gate-bounded) pointer table in one executor task, entered
+    * with `coalesce(1)` over the pinned table (no exchange) — same
     * contract as the doubling loop: output nid = terminal self-loop of
     * the path, w = sum of hop weights (self-loop hops carry 0 by the
     * input contract, so sinks resolve to themselves with their own w=0).
@@ -124,7 +125,7 @@ object FlowBasins {
   private def resolveDense(pt: DataFrame): DataFrame = {
     val spark = pt.sparkSession
     import spark.implicits._
-    pt.as[(Long, Long, Long)].repartition(1).mapPartitions { it =>
+    pt.as[(Long, Long, Long)].coalesce(1).mapPartitions { it =>
       val arr = it.toArray
       val nxt = new scala.collection.mutable.LongMap[Long](arr.length * 2)
       val wgt = new scala.collection.mutable.LongMap[Long](arr.length * 2)

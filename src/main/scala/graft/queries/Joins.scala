@@ -162,9 +162,7 @@ object Joins {
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/documents.parquet"),
       tmp.resolve("documents.parquet"))
-    val schema = s.read.parquet(s"$dir/documents.parquet").schema
-    val stream = s.readStream.schema(schema).parquet(tmp.toString)
-    val pts = Geo.withGeo(stream).select("doc_id", "lon", "lat")
+    val pts = Geo.withGeo(QueryDef.streamSource(s, tmp.toString)).select("doc_id", "lon", "lat")
     val hits = graft.streaming.StreamOps.pipEnrich(pts)
     QueryDef.streamToMemory(hits, "stream_pip_out").groupBy(col("aoi_id"))
       .agg(count(lit(1)).as("n"), sum(col("doc_id")).as("id_sum"))
@@ -193,8 +191,7 @@ object Joins {
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/events.parquet"),
       tmp.resolve("events.parquet"))
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
-    def src() = s.readStream.schema(schema).parquet(tmp.toString)
+    def src() = QueryDef.streamSource(s, tmp.toString)
     // ts is TIMESTAMP_NTZ; session TZ is UTC so the cast matches epoch()
     val views = src().filter(col("event_type") === "view")
       .select(col("user_id"), col("event_id").as("view_id"),

@@ -35,6 +35,14 @@ object QueryDef {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
   }
 
+  /** A streaming parquet source over the files of directory `src`, one
+    * file per micro-batch (in modification order), its schema read from
+    * one footer ([[graft.meta.FileStats.schema]]) so no inference job
+    * runs. */
+  def streamSource(s: SparkSession, src: String): DataFrame =
+    s.readStream.schema(graft.meta.FileStats.schema(s, src))
+      .option("maxFilesPerTrigger", 1).parquet(src)
+
   /** Run the streaming query `writer` describes to the end of its input
     * (`AvailableNow`, drained, stopped even when it fails), with
     * `spark.sql.shuffle.partitions` at 4 for the length of the run and

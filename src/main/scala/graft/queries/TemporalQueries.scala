@@ -349,11 +349,8 @@ object TemporalQueries {
         .select(lit(-1L).as("user_id"),
           (col("ts") + expr("INTERVAL 401 DAYS")).as("ts"))
         .write.mode("append").parquet(src)
-      val schema = s.read.parquet(src).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
       val top = graft.streaming.StreamOps.windowTopK(
-        stream, "ts", "user_id", win = "1 hour", k = 3,
+        QueryDef.streamSource(s, src), "ts", "user_id", win = "1 hour", k = 3,
         watermark = "400 days")
       QueryDef.streamToMemory(top, "stream_topk_out").orderBy(col("ws"), col("rank"))
     }
@@ -429,11 +426,8 @@ object TemporalQueries {
         .select(lit("_sentinel").as("event_type"),
           (col("ts") + expr("INTERVAL 401 DAYS")).as("ts"))
         .write.mode("append").parquet(src)
-      val schema = s.read.parquet(src).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
       val rows = graft.streaming.StreamOps.streamCusum(
-        stream, "event_type", "ts", bucketSecs = 3600L,
+        QueryDef.streamSource(s, src), "event_type", "ts", bucketSecs = 3600L,
         drift = 5L, threshold = 15L, watermark = "400 days")
       QueryDef.streamToMemory(rows.toDF(), "stream_cusum_out")
         .filter(col("key") =!= "_sentinel")

@@ -210,10 +210,7 @@ object WebQueries {
       .select("url", "warc_ts", "text", "lang")
     pages.repartition(4).write.mode("overwrite").parquet(src)
     val root = QueryDef.recreateDir(SideTables.root("stream_upsert")).toString
-    val schema = s.read.parquet(src).schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(src)
-    val sink = graft.streaming.StreamOps.upsertSink(stream, root, "pages",
+    val sink = graft.streaming.StreamOps.upsertSink(QueryDef.streamSource(s, src), root, "pages",
       keyCols = Seq("url"),
       orderCols = Seq(col("warc_ts").desc, md5(col("text")).desc),
       queryName = "stream_upsert")
@@ -248,11 +245,8 @@ object WebQueries {
     val redelivered = pages.filter(xxhash64(col("url")) % 3 === 0)
     pages.unionByName(redelivered).repartition(5, col("url"))
       .write.mode("overwrite").parquet(src)
-    val schema = s.read.parquet(src).schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(src)
     val deduped = graft.streaming.StreamOps.replayDedup(
-        stream.withColumn("content_md5", md5(col("text"))),
+        QueryDef.streamSource(s, src).withColumn("content_md5", md5(col("text"))),
         "warc_ts", Seq("url", "warc_ts", "content_md5"),
         horizon = "3650 days")
     QueryDef.streamToMemory(deduped, "stream_dedup_out")

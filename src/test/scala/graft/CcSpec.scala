@@ -104,6 +104,35 @@ class CcSpec extends SparkSpec {
     assert(dense == got.toMap, "dense strategy diverges from tiled")
   }
 
+  test("mid gate: tiles label on the tiled path, the seam graph resolves in one task") {
+    import spark.implicits._
+    // the 41x29 lattice is above the gate, so the tiles label apart; its
+    // seam graph (a few hundred label pairs) is not, so DupClusters
+    // resolves it in one task. Tile 6 divides neither side.
+    val (w, h) = (41, 29)
+    val gate = w.toLong * h - 1
+    val (dz, cap) = (Some(20), 15L)
+    val cells = randomCells(17, w, h, 0.6)
+    val df = cells.toDF("gx", "gy", "v").repartition(5)
+    def run() = ConnectedComponents.label(df, Bounds(w, h), 6, dz, Some(cap))
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(3)).toMap
+    // the cap oracle: each BFS component cut, in cell-id order, into
+    // chunks of `cap` cells labeled by their minimum cell id
+    val want = oracle(cells, w, dz).groupBy(_._2).values.flatMap { comp =>
+      comp.keys.toSeq.sortBy { case (x, y) => y * w + x }.grouped(cap.toInt).flatMap { ch =>
+        val lbl = ch.map { case (x, y) => y * w + x }.min
+        ch.map(_ -> lbl)
+      }
+    }.toMap
+    val jobs = jobsPer(
+      "dense" -> (() => withDenseThreshold(Long.MaxValue)(assert(run() == want))),
+      "mid" -> (() => withDenseThreshold(gate)(assert(run() == want))),
+      "tiled" -> (() => withDenseThreshold(0)(assert(run() == want))))
+    // tiles cost jobs the one dense task does not; the seam graph's
+    // propagation rounds cost jobs its one task does not
+    assert(jobs("dense") < jobs("mid") && jobs("mid") < jobs("tiled"), s"$jobs")
+  }
+
   test("cap rank is two-stage: 12x-cap component, no single-partition cell sort") {
     import spark.implicits._
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}

@@ -101,4 +101,12 @@ class DistanceTransformSpec extends SparkSpec {
     assert(dense === dist)
     assert(dense === dijkstra(field, sources, 300L))
   }
+
+  test("the dense strategy runs no shuffle exchange") {
+    // the single task is entered with coalesce(1) over the pinned tables
+    val out = DistanceTransform.chamferWithin(toDf(field), srcDf(Set((1L, 5L))), 300L)
+    assert(out.count() == field.size.toLong)
+    val plan = out.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), s"dense transform shuffles:\n$plan")
+  }
 }

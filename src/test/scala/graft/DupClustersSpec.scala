@@ -38,6 +38,16 @@ class DupClustersSpec extends SparkSpec {
     assert(withDenseThreshold(0)(run(edges)) == expected) // distributed loop
   }
 
+  test("the dense strategy runs no shuffle exchange") {
+    import spark.implicits._
+    // the single task is entered with coalesce(1) over the pinned edges
+    val out = DupClusters.components(
+      Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("a", "b").repartition(9))
+    assert(out.count() == 5L)
+    val plan = out.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), s"dense components shuffles:\n$plan")
+  }
+
   test("long path converges fast (pointer jumping), exact labels") {
     // a 64-node path: neighbor-min alone needs 63 rounds; with the jump
     // step the budget of 12 is ample — failing this means the shortcut

@@ -297,4 +297,14 @@ class FlowSpec extends SparkSpec {
     // sinks resolve to themselves with weight 0 on both paths
     assert((0L until n).filter(_ % 17 == 0).forall(s => dense(s) == (s, 0L)))
   }
+
+  test("resolve: the dense strategy runs no shuffle exchange") {
+    // the single task is entered with coalesce(1) over the pinned table
+    val df = (0L until 50L).map(i => (i, i / 2, if (i < 2) 0L else 1L))
+      .toDF("id", "nid", "w").repartition(7)
+    val out = FlowBasins.resolve(df)
+    assert(out.count() == 50L)
+    val plan = out.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), s"dense resolve shuffles:\n$plan")
+  }
 }
