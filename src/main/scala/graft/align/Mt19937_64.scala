@@ -4,8 +4,10 @@ package graft.align
  * MT19937-64 (Matsumoto & Nishimura's 64-bit Mersenne Twister, public
  * algorithm), used for the alignment sample generator the way the
  * reference seeds std::mt19937_64(0) (pubgeo `src/align3d/align3d.cpp:119`).
- * Sampling must happen once on the driver and be broadcast — never
- * distributed RNG (SURVEY.md L3).
+ * The samples must come from ONE sequential stream in sid order, never
+ * a per-partition RNG (SURVEY.md L3): the staged search draws them on
+ * the driver, the dense search inside its one task, with the same draws
+ * either way.
  *
  * `nextDouble` maps a 64-bit draw to [0, 1) via the standard 53-bit
  * construction (x >> 11) * 2^-53 — this engine's frozen uniform spec.

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.align.Align3d
 import graft.core.{Geo, Tables}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** ALIGN3D as driver-visible queries: the geocoded doc points are the
@@ -13,11 +14,15 @@ import org.apache.spark.sql.functions._
   *   complete) — the L4 walk-until-valid cap, A9 median + robust RMS,
   *   and J2/J7 probe joins.
   *
-  * Both are bit-exactly oracle-checked: `stageAndStats` stages the
+  * Both are bit-exactly oracle-checked: `stageSides` stages the
   * reference and target DSMs and the seeded sample list as side tables
   * ([[SideTables.stage]], one write after another on the calling
   * thread, so each job carries that thread's job-local properties), and
-  * the DuckDB duals replay the stats with row_number + list_sort.
+  * the DuckDB duals replay the stats with row_number + list_sort over
+  * them. q_align_rms computes its table from those staged DSMs
+  * ([[Align3d.offsetStats]]); q_align_offset takes its row from
+  * [[Align3d.run]], which below the gate searches in one task of its
+  * own, so the dual checks that strategy against the staged one.
   */
 object AlignQueries {
 
@@ -74,13 +79,15 @@ object AlignQueries {
        |FROM d)""".stripMargin
   }
 
-  private def stageAndStats(s: org.apache.spark.sql.SparkSession, dir: String) = {
-    val (pts, tgt) = clouds(s, dir)
+  /** Stages the DSMs and samples of the two clouds as the duals' side
+    * tables; the caller unpersists the returned DSMs. */
+  private def stageSides(s: org.apache.spark.sql.SparkSession, pts: DataFrame,
+                         tgt: DataFrame): Align3d.Staged = {
     val st = Align3d.stage(s, pts, tgt, cfg)
     SideTables.stage(st.refDsm, s"$SideRoot/ref_dsm")
     SideTables.stage(st.tgtDsm, s"$SideRoot/tgt_dsm")
     SideTables.stage(st.samples, s"$SideRoot/samples")
-    (st, Align3d.offsetStats(st, cfg))
+    st
   }
 
   /** End-to-end result row — ALSO bit-exact now: the argmin with the
@@ -122,10 +129,10 @@ object AlignQueries {
          |  n AS n_valid
          |FROM sub""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val (st, stats) = stageAndStats(s, dir)
-      val rows = stats.collect()
+      val (pts, tgt) = clouds(s, dir)
+      val st = stageSides(s, pts, tgt)
       st.refDsm.unpersist(); st.tgtDsm.unpersist()
-      val res = Align3d.resultFromStats(rows, cfg)
+      val (res, _) = Align3d.run(s, pts, tgt, cfg)
       Seq((res.tx, res.ty, res.tz, res.rmsMeters, res.completeness, res.nValid))
         .toDF("tx", "ty", "tz", "rms_m", "completeness", "n_valid")
     }
@@ -135,10 +142,11 @@ object AlignQueries {
     "q_align_rms",
     s"""WITH ${statsCtes}
        |SELECT * FROM stats ORDER BY odx, ody""".stripMargin) { (s, dir) =>
-    val (st, stats) = stageAndStats(s, dir)
+    val (pts, tgt) = clouds(s, dir)
+    val st = stageSides(s, pts, tgt)
     // materialize the tiny stats table, then release the cached DSMs —
     // they must not stay pinned for the rest of the session
-    val out = stats.orderBy(col("odx"), col("ody")).localCheckpoint()
+    val out = Align3d.offsetStats(st, cfg).orderBy(col("odx"), col("ody")).localCheckpoint()
     st.refDsm.unpersist()
     st.tgtDsm.unpersist()
     out

@@ -202,11 +202,16 @@ class AlignSpec extends SparkSpec {
     }
   }
 
-  private def engineStats(st: Align3d.Staged, cfg: Align3d.Config) =
-    Align3d.offsetStats(st, cfg).collect().toSeq
-      .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getLong(3), r.getLong(4),
-        r.getDouble(5)))
-      .sortBy(r => (r._1, r._2))
+  private def rows(df: DataFrame) = df.collect().toSeq
+    .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getLong(3), r.getLong(4),
+      r.getDouble(5)))
+    .sortBy(r => (r._1, r._2))
+
+  /** [[Align3d.stats]] rows at the default gate (one task on these
+    * scenes) and under a forced gate (staged DSMs + tile kernel). */
+  private def bothStats(ref: DataFrame, tgt: DataFrame, cfg: Align3d.Config) =
+    (rows(Align3d.stats(spark, ref, tgt, cfg)),
+      withDenseThreshold(0)(rows(Align3d.stats(spark, ref, tgt, cfg))))
 
   test("prepGrid: one-task dense path == tiled path (fill + edge filter), void disc included") {
     val (_, tgt) = tiledScene(3.0, -2.0, 0.5)
@@ -234,6 +239,20 @@ class AlignSpec extends SparkSpec {
     } finally { st.refDsm.unpersist(); st.tgtDsm.unpersist() }
   }
 
+  test("job budget: Align3d.run below the dense gate is one search task") {
+    val (ref, tgt) = tiledScene(3.0, -2.0, 0.5)
+    val cfg = Align3d.Config(gsd = 1.0, maxT = 4.0, numSamples = 2000)
+    var (dense, forced) = (Option.empty[Align3d.Result], Option.empty[Align3d.Result])
+    val jobs = jobsPer("dense" -> (() => dense = Some(Align3d.run(spark, ref, tgt, cfg)._1)),
+      "forced" -> (() => forced = Some(withDenseThreshold(0)(Align3d.run(spark, ref, tgt, cfg)._1))))
+    // the grid-bounds aggregate and the one task; staging adds the
+    // overlap aggregate over the persisted DSMs, the probe join and the
+    // kernel's two shuffles
+    assert(jobs("dense") <= 3, s"Align3d.run ran ${jobs("dense")} jobs, budget 3")
+    assert(jobs("forced") > jobs("dense"), s"the forced side is not staged: $jobs")
+    assert(dense.isDefined && dense == forced)
+  }
+
   test("offsetStats == brute-force first-N reference across tiles (1 and 7 partitions)") {
     val (ref, tgt) = tiledScene(3.0, -2.0, 0.5)
     val cfg = Align3d.Config(gsd = 1.0, maxT = 4.0, numSamples = 2000)
@@ -246,12 +265,17 @@ class AlignSpec extends SparkSpec {
       val prev = spark.conf.get(key)
       try for (parts <- Seq("1", "7")) {
         spark.conf.set(key, parts)
-        assert(engineStats(st, cfg) == want, s"at $parts shuffle partitions")
+        // the tile kernel over the staged DSMs, then Align3d.stats at the
+        // default gate (one task) and at a forced gate (staged)
+        assert(rows(Align3d.offsetStats(st, cfg)) == want, s"at $parts shuffle partitions")
+        assert(bothStats(ref, tgt, cfg) == (want, want), s"at $parts shuffle partitions")
       } finally spark.conf.set(key, prev)
       // the schema the stats table has always had (the DuckDB dual reads it)
-      assert(Align3d.offsetStats(st, cfg).schema.map(f => f.name -> f.dataType.simpleString) ==
-        Seq("odx" -> "int", "ody" -> "int", "n" -> "bigint", "med" -> "bigint",
-          "rms" -> "bigint", "complete" -> "double"))
+      val schema = Seq("odx" -> "int", "ody" -> "int", "n" -> "bigint", "med" -> "bigint",
+        "rms" -> "bigint", "complete" -> "double")
+      def names(df: DataFrame) = df.schema.map(f => f.name -> f.dataType.simpleString)
+      assert(names(Align3d.offsetStats(st, cfg)) == schema)
+      assert(names(Align3d.stats(spark, ref, tgt, cfg)) == schema)
     } finally { st.refDsm.unpersist(); st.tgtDsm.unpersist() }
   }
 
@@ -263,19 +287,46 @@ class AlignSpec extends SparkSpec {
       val diffs = probeDiffs(st, cfg)
       val want = bruteStats(diffs, cfg.numSamples)
       assert(want.size == 441)
-      assert(engineStats(st, cfg) == want)
+      assert(rows(Align3d.offsetStats(st, cfg)) == want)
+      assert(bothStats(ref, tgt, cfg) == (want, want))
       // a cap one above the smallest valid-probe count over all 2000
-      // samples makes that (border) offset fail the gate
+      // staged samples makes that (border) offset fail the gate. Only the
+      // staged kernel can hold the sample list fixed while the cap moves:
+      // `stats` draws numSamples * sampleFactor samples, so its cap moves
+      // the sample list with it
       val low = diffs.map(_._2.length).min
       val failing = diffs.collect { case (o, d) if d.length == low => o }.toSet
       assert(failing.forall { case (dx, dy) => math.abs(dx) == 10 || math.abs(dy) == 10 },
         s"failing offsets $failing are not on the search border")
       val gated = cfg.copy(numSamples = low + 1)
-      val got = engineStats(st, gated)
+      val got = rows(Align3d.offsetStats(st, gated))
       assert(got == bruteStats(diffs, gated.numSamples))
       assert(got.size == 441 - failing.size)
       assert(got.forall(r => !failing.contains((r._1, r._2))))
     } finally { st.refDsm.unpersist(); st.tgtDsm.unpersist() }
+    // through `stats`: at sampleFactor 1 an offset passes only when all
+    // of its numSamples draws are valid, so 9 draws fail a band of the
+    // 441 offsets and pass the rest, on both strategies alike
+    val mixed = cfg.copy(numSamples = 9, sampleFactor = 1)
+    val sm = Align3d.stage(spark, ref, tgt, mixed)
+    val want = try bruteStats(probeDiffs(sm, mixed), mixed.numSamples)
+      finally { sm.refDsm.unpersist(); sm.tgtDsm.unpersist() }
+    assert(want.nonEmpty && want.size < 441, s"${want.size} of 441 offsets pass")
+    assert(bothStats(ref, tgt, mixed) == (want, want))
+  }
+
+  test("stats: no offset reaches numSamples on either path; run names the gate") {
+    val (ref, tgt) = tiledScene(3.0, -2.0, 0.5)
+    // 20000 draws, some in the target's void disc: no offset has 20000 valid probes
+    val cfg = Align3d.Config(gsd = 1.0, maxT = 4.0, numSamples = 20000, sampleFactor = 1)
+    val st = Align3d.stage(spark, ref, tgt, cfg)
+    val want = try bruteStats(probeDiffs(st, cfg), cfg.numSamples)
+      finally { st.refDsm.unpersist(); st.tgtDsm.unpersist() }
+    assert(want.isEmpty && bothStats(ref, tgt, cfg) == (want, want))
+    def message = intercept[IllegalArgumentException](Align3d.run(spark, ref, tgt, cfg)).getMessage
+    val dense = message
+    assert(dense.contains("no offset collected >= 20000 valid probes"), dense)
+    assert(withDenseThreshold(0)(message) == dense)
   }
 
   test("align at the reference-default Config recovers an injected shift") {
