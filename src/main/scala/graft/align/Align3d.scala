@@ -310,7 +310,6 @@ object Align3d {
     import spark.implicits._
     val m = radius(cfg)
     val t = SearchTile
-    require(m < t, s"search radius $m must be smaller than the tile size $t")
     val n = cfg.numSamples
     val maxTx = (st.grid.w - 1L) / t
     val maxTy = (st.grid.h - 1L) / t

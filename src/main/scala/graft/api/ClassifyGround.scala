@@ -53,7 +53,9 @@ object ClassifyGround {
     * set fits one node, and ~40 tiny Spark stages per iteration cost more
     * than the raster. The caller picks (`Shr3d.Products`); the loop's
     * fills and labelings gate on the same bounds, so they follow that
-    * choice. Both strategies are asserted equal in DtmSpec. */
+    * choice. Both strategies run the same seed + relaxation chain
+    * ([[relax]]), here once per tile-with-halo; they are asserted equal
+    * in DtmSpec. */
   def run(minGrid: DataFrame /* gx, gy, v */,
           solidDsm: DataFrame /* gx, gy, v — DSM with tree cells voided */,
           bounds: Bounds, cfg: Config): Result = {
@@ -68,23 +70,8 @@ object ClassifyGround {
     var converged = false
 
     for (k <- 0 until cfg.iterations if !converged) {
-      // W13 seeds over the evolving DTM
-      val seeds = TileStencil(dtm, Kernels.RefBoundaryGradient(dz, cfg.dhBins),
-        bounds, tile)
-      // W14 extension: dhBins relaxation rounds over (label << 17 | dtm)
-      val packed = dtm.join(seeds.select(col("gx"), col("gy"), lit(1).as("lbl")),
-          Seq("gx", "gy"), "left")
-        .select(col("gx"), col("gy"),
-          (coalesce(col("lbl"), lit(0)) * lit(131072) + col("v")).cast("int").as("v"))
-      val relaxed = (0 until cfg.dhBins).foldLeft(packed) { (df, _) =>
-        val marked = TileStencil(df, Kernels.RefExtendMark(dz), bounds, tile)
-        TileStencil(marked, Kernels.RefExtendResolve(dz), bounds, tile)
-          .localCheckpoint()
-      }
-      val objCells = relaxed
-        .filter(shiftrightunsigned(col("v").cast("long"), 17) === 1)
-        .select(col("gx"), col("gy"),
-          col("v").bitwiseAND(lit(0x1FFFF)).cast("int").as("v"))
+      // W13 seeds + W14 extension over the evolving DTM: one shuffle
+      val objCells = DenseGrid.tiles(Seq(dtm), bounds, tile, 4 * cfg.dhBins)(g => relax(g(0), cfg))
       // G2: dz-connected labels with the region cap
       val labeled = ConnectedComponents.label(objCells, bounds, tile,
         maxDz = Some(dz), maxCount = Some(cfg.maxCount))
@@ -130,6 +117,18 @@ object ClassifyGround {
     Result(dtmFinal, voidMask)
   }
 
+  /** The W13 seed pass, the (label << 17 | dtm) packing and `dhBins`
+    * W14 mark/resolve rounds over one DTM grid; returns the object cells
+    * with their DTM values. Total kernel radius 4 * dhBins. */
+  private def relax(dtm: DenseGrid, cfg: Config): DenseGrid = {
+    val seeds = dtm.stencil(Kernels.RefBoundaryGradient(cfg.dzRaw, cfg.dhBins))
+    var packed = dtm.mapCells((i, v) => (if (seeds.has(i)) 131072 else 0) + v)
+    for (_ <- 0 until cfg.dhBins)
+      packed = packed.stencil(Kernels.RefExtendMark(cfg.dzRaw))
+        .stencil(Kernels.RefExtendResolve(cfg.dzRaw))
+    packed.filter((_, v) => (v >>> 17) == 1).mapCells((_, v) => v & 0x1FFFF)
+  }
+
   // ---- dense single-task strategy --------------------------------------
 
   /** The full loop over one in-memory raster, with the SAME kernel
@@ -144,15 +143,8 @@ object ClassifyGround {
     var converged = false
     var prevMask = 0
     for (k <- 0 until cfg.iterations if !converged) {
-      val seeds = dtm.stencil(Kernels.RefBoundaryGradient(dz, cfg.dhBins))
-      var packed = dtm.mapCells((i, v) => (if (seeds.has(i)) 131072 else 0) + v)
-      for (_ <- 0 until cfg.dhBins) {
-        packed = packed.stencil(Kernels.RefExtendMark(dz))
-          .stencil(Kernels.RefExtendResolve(dz))
-      }
       // dz-connected objects, chunk-capped in cell-id order
-      val objCells = new DenseGrid(w, h)
-      packed.foreach((i, v) => if ((v >>> 17) == 1) objCells.set(i, v & 0x1FFFF))
+      val objCells = relax(dtm, cfg)
       val label = objCells.labels(Some(dz), Some(cfg.maxCount))
       // per-object bounding boxes, keyed by label (a lattice index)
       val bbox = new java.util.HashMap[Integer, Array[Int]]()

@@ -1,7 +1,7 @@
 package graft.api
 
 import graft.cc.{ConnectedComponents, ScanlineFill}
-import graft.stencil.{DenseGrid, Kernels, TileStencil}
+import graft.stencil.{DenseGrid, Kernels}
 import graft.stencil.TileStencil.Bounds
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -24,20 +24,17 @@ object GroundObjects {
       // 40000 = the cap at the standard 0.5 gsd
       maxCount: Long = 40000L)
 
-  /** Returns (gx, gy, label) for detected object cells. Grids within the
-    * strategy gate (`DenseGrid.fits`) run the whole seed + relaxation
-    * chain in ONE task; larger grids take the tiled stencil passes. Both
-    * paths are asserted equal in GroundSpec. */
+  /** Returns (gx, gy, label) for detected object cells. The seed +
+    * relaxation chain ([[relax]]) runs in ONE task within the strategy
+    * gate (`DenseGrid.fits`), else once per tile-with-halo; both are
+    * asserted equal in GroundSpec. */
   def detect(dsm: DataFrame, bounds: Bounds, cfg: Config = Config()): DataFrame = {
-    // pin the DSM once: it feeds the seed stencil, the label packing
-    // join (tiled path), and the scanline fill — its lineage is
-    // typically a full docs scan + grid aggregate
+    // pin the DSM once: it feeds the relax chain and the scanline fill —
+    // its lineage is typically a full docs scan + grid aggregate
     val dsmP = dsm.select(col("gx").cast("long"), col("gy").cast("long"),
       col("v").cast("int")).localCheckpoint(eager = true)
-    val objCells =
-      if (DenseGrid.fits(dsm.sparkSession, bounds))
-        relaxDense(dsmP, bounds, cfg)
-      else relaxTiled(dsmP, bounds, cfg)
+    val objCells = DenseGrid.chain(Seq(dsmP), bounds, cfg.tileSize,
+      2 * cfg.dh + 2 * cfg.extensionRounds)(g => relax(g(0), cfg))
     // G2 components constrained by dz, chunk-capped at maxCount cells
     // (the crop that bounds every downstream per-object task)
     // pinned once: the CCL pass (a full union-find labeling) feeds both
@@ -53,47 +50,15 @@ object GroundObjects {
     ScanlineFill(kept, dsmP, cfg.dzRaw)
   }
 
-  /** The distributed W13 + W14 chain: one stencil shuffle per kernel
-    * pass, each relaxation round checkpointed. */
-  private def relaxTiled(dsm: DataFrame, bounds: Bounds, cfg: Config): DataFrame = {
-    // W13 seeds
-    val seeds = TileStencil(dsm, Kernels.BoundaryGradient(cfg.dzRaw, cfg.dh),
-      bounds, cfg.tileSize)
-    // pack (label | dsm) and relax W14
-    val packed = dsm.join(seeds.select(col("gx"), col("gy"), lit(1).as("lbl")),
-        Seq("gx", "gy"), "left")
-      .select(col("gx"), col("gy"),
-        (coalesce(col("lbl"), lit(0)) * lit(131072) + col("v")).cast("int").as("v"))
-    val relaxed = (0 until cfg.extensionRounds).foldLeft(packed) { (df, _) =>
-      val marked = TileStencil(df, Kernels.ExtendMark(cfg.dzRaw), bounds, cfg.tileSize)
-      TileStencil(marked, Kernels.ExtendResolve(), bounds, cfg.tileSize)
-        .localCheckpoint()
-    }
-    relaxed
-      .filter(shiftrightunsigned(col("v").cast("long"), 17) === 1)
-      .select(col("gx"), col("gy"),
-        col("v").bitwiseAND(lit(0x1FFFF)).cast("int").as("v"))
-  }
-
-  /** Dense single-task strategy: the SAME kernel objects evaluated over
-    * the whole gate-bounded grid in one executor task (`DenseGrid`, with
-    * TileStencil's exact per-pass contract) — the seed pass, the packing,
-    * and every mark/resolve round — so the output equals the tiled chain
-    * for any tiling. One job instead of 7 stencil shuffles + 3
-    * checkpoints + the packing join. */
-  private def relaxDense(dsm: DataFrame, bounds: Bounds, cfg: Config): DataFrame = {
-    val seedK = Kernels.BoundaryGradient(cfg.dzRaw, cfg.dh)
-    val markK = Kernels.ExtendMark(cfg.dzRaw)
-    val resolveK = Kernels.ExtendResolve()
-    val rounds = cfg.extensionRounds
-    DenseGrid.grid(Seq(dsm), bounds) { g =>
-      val seeds = g(0).stencil(seedK)
-      var cur = g(0).mapCells((i, v) => (if (seeds.has(i)) 131072 else 0) + v)
-      for (_ <- 0 until rounds) cur = cur.stencil(markK).stencil(resolveK)
-      val out = new DenseGrid(cur.w, cur.h)
-      cur.foreach((i, v) => if ((v >>> 17) == 1) out.set(i, v & 0x1FFFF))
-      out
-    }
+  /** The W13 seed pass, the (label << 17 | dsm) packing and every W14
+    * mark/resolve round over one DSM grid; returns the object cells with
+    * their DSM values. Total kernel radius 2 * dh + 2 * extensionRounds. */
+  private def relax(dsm: DenseGrid, cfg: Config): DenseGrid = {
+    val seeds = dsm.stencil(Kernels.BoundaryGradient(cfg.dzRaw, cfg.dh))
+    var cur = dsm.mapCells((i, v) => (if (seeds.has(i)) 131072 else 0) + v)
+    for (_ <- 0 until cfg.extensionRounds)
+      cur = cur.stencil(Kernels.ExtendMark(cfg.dzRaw)).stencil(Kernels.ExtendResolve())
+    cur.filter((_, v) => (v >>> 17) == 1).mapCells((_, v) => v & 0x1FFFF)
   }
 
   /** G4 object accept/reject (pubgeo `shr3d.cpp:1037-1087`): per object,

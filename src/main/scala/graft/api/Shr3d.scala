@@ -30,9 +30,11 @@ import org.apache.spark.sql.functions._
  * then the result is pinned. The DSM and MIN
  * chains start from the points: `DenseGrid.accumulate` folds them into
  * the lattice in the same task, so no product below the gate runs a
- * gridding shuffle. Larger rasters take the tiled distributed path
- * (the `Gridding` aggregates, TileStencil passes, the distributed
- * pyramid and CCL); both are asserted equal in Shr3dSpec.
+ * gridding shuffle. Larger rasters take the tiled distributed path:
+ * the `Gridding` aggregates, the distributed pyramid and CCL, and each
+ * product's stencil chain as the SAME closure once per tile-with-halo
+ * (`DenseGrid.tiles`, one shuffle per chain); both are asserted equal in
+ * Shr3dSpec.
  */
 object Shr3d {
 
@@ -95,19 +97,17 @@ object Shr3d {
       else df.select(col("gx"), col("gy"),
         Quant.adjustScale(col("v"), stdFit, activeFit).cast("int").as("v"))
 
-    /** DSM at build scale: max-grid -> despike (quantile + well) -> fill. */
+    /** DSM at build scale: max-grid -> despike (quantile + well, radius
+      * 2) -> fill; the fill is fused into the dense task. */
     private lazy val dsmStd: DataFrame = {
       val (quantK, wellK) =
         (Kernels.QuantileFilter(1, 0.4, buildAglRaw), Kernels.WellFilter(buildAglRaw))
+      val despike = (g: IndexedSeq[DenseGrid]) => g(0).stencil(quantK).stencil(wellK)
       if (dense)
         DenseGrid.grid(Seq(DenseGrid.accumulate(gridded, bounds, math.max, splat = true)),
-          bounds)(_(0).stencil(quantK).stencil(wellK).fill(noSmoothing = false))
-          .localCheckpoint()
-      else {
-        val q = TileStencil(Gridding.dsm(gridded), quantK, bounds, cfg.tileSize)
-        val wl = TileStencil(q, wellK, bounds, cfg.tileSize)
-        FillVoids(wl, bounds, noSmoothing = false).localCheckpoint()
-      }
+          bounds)(despike(_).fill(noSmoothing = false)).localCheckpoint()
+      else FillVoids(DenseGrid.tiles(Seq(Gridding.dsm(gridded)), bounds, cfg.tileSize, 2)(despike),
+        bounds, noSmoothing = false).localCheckpoint()
     }
 
     /** DSM in the active quantization. */
@@ -166,15 +166,9 @@ object Shr3d {
       * the filter are "solid or adjacent to solid" (non-canopy). */
     lazy val dsm2: DataFrame = {
       val treeK = Kernels.TreeFilter(maxTreeRaw + 1, dzRaw + 1)
-      if (dense)
-        DenseGrid.grid(Seq(dsm, minGrid), bounds) { g =>
-          g(0).zip(g(1))((a, b) => math.max(0, a - b) + 1).stencil(treeK)
-        }.localCheckpoint()
-      else {
-        val varGrid = Gridding.zipSubClamp(dsm, minGrid)
-          .select(col("gx"), col("gy"), (col("v") + 1).cast("int").as("v"))
-        TileStencil(varGrid, treeK, bounds, cfg.tileSize).localCheckpoint()
-      }
+      DenseGrid.chain(Seq(dsm, minGrid), bounds, cfg.tileSize, 1) { g =>
+        g(0).zip(g(1))((a, b) => math.max(0, a - b) + 1).stencil(treeK)
+      }.localCheckpoint()
     }
 
     /** The reference region cap, maxCount = 10000/gsd² (shr3d.cpp:913). */
@@ -217,17 +211,16 @@ object Shr3d {
       case Some(prior) =>
         FillVoids(prior, bounds, noSmoothing = true, maxLevel = 2).localCheckpoint()
       case None =>
+        // mirror MIN's voids, then the median (radius 1); the fill is
+        // fused into the dense task
         val medK = Kernels.medianFilter(1, dzRaw)
+        val inputs = Seq(classifyGroundResult.dtm, min2)
+        val median = (g: IndexedSeq[DenseGrid]) => g(0).keepWhere(g(1)).stencil(medK)
         if (dense)
-          DenseGrid.grid(Seq(classifyGroundResult.dtm, min2), bounds) { g =>
-            g(0).keepWhere(g(1)).stencil(medK).fill(noSmoothing = true, maxLevel = 2)
-          }.localCheckpoint()
-        else {
-          val mirrored = classifyGroundResult.dtm
-            .join(min2.select("gx", "gy"), Seq("gx", "gy"), "left_semi")
-          val med = TileStencil(mirrored, medK, bounds, cfg.tileSize)
-          FillVoids(med, bounds, noSmoothing = true, maxLevel = 2).localCheckpoint()
-        }
+          DenseGrid.grid(inputs, bounds)(median(_).fill(noSmoothing = true, maxLevel = 2))
+            .localCheckpoint()
+        else FillVoids(DenseGrid.tiles(inputs, bounds, cfg.tileSize, 1)(median),
+          bounds, noSmoothing = true, maxLevel = 2).localCheckpoint()
     }
 
     final val ClsGround = 2
@@ -235,28 +228,16 @@ object Shr3d {
     final val ClsBuilding = 6
 
     /** W16 per-cell classification over the joined grids. */
-    lazy val classification: DataFrame =
-      if (dense) {
-        val (agl, bldg, tree, ground) = (aglRaw, ClsBuilding, ClsTree, ClsGround)
-        DenseGrid.grid(Seq(dsm, dtm, dsm2), bounds) { g =>
-          val (d, t, v2) = (g(0), g(1), g(2))
-          d.mapCells { (i, vd) =>
-            val above = vd - (if (t.has(i)) t(i) else vd) > agl
-            if (above && v2.has(i)) bldg else if (above) tree else ground
-          }
-        }.withColumnRenamed("v", "cls").localCheckpoint()
-      } else {
-        dsm.withColumnRenamed("v", "vDsm")
-          .join(dtm.select(col("gx"), col("gy"), col("v").as("vDtm")), Seq("gx", "gy"), "left")
-          .join(dsm2.select(col("gx"), col("gy"), col("v").as("vVar")), Seq("gx", "gy"), "left")
-          .withColumn("agl", col("vDsm") - coalesce(col("vDtm"), col("vDsm")))
-          .withColumn("cls",
-            when(col("agl") > aglRaw && col("vVar").isNotNull, lit(ClsBuilding))
-              .when(col("agl") > aglRaw, lit(ClsTree))
-              .otherwise(lit(ClsGround)))
-          .select(col("gx"), col("gy"), col("cls"))
-          .localCheckpoint()
-      }
+    lazy val classification: DataFrame = {
+      val (agl, bldg, tree, ground) = (aglRaw, ClsBuilding, ClsTree, ClsGround)
+      DenseGrid.chain(Seq(dsm, dtm, dsm2), bounds, cfg.tileSize, 0) { g =>
+        val (d, t, v2) = (g(0), g(1), g(2))
+        d.mapCells { (i, vd) =>
+          val above = vd - (if (t.has(i)) t(i) else vd) > agl
+          if (above && v2.has(i)) bldg else if (above) tree else ground
+        }
+      }.withColumnRenamed("v", "cls").localCheckpoint()
+    }
 
     /** Building labels via the full classifyNonGround order
       * (shr3d.cpp:1015-1174): building mask -> dz/2-constrained grouping

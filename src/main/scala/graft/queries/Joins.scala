@@ -158,11 +158,8 @@ object Joins {
        |SELECT aoi_id, count(*) AS n, CAST(sum(doc_id) AS BIGINT) AS id_sum FROM (
        |${Aoi.oracleHitsSql}
        |) hits GROUP BY aoi_id ORDER BY aoi_id""".stripMargin) { (s, dir) =>
-    val tmp = QueryDef.recreateDir(SideTables.root("stream_pip_src"))
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/documents.parquet"),
-      tmp.resolve("documents.parquet"))
-    val pts = Geo.withGeo(QueryDef.streamSource(s, tmp.toString)).select("doc_id", "lon", "lat")
+    val pts = Geo.withGeo(QueryDef.streamSource(s, QueryDef.streamInput(dir, "documents")))
+      .select("doc_id", "lon", "lat")
     val hits = graft.streaming.StreamOps.pipEnrich(pts)
     QueryDef.streamToMemory(hits, "stream_pip_out").groupBy(col("aoi_id"))
       .agg(count(lit(1)).as("n"), sum(col("doc_id")).as("id_sum"))
@@ -187,11 +184,8 @@ object Joins {
       |FROM v JOIN c ON c.user_id = v.user_id
       |  AND c.cts >= v.vts AND c.cts <= v.vts + INTERVAL 600 SECOND
       |ORDER BY 1, 2, 3""".stripMargin) { (s, dir) =>
-    val tmp = QueryDef.recreateDir(SideTables.root("stream_join_src"))
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      tmp.resolve("events.parquet"))
-    def src() = QueryDef.streamSource(s, tmp.toString)
+    val events = QueryDef.streamInput(dir, "events")
+    def src() = QueryDef.streamSource(s, events)
     // ts is TIMESTAMP_NTZ; session TZ is UTC so the cast matches epoch()
     val views = src().filter(col("event_type") === "view")
       .select(col("user_id"), col("event_id").as("view_id"),

@@ -43,6 +43,16 @@ object QueryDef {
     s.readStream.schema(graft.meta.FileStats.schema(s, src))
       .option("maxFilesPerTrigger", 1).parquet(src)
 
+  /** The input table `dir/<table>.parquet` copied alone into a fresh
+    * side directory, returned for [[streamSource]]: a stream over it is
+    * the table as one micro-batch. */
+  def streamInput(dir: String, table: String): String = {
+    val src = recreateDir(SideTables.root(s"stream_${table}_src"))
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/$table.parquet"),
+      src.resolve(s"$table.parquet"))
+    src.toString
+  }
+
   /** Run the streaming query `writer` describes to the end of its input
     * (`AvailableNow`, drained, stopped even when it fails), with
     * `spark.sql.shuffle.partitions` at 4 for the length of the run and

@@ -5,17 +5,19 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession
 import org.apache.spark.sql.functions._
 
 /**
- * One in-memory raster of a single executor task: the dense strategy of
- * every sub-gate raster operator (point accumulation, stencils, the
- * void-fill pyramid, CC labels, the G4 accept test), evaluated the way
- * the reference evaluates its memoized `getX()` products — one pass
- * over one image (`shr3d.h:153-172`) instead of one Spark job per
- * operator.
+ * One in-memory raster: the evaluator of every raster kernel (point
+ * accumulation, stencils, the void-fill pyramid, CC labels, the G4
+ * accept test), evaluated the way the reference evaluates its memoized
+ * `getX()` products — one pass over one image (`shr3d.h:153-172`)
+ * instead of one Spark job per operator.
  *
- * The grid is the `w x h` lattice of a sparse `(gx, gy, v)` cell table.
- * Occupancy is kept apart from the value, so a present `v = 0` cell is
- * still present (it fills and labels like any other cell), exactly as
- * the sparse table has it; an absent cell reads as 0 (void).
+ * The grid is a `w x h` window at `(x0, y0)` of the `frameW x frameH`
+ * lattice of a sparse `(gx, gy, v)` cell table; `new DenseGrid(w, h)` is
+ * the whole lattice. Occupancy is kept apart from the value, so a
+ * present `v = 0` cell is still present (it fills and labels like any
+ * other cell), exactly as the sparse table has it; an absent cell, and
+ * any cell outside the window, reads as 0 (void). Lattice indices `i`
+ * are window-local; kernels and [[cells]] see global coordinates.
  *
  * [[DenseGrid.task]] runs a function of several such grids as ONE task:
  * the input tables are tag-unioned and entered with `coalesce(1)`, so a
@@ -23,14 +25,34 @@ import org.apache.spark.sql.functions._
  * its own. [[DenseGrid.accumulate]] folds raw points into such a table
  * in one task of the same kind, so a chain that starts from points
  * (the SHR3D DSM and MIN grids, the ALIGN3D DSMs) is one task too.
- * Rasters above [[DenseGrid.threshold]] cells keep their tiled
- * distributed paths.
+ * Above [[DenseGrid.threshold]] cells, [[DenseGrid.tiles]] runs the SAME
+ * chain closure once per tile over a window of the tile core plus the
+ * chain's radius (the ghost-zone rule), in one shuffle; [[DenseGrid.chain]]
+ * picks between the two.
  */
-final class DenseGrid(val w: Int, val h: Int) {
+final class DenseGrid private (val x0: Int, val y0: Int, val w: Int, val h: Int,
+                               val frameW: Int, val frameH: Int) {
   require(w >= 0 && h >= 0 && w.toLong * h <= Int.MaxValue, s"raster ${w}x$h too large")
+  require(x0 >= 0 && y0 >= 0 && x0.toLong + w <= frameW && y0.toLong + h <= frameH,
+    s"window ${w}x$h at ($x0, $y0) outside the ${frameW}x$frameH raster")
   private val vals = new Array[Int](w * h)
   private val occ = new java.util.BitSet(w * h)
 
+  /** The whole `w x h` lattice. */
+  def this(w: Int, h: Int) = this(0, 0, w, h, w, h)
+
+  /** Whether the window is the whole lattice (what [[fill]] and
+    * [[labels]], the global operations, need). */
+  private def whole: Boolean = x0 == 0 && y0 == 0 && w == frameW && h == frameH
+
+  /** An empty grid on the same window. */
+  private def like(): DenseGrid = new DenseGrid(x0, y0, w, h, frameW, frameH)
+
+  private def sameWindow(other: DenseGrid): Unit =
+    require(other.x0 == x0 && other.y0 == y0 && other.w == w && other.h == h &&
+      other.frameW == frameW && other.frameH == frameH, "grids on different windows")
+
+  /** The window-local index of window coordinates `(x, y)`. */
   @inline def index(x: Int, y: Int): Int = y * w + x
   @inline def has(i: Int): Boolean = occ.get(i)
   /** The value at lattice index `i` (0 when absent). */
@@ -49,21 +71,29 @@ final class DenseGrid(val w: Int, val h: Int) {
   }
 
   def copy(): DenseGrid = {
-    val out = new DenseGrid(w, h)
+    val out = like()
     foreach(out.set)
     out
   }
 
   /** Every present cell with a new value (cells stay present, even at 0). */
   def mapCells(f: (Int, Int) => Int): DenseGrid = {
-    val out = new DenseGrid(w, h)
+    val out = like()
     foreach((i, v) => out.set(i, f(i, v)))
+    out
+  }
+
+  /** The cells for which `p(i, v)` holds. */
+  def filter(p: (Int, Int) => Boolean): DenseGrid = {
+    val out = like()
+    foreach((i, v) => if (p(i, v)) out.set(i, v))
     out
   }
 
   /** The cells also present in `other` (a semi-join). */
   def keepWhere(other: DenseGrid): DenseGrid = {
-    val out = new DenseGrid(w, h)
+    sameWindow(other)
+    val out = like()
     foreach((i, v) => if (other.has(i)) out.set(i, v))
     out
   }
@@ -78,18 +108,25 @@ final class DenseGrid(val w: Int, val h: Int) {
 
   /** `f(a, b)` on the cells present in both grids (the J1 zip). */
   def zip(other: DenseGrid)(f: (Int, Int) => Int): DenseGrid = {
-    val out = new DenseGrid(w, h)
+    sameWindow(other)
+    val out = like()
     foreach((i, v) => if (other.has(i)) out.set(i, f(v, other(i))))
     out
   }
 
-  /** One [[TileStencil]] pass with its exact contract: present cells are
-    * evaluated, `nv == 0` drops the cell, absent neighbors read as 0. */
+  /** One kernel pass, the [[TileStencil]] contract: present cells are
+    * evaluated, `nv == 0` drops the cell, absent neighbors read as 0.
+    * The kernel sees global coordinates and the frame's size, so its
+    * border tests keep their meaning in a window; a read outside the
+    * window is void. */
   def stencil(k: Kernel): DenseGrid = {
-    val out = new DenseGrid(w, h)
-    val get = (x: Int, y: Int) => vals(y * w + x)
+    val out = like()
+    val get = (x: Int, y: Int) => {
+      val lx = x - x0; val ly = y - y0
+      if (lx >= 0 && lx < w && ly >= 0 && ly < h) vals(ly * w + lx) else 0
+    }
     foreach { (i, _) =>
-      val nv = k(get, i % w, i / w, w, h)
+      val nv = k(get, x0 + i % w, y0 + i / w, frameW, frameH)
       if (nv != 0) out.set(i, nv)
     }
     out
@@ -100,6 +137,7 @@ final class DenseGrid(val w: Int, val h: Int) {
     * `maxLevel` allows, then fill every void top-down from the parent
     * level. Returns a new grid. */
   def fill(noSmoothing: Boolean, maxLevel: Int = 32): DenseGrid = {
+    require(whole, "fill needs the whole raster")
     var levels = List(this)
     var k = 0
     while (k < maxLevel && levels.head.w / 2 >= 1 && levels.head.h / 2 >= 1 &&
@@ -170,6 +208,7 @@ final class DenseGrid(val w: Int, val h: Int) {
     * its own minimum id — [[graft.cc.ConnectedComponents]]'s contract. */
   def labels(maxDz: Option[Int] = None, maxCount: Option[Long] = None,
              diag: Boolean = true): Array[Int] = {
+    require(whole, "labels need the whole raster")
     val parent = Array.fill(vals.length)(-1)
     foreach((i, _) => parent(i) = i)
     def find(i: Int): Int = {
@@ -215,10 +254,10 @@ final class DenseGrid(val w: Int, val h: Int) {
     out
   }
 
-  /** The present cells as `(gx, gy, v)` rows, in lattice order. */
+  /** The present cells as global `(gx, gy, v)` rows, in lattice order. */
   def cells: Iterator[DenseGrid.Cell] = {
     val b = Array.newBuilder[DenseGrid.Cell]
-    foreach((i, v) => b += DenseGrid.Cell((i % w).toLong, (i / w).toLong, v))
+    foreach((i, v) => b += DenseGrid.Cell((x0 + i % w).toLong, (y0 + i / w).toLong, v))
     b.result().iterator
   }
 }
@@ -262,6 +301,20 @@ object DenseGrid {
   def task[T](inputs: Seq[DataFrame], bounds: Bounds)
              (f: IndexedSeq[DenseGrid] => Iterator[T])(implicit enc: Encoder[T]): Dataset[T] = {
     val w = bounds.w; val h = bounds.h; val n = inputs.size
+    tagged(inputs)
+      .coalesce(1)
+      .mapPartitions { it =>
+        val grids = IndexedSeq.fill(n)(new DenseGrid(w, h))
+        it.foreach { c =>
+          inRaster(c, bounds)
+          grids(c.t).set(c.gy.toInt * w + c.gx.toInt, c.v)
+        }
+        f(grids)
+      }
+  }
+
+  /** The inputs as one `(t, gx, gy, v)` table, `t` the input's position. */
+  private def tagged(inputs: Seq[DataFrame]): Dataset[Tagged] =
     inputs.zipWithIndex
       .map { case (df, t) =>
         df.select(lit(t).as("t"), col("gx").cast("long"), col("gy").cast("long"),
@@ -269,16 +322,55 @@ object DenseGrid {
       }
       .reduce(_ unionByName _)
       .as(Encoders.product[Tagged])
-      .coalesce(1)
-      .mapPartitions { it =>
-        val grids = IndexedSeq.fill(n)(new DenseGrid(w, h))
-        it.foreach { c =>
-          require(c.gx >= 0 && c.gx < w && c.gy >= 0 && c.gy < h,
-            s"cell (${c.gx}, ${c.gy}) outside the ${w}x$h raster")
-          grids(c.t).set(c.gy.toInt * w + c.gx.toInt, c.v)
-        }
-        f(grids)
+
+  private def inRaster(c: Tagged, b: Bounds): Unit =
+    require(c.gx >= 0 && c.gx < b.w && c.gy >= 0 && c.gy < b.h,
+      s"cell (${c.gx}, ${c.gy}) outside the ${b.w}x${b.h} raster")
+
+  /** A local chain of total kernel radius `radius` at its strategy: one
+    * [[grid]] task within the gate ([[fits]]), else [[tiles]]. `f` may
+    * use only the per-cell operations and [[DenseGrid.stencil]], not the
+    * global [[DenseGrid.fill]] or [[DenseGrid.labels]]. */
+  def chain(inputs: Seq[DataFrame], bounds: Bounds, tileSize: Int, radius: Int)
+           (f: IndexedSeq[DenseGrid] => DenseGrid): DataFrame =
+    if (fits(inputs.head.sparkSession, bounds)) grid(inputs, bounds)(f)
+    else tiles(inputs, bounds, tileSize, radius)(f)
+
+  /** [[grid]]'s chain `f`, of total kernel radius `radius`, once per
+    * `tileSize` tile (the ghost-zone rule): every cell is replicated to
+    * each tile whose core lies within `radius` of it
+    * ([[TileStencil.haloTiles]]), one `groupByKey(tile)` fills one window
+    * per input — the tile core plus `radius` cells on every side,
+    * clipped to `bounds` — and the task emits the present core cells of
+    * `f`'s result. A kernel pass of radius r leaves the window correct r
+    * cells further in, so after the chain the core is exactly what the
+    * whole-grid closure gives it. One shuffle for the whole chain; the
+    * halo costs ~4 * radius / tileSize of the cells. A cell outside the
+    * `bounds` lattice is the error [[task]] raises. */
+  def tiles(inputs: Seq[DataFrame], bounds: Bounds, tileSize: Int, radius: Int)
+           (f: IndexedSeq[DenseGrid] => DenseGrid): DataFrame = {
+    val spark = inputs.head.sparkSession
+    import spark.implicits._
+    require(tileSize > 0 && radius >= 0, s"tile $tileSize, radius $radius")
+    val (w, h, t, r, n) = (bounds.w, bounds.h, tileSize, radius, inputs.size)
+    val maxTx = (w - 1L) / t; val maxTy = (h - 1L) / t
+    tagged(inputs)
+      .flatMap { c =>
+        inRaster(c, bounds)
+        TileStencil.haloTiles(c.gx, c.gy, r, t, maxTx, maxTy).map(k => (k, c))
       }
+      // keys are (tx << 32 | ty): collision-free for any lattice side below 2^31
+      .groupByKey(_._1)
+      .flatMapGroups { (key, it) =>
+        val tx = key >>> 32; val ty = key & 0xFFFFFFFFL
+        val x0 = math.max(0L, tx * t - r).toInt; val x1 = math.min(w.toLong, (tx + 1) * t + r).toInt
+        val y0 = math.max(0L, ty * t - r).toInt; val y1 = math.min(h.toLong, (ty + 1) * t + r).toInt
+        val grids = IndexedSeq.fill(n)(new DenseGrid(x0, y0, x1 - x0, y1 - y0, w, h))
+        it.foreach { case (_, c) =>
+          grids(c.t).set((c.gy.toInt - y0) * (x1 - x0) + (c.gx.toInt - x0), c.v)
+        }
+        f(grids).cells.filter(c => c.gx / t == tx && c.gy / t == ty)
+      }.toDF()
   }
 
   /** Folds quantized points `(bx, by, qz)` into a `(gx, gy, v)` table on

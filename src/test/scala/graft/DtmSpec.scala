@@ -107,6 +107,14 @@ class DtmSpec extends SparkSpec {
     assert(dense2 == tiled2)
   }
 
+  test("forced-tiled run: one relax shuffle per iteration, no packing join or per-round pins") {
+    val (w, h) = (44, 36)
+    val (minG, solid) = scene(w, h, seed = 51)
+    val jobs = jobsPer("tiled" -> (() =>
+      runEngine(minG, solid, w, h, 900, 1, 100000L, tile = 16, parts = 4)))
+    assert(jobs("tiled") <= 237, s"forced-tiled classifyGround ran ${jobs("tiled")} jobs")
+  }
+
   test("dtm identical at parallelism 2 vs 8") {
     val (w, h) = (40, 30)
     val (minG, solid) = scene(w, h, seed = 37)

@@ -74,6 +74,16 @@ class GroundSpec extends SparkSpec {
     assert(dense === tiled)
   }
 
+  test("forced-tiled detect: the seed + relaxation chain is one shuffle") {
+    import spark.implicits._
+    // tile 8 is the chain's radius 2 * dh + 2 * extensionRounds: the
+    // halo reaches the next tile but one
+    val dsm = boxDsm.toDF("gx", "gy", "v")
+    val jobs = jobsPer("tiled" -> (() => withDenseThreshold(0)(graft.api.GroundObjects
+      .detect(dsm, b, graft.api.GroundObjects.Config(tileSize = 8)).collect())))
+    assert(jobs("tiled") <= 53, s"forced-tiled detect ran ${jobs("tiled")} jobs")
+  }
+
   test("G4 gradient accept/reject drops low ridges, keeps real objects") {
     import spark.implicits._
     // object A: tall box (step 29000); object B: low ridge (step 800 < dz/2)

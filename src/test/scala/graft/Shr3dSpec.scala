@@ -275,4 +275,24 @@ class Shr3dSpec extends SparkSpec {
       assert(got(name) <= max, s"$name ran ${got(name)} jobs, budget $max (all: $got)")
     }
   }
+
+  test("forced-tiled job budget per product accessor (one shuffle per stencil chain)") {
+    val got = withDenseThreshold(0) {
+      val p = Shr3d.run(spark, scene, specCfg)
+      jobsPer(accessors(p).map { case (name, get) =>
+        name -> (() => { val df = get(); if (name == "outlines") df.count() })
+      }: _*)
+    }
+    info(accessors(products).map { case (name, _) => s"$name ${got(name)}" }.mkString(", "))
+    // upper bounds: dsm, dsm2, dtm and classification each run their
+    // stencil chain as one tiled shuffle. The pyramid- and CC-heavy
+    // products vary by a job or two from run to run, so theirs sit two
+    // above the highest count measured.
+    val budget = Map("dsm" -> 29, "minGrid" -> 29, "dsm2" -> 2, "min2" -> 20,
+      "classifyGround.dtm" -> 149, "classifyGround.voidMask" -> 0, "dtm" -> 5,
+      "classification" -> 2, "buildingLabels" -> 42, "outlines" -> 6)
+    budget.foreach { case (name, max) =>
+      assert(got(name) <= max, s"$name ran ${got(name)} jobs, budget $max (all: $got)")
+    }
+  }
 }

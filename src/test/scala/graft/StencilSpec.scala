@@ -1,7 +1,8 @@
 package graft
 
-import graft.stencil.{Kernels, TileStencil}
+import graft.stencil.{DenseGrid, Kernels, TileStencil}
 import graft.stencil.TileStencil.{Bounds, Kernel}
+import org.apache.spark.sql.DataFrame
 
 /** The tile/halo machinery must be execution-equivalent to a trivial
   * dense single-threaded evaluation of the same kernel — across tile
@@ -41,7 +42,9 @@ class StencilSpec extends SparkSpec {
     "laplacian" -> Kernels.Laplacian,
     "ruggedness" -> Kernels.Ruggedness)
 
-  for ((name, k) <- kernels; density <- Seq(0.25, 0.9); tile <- Seq(7, 16, 128)) {
+  // tiles 1 and 2 sit at or below the kernel radius: the halo reaches
+  // past the neighbouring tile
+  for ((name, k) <- kernels; density <- Seq(0.25, 0.9); tile <- Seq(1, 2, 7, 16, 128)) {
     test(s"$name == dense (density=$density, tile=$tile)") {
       import spark.implicits._
       val b = Bounds(48, 37)
@@ -111,4 +114,79 @@ class StencilSpec extends SparkSpec {
       .collect()
     assert(out.length == 16)
   }
+
+  // ---- DenseGrid.tiles: a whole chain per tile-with-halo -------------------
+
+  /** The closure over whole grids, evaluated in the driver. */
+  private def local(cells: Seq[Seq[(Long, Long, Int)]], b: Bounds,
+                    f: IndexedSeq[DenseGrid] => DenseGrid): Seq[(Long, Long, Int)] = {
+    val grids = cells.map { cs =>
+      val g = new DenseGrid(b.w, b.h)
+      cs.foreach { case (x, y, v) => g.set(g.index(x.toInt, y.toInt), v) }
+      g
+    }.toIndexedSeq
+    f(grids).cells.map(c => (c.gx, c.gy, c.v)).toSeq
+  }
+
+  private def rows(df: DataFrame): Seq[(Long, Long, Int)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
+
+  private val chainBounds = Bounds(29, 23)
+
+  private lazy val chainInputs: Seq[Seq[(Long, Long, Int)]] = {
+    val r = new scala.util.Random(5)
+    val a = (for (y <- 0 until chainBounds.h; x <- 0 until chainBounds.w if r.nextDouble() < 0.9)
+      yield (x.toLong, y.toLong,
+        if (x >= 9 && x <= 17 && y >= 6 && y <= 14) 30000 + r.nextInt(400)
+        else 1000 + r.nextInt(400))).toSeq
+    val b = randomCells(9, chainBounds.w, chainBounds.h, 0.9)
+      .map { case (x, y, v) => (x, y, if ((x + y) % 5 == 0) 0 else v) }
+    Seq(a, b)
+  }
+
+  for ((name, f, radius, n) <- Seq[(String, IndexedSeq[DenseGrid] => DenseGrid, Int, Int)](
+         ("seed -> mark -> resolve", StencilSpec.relaxChain, 4, 1),
+         ("two inputs: keepWhere, spike, horn, zip", StencilSpec.twoInputChain, 2, 2));
+       tile <- Seq(1, radius, radius + 1, 32)) {
+    test(s"tiles == the whole-grid closure: $name (tile=$tile)") {
+      import spark.implicits._
+      val inputs = chainInputs.take(n)
+      val want = local(inputs, chainBounds, f).sorted
+      assert(want.nonEmpty)
+      if (n == 2) assert(want.exists(_._3 == 0), "no present v = 0 cell reaches the output")
+      val dfs = inputs.map(_.toDF("gx", "gy", "v").repartition(3))
+      assert(rows(DenseGrid.tiles(dfs, chainBounds, tile, radius)(f)) == want)
+      assert(rows(DenseGrid.grid(dfs, chainBounds)(f)) == want)
+    }
+  }
+
+  test("tiles: a cell outside the bounds raises the dense task's error") {
+    import spark.implicits._
+    val cells = Seq((3L, 4L, 7), (29L, 2L, 9)).toDF("gx", "gy", "v")
+    val e = intercept[Exception](
+      DenseGrid.tiles(Seq(cells), chainBounds, 8, 1)(_(0).stencil(Kernels.SpikeFilter(10))).collect())
+    assert(e.getMessage.contains("cell (29, 2) outside the 29x23 raster"), e.getMessage)
+  }
+}
+
+/** The chain closures of the `tiles` specs: serializable functions, apart
+  * from the suite. */
+object StencilSpec {
+
+  /** The W13 seed -> pack -> mark/resolve -> unpack chain of the
+    * classifyGround loop (radius 4), with the border-sensitive
+    * reference kernels. */
+  private def relaxChain(g: IndexedSeq[DenseGrid]): DenseGrid = {
+    val seeds = g(0).stencil(Kernels.RefBoundaryGradient(5000, 1))
+    g(0).mapCells((i, v) => (if (seeds.has(i)) 131072 else 0) + v)
+      .stencil(Kernels.RefExtendMark(5000)).stencil(Kernels.RefExtendResolve(5000))
+      .filter((_, v) => (v >>> 17) == 1).mapCells((_, v) => v & 0x1FFFF)
+  }
+
+  /** Two inputs with different cell sets (radius 2): a semi-join, spike
+    * and Horn, then a zip that keeps the present `v = 0` cells of the
+    * second input. */
+  private def twoInputChain(g: IndexedSeq[DenseGrid]): DenseGrid =
+    g(0).keepWhere(g(1)).stencil(Kernels.SpikeFilter(20000)).stencil(Kernels.HornGradient)
+      .zip(g(1))((a, b) => if (b == 0) 0 else a + b / 8)
 }
